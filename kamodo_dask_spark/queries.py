@@ -8382,168 +8382,3 @@ def streaming_theta_sketch(spark: SparkSession, sf_dir: str) -> DataFrame:
         else None
     )
     return _theta_exact_with_check(ev, est)
-
-
-# ---------------------------------------------------------------------------
-# Driver correctness window — registration order is a grading surface
-# ---------------------------------------------------------------------------
-# The verification driver's oracle harness checks only the FIRST
-# ``DRIVER_WINDOW`` registered entries (observed empirically: CORRECTNESS_r01
-# checked positions 1-49, r02/r03 positions 1-50 — exactly file registration
-# order, truncated). Entries past the window NEVER get a driver row, however
-# green they are locally. The catalog therefore rotates: entries that have
-# been driver-green for several consecutive rounds are PARKED past the window
-# so entries without a driver row yet take their slots. The local parity
-# suite (tests/test_oracle_parity.py) still checks ALL entries every round,
-# parked or not.
-DRIVER_WINDOW = 50
-
-#: Entries that must stay in-window THIS round regardless of staleness —
-#: the hand-curated part of the rotation: operators or oracles whose
-#: machinery changed this round need a fresh driver row under the new
-#: spelling even if they were green last round. Everything else rotates
-#: mechanically (see _compute_parked). Round-6 pins: url_dedup +
-#: html_extract (normalization / entity-decode-order fixes changed both
-#: engines' oracles), interp_4d + interp_4d_corner (SHUFFLE_HASH gate;
-#: cell joins moved to integer axis-index keys), sessionization +
-#: streaming_interp (streaming checkpoint/conf optimization pass).
-PINNED_THIS_ROUND = [
-    # Round-14 pins: entries whose operator machinery changed this round.
-    # The r13 pins are cleared — all three went driver-green in
-    # CORRECTNESS_r13.
-    # kmv_set_ops was rewritten driver-side in r13 but its direct batch
-    # consumers never got a fresh driver row under the rewrite (advisor
-    # r13) — pin both:
-    "theta_sketch_setops",
-    "join_plan_sketch",
-    # planned_join/execute_join_strategy now dispatch through
-    # effective_join_strategy and the decision row gained
-    # effective_strategy (judge r13 "what's wrong" #2):
-    "planned_join_exec",
-    # CommittedState commit markers became epoch-suffixed with
-    # newest-epoch-wins reads (advisor r13 closed the marker-overwrite
-    # residual) — every entry that persists state through it needs a
-    # fresh driver row under the new marker layout:
-    "streaming_view_maintenance",
-    "streaming_dau_sketch",
-    "streaming_heavy_hitters",
-    "streaming_quantile_sketch",
-    "streaming_theta_sketch",
-]
-
-#: A parked entry's last driver-green row may be at most this many rounds
-#: behind the latest recorded round. Raised 2 -> 3 in round 7 (judge r6
-#: ask #3) when 96 entries hit the 50 x 2 = 100 ceiling; raised 3 -> 4 in
-#: round 9 (judge r8 ask #1, option b) with the same arithmetic: at 141
-#: entries and ~43 free rotation slots per round (window 50 minus ~5 new
-#: entries and ~2 pins), a full rotation cycle takes ceil(136/43) ~ 3.2
-#: rounds, so realized staleness legitimately reaches 3 — exactly the old
-#: bound, which would turn routine rotation into an import-time
-#: RuntimeError mid-round. Staleness-4 puts the ceiling at 50 x 4 = 200,
-#: leaving ~59 entries of genuine headroom while the mechanical
-#: most-stale-first rotation keeps realized staleness at 3 or less. The
-#: local parity suite still strict-checks ALL entries vs DuckDB every
-#: round regardless of parking, so a parked entry is never unverified —
-#: only its *driver* row ages.
-MAX_PARKED_STALENESS = 4
-
-
-def _latest_green_rounds(
-    artifact_dir: "str | None" = None,
-) -> "tuple[int | None, dict[str, int]]":
-    """(latest recorded round, name -> most recent driver-green round)
-    from the committed CORRECTNESS_r*.json artifacts. green = hash_match
-    and no err — a red row is not a check. ``artifact_dir`` overrides the
-    repo root so tests can simulate future rounds from a tmpdir."""
-    import glob
-    import json
-    import os
-    import re as _re
-
-    repo = artifact_dir or os.path.dirname(
-        os.path.dirname(os.path.abspath(__file__))
-    )
-    latest = None
-    best: dict[str, int] = {}
-    for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-        m = _re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        if not m:
-            continue
-        rnd = int(m.group(1))
-        try:
-            with open(path) as f:
-                doc = json.load(f)
-        except Exception:
-            continue
-        latest = rnd if latest is None else max(latest, rnd)
-        for name, row in doc.items():
-            if row.get("hash_match") is True and row.get("err") is None:
-                best[name] = max(best.get(name, -1), rnd)
-    return latest, best
-
-
-def _compute_parked(
-    order: "list[str]",
-    latest: "int | None",
-    green: "dict[str, int]",
-    pinned: "list[str]",
-) -> "list[str]":
-    """MECHANICAL rotation (replaces the per-round hand-maintained list,
-    judge r4/r5 rotation contract): the window must contain (a) every
-    entry with NO driver-green row yet and (b) this round's pins; the
-    remaining slots go to the MOST-STALE green entries first (ties by
-    registration order), so each parked entry returns before its last
-    green row ages past MAX_PARKED_STALENESS. Raises loudly if the
-    must-have set alone overflows the window or if anything would be
-    parked at the staleness ceiling — both mean the catalog outgrew the
-    window faster than it rotates and need a human decision."""
-    if latest is None:
-        return order[DRIVER_WINDOW:]  # fresh checkout: first N in-window
-    must = [n for n in order if n not in green or n in pinned]
-    if len(must) > DRIVER_WINDOW:
-        raise RuntimeError(
-            f"{len(must)} never-green + pinned entries exceed the "
-            f"{DRIVER_WINDOW}-row driver window — unpin some"
-        )
-    pos = {n: i for i, n in enumerate(order)}
-    rest = sorted(
-        (n for n in order if n not in must),
-        key=lambda n: (green[n], pos[n]),  # oldest green round first
-    )
-    n_slots = DRIVER_WINDOW - len(must)
-    parked = rest[n_slots:]
-    over = [n for n in parked if latest - green[n] >= MAX_PARKED_STALENESS]
-    if over:
-        raise RuntimeError(
-            f"rotation capacity exceeded: {over} would be parked at "
-            f"staleness >= {MAX_PARKED_STALENESS}"
-        )
-    return parked
-
-
-PARKED = _compute_parked(
-    list(QUERIES), *_latest_green_rounds(), PINNED_THIS_ROUND
-)
-
-
-def _apply_driver_window() -> None:
-    """Rebuild QUERIES/ORACLES with PARKED entries moved past the window,
-    preserving relative registration order otherwise. Runs once at import —
-    the driver reads ``dict(QUERIES)`` whose iteration order IS the
-    registration order it truncates."""
-    missing = [n for n in PARKED if n not in QUERIES]
-    if missing:
-        raise RuntimeError(f"PARKED names not registered: {missing}")
-    order = [n for n in QUERIES if n not in PARKED] + PARKED
-    if len(order) - len(PARKED) > DRIVER_WINDOW:
-        raise RuntimeError(
-            f"{len(order) - len(PARKED)} unparked entries exceed the "
-            f"{DRIVER_WINDOW}-row driver window — park more"
-        )
-    for d in (QUERIES, ORACLES):
-        items = [(n, d[n]) for n in order if n in d]
-        d.clear()
-        d.update(items)
-
-
-_apply_driver_window()

@@ -86,6 +86,12 @@ class SlabRefresher:
     ``df_from_dask`` + ``KamodoDask`` per wall-clock tick
     (docs/interpolator.md:25-31). On a cluster the rebuilt slab is a new
     broadcast variable; queries between refreshes keep the previous slab.
+
+    Assumes a single writer: this instance is the only process appending to
+    ``store_dir`` after it attaches. The retention cutoff's running time
+    max is read from the store once, then advanced only by the batches
+    this instance appends, so rows another writer adds later do not move
+    the cutoff.
     """
 
     def __init__(

@@ -1,73 +1,15 @@
-"""The driver's oracle harness truncates the catalog to its first
-``DRIVER_WINDOW`` entries (observed across CORRECTNESS_r01-r06). Since r6
-the rotation is computed mechanically at import (``_compute_parked``); these
-tests pin the POLICY — never-green and pinned entries always in-window,
-remaining slots most-stale-first, bounded staleness — rather than any one
-round's membership snapshot, so the suite stays green the moment the next
-round's CORRECTNESS artifact lands (judge r6 ask #1: the previous
-round-stamped membership list went red as soon as CORRECTNESS_r06.json was
-committed).
-"""
+"""Catalog checks that hold for whichever prefix of the catalog a driver
+runs: every entry carries a DuckDB oracle, and recently added entries stay
+registered."""
 
-import glob
-import json
-import os
-import re
-import shutil
+from kamodo_dask_spark.queries import ORACLES, QUERIES
 
-import pytest
-
-from kamodo_dask_spark.queries import (
-    DRIVER_WINDOW,
-    MAX_PARKED_STALENESS,
-    ORACLES,
-    PARKED,
-    PINNED_THIS_ROUND,
-    QUERIES,
-)
-
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _rounds() -> dict[int, dict]:
-    out = {}
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-        with open(path) as f:
-            out[int(m.group(1))] = json.load(f)
-    return out
-
-
-def _green_rounds() -> dict[str, int]:
-    """name -> most recent driver-green round (hash_match and no err)."""
-    best: dict[str, int] = {}
-    for rnd, doc in _rounds().items():
-        for name, row in doc.items():
-            if row.get("hash_match") is True and row.get("err") is None:
-                best[name] = max(best.get(name, -1), rnd)
-    return best
-
-
-def _never_driver_green() -> list[str]:
-    """Catalog entries with no GREEN row in any recorded artifact —
-    derived, not hardcoded, so entries added in any future round are
-    protected automatically. They MUST occupy positions < DRIVER_WINDOW."""
-    green = _green_rounds()
-    return [n for n in QUERIES if n not in green]
-
-
-#: Presence floor: entries awaiting their first driver row as of this
-#: round. The derived never-green list is computed FROM the catalog, so it
-#: cannot notice an entry being deleted outright — this hardcoded subset
-#: can. Prune names once they have a recorded green round.
+#: Presence floor for the most recent additions. The catalog-wide checks are
+#: computed from the catalog, so they cannot notice an entry being deleted
+#: outright; this hardcoded list can.
 PENDING_THIS_ROUND: list[str] = [
-    # all 4 round-10 additions went driver-green in CORRECTNESS_r10 and
-    # were pruned; round-11 additions land here as they register:
-    # the mergeable quantile sketch (judge r10 ask #3) and its
-    # streaming foreachBatch twin:
     "quantile_sketch",
     "streaming_quantile_sketch",
-    # incremental connected-components maintenance (judge r10 ask #4):
     "cc_incremental",
 ]
 
@@ -77,165 +19,8 @@ def test_pending_entries_still_registered():
     assert not missing, f"pending entries vanished from the catalog: {missing}"
 
 
-def test_never_checked_entries_inside_window():
-    order = list(QUERIES)
-    for name in _never_driver_green():
-        pos = order.index(name)
-        assert pos < DRIVER_WINDOW, (
-            f"{name} at position {pos} — outside the driver's "
-            f"{DRIVER_WINDOW}-row window, it will never get a driver row"
-        )
-
-
-def test_pinned_entries_inside_window():
-    window = set(list(QUERIES)[:DRIVER_WINDOW])
-    for n in PINNED_THIS_ROUND:
-        assert n in window, f"pinned entry {n} fell outside the window"
-
-
-def test_window_is_most_stale_first():
-    """Artifact-derived membership invariant (replaces the round-stamped
-    list): after the must-have set (never-green + pins), the remaining
-    window slots must go to the stalest green entries — no parked entry may
-    be strictly staler (by green round, then registration order) than an
-    in-window non-must entry. This is exactly ``_compute_parked``'s
-    contract, re-checked against the committed artifacts from scratch."""
-    green = _green_rounds()
-    if not green:  # fresh checkout without driver artifacts
-        return
-    order = list(QUERIES)
-    pos = {n: i for i, n in enumerate(order)}
-    must = {n for n in order if n not in green or n in PINNED_THIS_ROUND}
-    window = set(order[:DRIVER_WINDOW])
-    in_window_rest = [n for n in window if n not in must]
-    parked_green = [n for n in order[DRIVER_WINDOW:] if n in green]
-    if not in_window_rest or not parked_green:
-        return
-    worst_in = max((green[n], pos[n]) for n in in_window_rest)
-    best_out = min((green[n], pos[n]) for n in parked_green)
-    assert best_out >= worst_in, (
-        f"a parked entry (green r{best_out[0]}) is staler than an "
-        f"in-window one (green r{worst_in[0]}) — rotation is not "
-        f"most-stale-first"
-    )
-
-
-def test_only_parked_entries_outside_window():
-    """Anything past the window must be there deliberately (in PARKED)."""
-    order = list(QUERIES)
-    outside = order[DRIVER_WINDOW:]
-    stray = [n for n in outside if n not in PARKED]
-    assert not stray, f"entries evicted from the driver window unintentionally: {stray}"
-
-
-def test_parked_entries_recently_green():
-    """Only entries with a RECENT driver-green row may be parked: the most
-    recent green row must be within MAX_PARKED_STALENESS rounds of the
-    latest recorded round — the rotation contract that prevents any entry
-    drifting indefinitely without a fresh driver check."""
-    rounds = _rounds()
-    if not rounds:  # fresh checkout without driver artifacts
-        return
-    latest = max(rounds)
-    green = _green_rounds()
-    for name in PARKED:
-        assert name in green, f"parked {name} has no driver-green row at all"
-        staleness = latest - green[name]
-        assert staleness <= MAX_PARKED_STALENESS, (
-            f"parked {name}: last green round r{green[name]} is "
-            f"{staleness} rounds behind r{latest} — rotate it back in"
-        )
-
-
 def test_every_entry_has_an_oracle_or_is_known_weak():
     """Omitting an oracle downgrades the driver check to rows-only — keep
     the list of such entries explicit and empty."""
     no_oracle = [n for n in QUERIES if n not in ORACLES]
     assert no_oracle == [], f"entries without a DuckDB oracle: {no_oracle}"
-
-
-def test_compute_parked_policy():
-    """The mechanical rotation: never-green + pinned always in-window,
-    remaining slots most-stale-first, loud overflow failures."""
-    from kamodo_dask_spark import queries as q
-
-    order = [f"e{i}" for i in range(8)]
-    # window of 4 (simulate by temporarily shrinking)
-    old = q.DRIVER_WINDOW
-    q.DRIVER_WINDOW = 4
-    try:
-        # e0 never green; e1 pinned (green r5); others green r3..r5
-        green = {"e1": 5, "e2": 3, "e3": 4, "e4": 5, "e5": 3, "e6": 4, "e7": 5}
-        parked = q._compute_parked(order, 5, green, ["e1"])
-        window = [n for n in order if n not in parked]
-        assert "e0" in window and "e1" in window
-        # two free slots go to the stalest greens: e2 (r3) then e5 (r3)
-        assert window == ["e0", "e1", "e2", "e5"]
-        # fresh checkout: no artifacts -> first N stay in-window
-        assert q._compute_parked(order, None, {}, []) == order[4:]
-        # overflow: 5 never-green entries cannot fit a 4-row window
-        with pytest.raises(RuntimeError, match="exceed"):
-            q._compute_parked(order, 5, green={n: 5 for n in order[5:]}, pinned=[])
-        # staleness ceiling: parking an entry already at the bound raises
-        green_all = {n: 5 for n in order}
-        green_all["e7"] = 5 - q.MAX_PARKED_STALENESS
-        with pytest.raises(RuntimeError, match="staleness"):
-            q._compute_parked(order, 5, green_all, ["e0", "e1", "e2", "e3"])
-    finally:
-        q.DRIVER_WINDOW = old
-
-
-def test_rotation_survives_next_round_artifact(tmp_path):
-    """Judge r6 done-criterion: the suite must stay green immediately after
-    a hypothetical CORRECTNESS_r{N+1}.json is added. Simulate it: copy the
-    committed artifacts to a tmpdir, synthesize the next round's artifact
-    (current window entries all green), and verify the mechanical rotation
-    still produces a valid window with NO pins — no RuntimeError, policy
-    invariants hold, and the entries that were stalest become in-window."""
-    from kamodo_dask_spark import queries as q
-
-    for path in glob.glob(os.path.join(_REPO, "CORRECTNESS_r*.json")):
-        shutil.copy(path, tmp_path / os.path.basename(path))
-    latest, green = q._latest_green_rounds(str(tmp_path))
-    if latest is None:
-        return  # fresh checkout without driver artifacts
-    order = list(QUERIES)
-    synthetic = {
-        name: {"rows_match": True, "schema_match": True, "hash_match": True, "err": None}
-        for name in order[:DRIVER_WINDOW]
-    }
-    with open(tmp_path / f"CORRECTNESS_r{latest + 1:02d}.json", "w") as f:
-        json.dump(synthetic, f)
-    latest2, green2 = q._latest_green_rounds(str(tmp_path))
-    assert latest2 == latest + 1
-    # next round start: pins cleared, rotation recomputed — must not raise
-    parked = q._compute_parked(order, latest2, green2, [])
-    window = [n for n in order if n not in parked]
-    assert len(window) <= DRIVER_WINDOW
-    # everything parked is recent enough
-    for n in parked:
-        assert latest2 - green2[n] <= q.MAX_PARKED_STALENESS
-    # the entries the synthetic round did NOT check (currently parked,
-    # green at latest-1 or earlier) are the stalest and must rotate back in
-    stalest = [n for n in order if green2.get(n, latest2) < latest]
-    for n in stalest[: DRIVER_WINDOW - len([m for m in order if m not in green2])]:
-        assert n in window, f"stale entry {n} failed to rotate back in-window"
-
-
-def test_rotation_has_headroom_for_new_entries(tmp_path):
-    """Judge r8 ask #1 done-criterion (supersedes the r6 >= 10 bar):
-    >= 15 free slots — adding 15 dummy (never-green) entries must not trip
-    the capacity RuntimeError under the committed artifacts, with this
-    round's actual pins in place, and nothing the dummies displace may be
-    parked at the staleness ceiling (the second loud-failure mode)."""
-    from kamodo_dask_spark import queries as q
-
-    latest, green = q._latest_green_rounds()
-    if latest is None:
-        return
-    order = list(QUERIES) + [f"__dummy_{i}" for i in range(15)]
-    parked = q._compute_parked(order, latest, green, PINNED_THIS_ROUND)
-    window = [n for n in order if n not in parked]
-    for i in range(15):
-        assert f"__dummy_{i}" in window
-    assert len(window) <= q.DRIVER_WINDOW

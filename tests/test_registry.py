@@ -138,12 +138,13 @@ def test_plot_data_heatmap_and_line_payloads(registry):
         registry.plot_data("rho_ijkl", {"altitude": 1.0})
 
 
-def test_registry_cell_strategy_matches_broadcast(spark, grid_dir):
+def test_registry_cell_strategy_matches_broadcast(spark, grid_dir, tmp_path):
     """KamodoSpark(strategy='cell') — the repeated-query registry plan —
     answers point queries identically to the broadcast-kernel registry
     (including on a TIMESTAMP time axis, whose epoch-second doubles must
     agree bit-exactly between the driver-snapped lows and the Spark-cast
-    cell keys), and release() drops the persisted cell relation."""
+    cell keys), and release() drops the persisted cell relation. Points
+    come in-memory and as a Parquet-read frame with a shifted time column."""
     start = GRID_START + timedelta(minutes=5)
     end = GRID_START + timedelta(minutes=95)
     with pytest.warns(UserWarning):
@@ -156,12 +157,16 @@ def test_registry_cell_strategy_matches_broadcast(spark, grid_dir):
          (2, t_mid, 90.0, 0.0, 1.0)],  # oob h -> fill
         "point_id long, time double, lon double, lat double, h double",
     )
+    pts.withColumn("time", pts.time - 600.0).write.parquet(f"{tmp_path}/pts")
+    read = spark.read.parquet(f"{tmp_path}/pts")
+    file_pts = read.withColumn("time", read.time + 600.0)
     ref = KamodoSpark(grid_df)  # auto -> broadcast at this size
     cell = KamodoSpark(grid_df, strategy="cell")
     try:
         exp = {r["point_id"]: r["rho"] for r in ref["rho"](pts).collect()}
-        for _ in range(2):  # repeated queries reuse the persisted relation
-            got = {r["point_id"]: r["rho"] for r in cell["rho"](pts).collect()}
+        # repeated queries reuse the persisted relation
+        for frame in (pts, pts, file_pts, file_pts):
+            got = {r["point_id"]: r["rho"] for r in cell["rho"](frame).collect()}
             assert set(got) == set(exp)
             for k in exp:
                 assert got[k] == pytest.approx(exp[k], rel=1e-9, abs=1e-12)
