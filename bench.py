@@ -273,7 +273,7 @@ def interp_micro(spark, n_points: int = 200_000) -> float:
     import numpy as np
     import pandas as pd
 
-    from kamodo_dask_spark.grid.interpolate import interpolate_points_broadcast
+    from kamodo_dask_spark.grid.interpolate import interpolate_points
     from pyspark.sql import functions as F
 
     t_ax = np.arange(13) * 600.0
@@ -305,8 +305,9 @@ def interp_micro(spark, n_points: int = 200_000) -> float:
     axis_arrays = {"time": t_ax, "lon": lon_ax, "lat": lat_ax, "h": h_ax}
 
     def _body():
-        out = interpolate_points_broadcast(
-            grid, pts, ("time", "lon", "lat", "h"), ["rho"], axis_arrays=axis_arrays
+        out = interpolate_points(
+            grid, pts, ("time", "lon", "lat", "h"), ["rho"], axis_arrays=axis_arrays,
+            strategy="broadcast",
         )
         out.write.format("noop").mode("overwrite").save()
 
@@ -317,8 +318,10 @@ def grid_pipeline(spark) -> float:
     """The reference's canonical workload end-to-end: write 13 ten-minute
     grid files (2 h window, test_parquet_load.py:99-109), discover + load the
     slab with the snap-widened h filter, validate density, and interpolate a
-    50k-point batch through the relational corner join. Timed from discovery
-    to materialized results (file generation excluded)."""
+    50k-point batch with ``interpolate_points(strategy="auto")`` — at this
+    6,630-row slab (13 times × 17 lon × 10 lat × 3 snapped h levels) that
+    is the broadcast-slab kernel. Timed from discovery to materialized
+    results (file generation excluded)."""
     import shutil
     import tempfile
     from datetime import datetime, timedelta

@@ -21,7 +21,6 @@ from kamodo_dask_spark.grid.model import (
 )
 from kamodo_dask_spark.grid.interpolate import (
     interpolate_points,
-    interpolate_points_broadcast,
     gridded_eval,
     nlinear_interp,
 )
@@ -49,7 +48,6 @@ __all__ = [
     "snap_range",
     "validate_dense",
     "interpolate_points",
-    "interpolate_points_broadcast",
     "gridded_eval",
     "nlinear_interp",
     "KamodoSpark",

@@ -8,7 +8,6 @@ from kamodo_dask_spark.grid.model import (
 )
 from kamodo_dask_spark.grid.interpolate import (
     interpolate_points,
-    interpolate_points_broadcast,
     gridded_eval,
     nlinear_interp,
 )
@@ -23,7 +22,6 @@ __all__ = [
     "validate_dense",
     "assert_time_bounds",
     "interpolate_points",
-    "interpolate_points_broadcast",
     "gridded_eval",
     "nlinear_interp",
     "KamodoSpark",

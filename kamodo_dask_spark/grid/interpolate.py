@@ -3,26 +3,30 @@
 The reference's flagship capability: materialize a dense 4-D grid and expose
 each measure as a callable multilinear interpolator
 (``RegularGridInterpolator(axes, data, bounds_error=False, fill_value=0)``,
-kamodo_dask/kamodo_dask.py:335-341). Two Spark strategies:
+kamodo_dask/kamodo_dask.py:335-341). One entry point,
+:func:`interpolate_points`, runs one of three Spark strategies:
 
-1. :func:`interpolate_points` — **corner join** (relational, fully
-   distributed): snap each query coordinate to its bracketing grid values per
-   axis (J1), explode each point into its 2^d surrounding corners with
-   multilinear weights, equi-join the (possibly huge) grid on the corner
-   keys, and ``groupBy(point).sum(weight*value)`` (J2). The grid never leaves
-   the executors — this is the 100 TB path. AQE picks broadcast vs shuffle
-   join at runtime from the actual slab size.
+1. ``"broadcast"`` — **broadcast slab** (exact parity with the reference's
+   execution): collect the ordered slab to a dense ndarray, broadcast it,
+   and evaluate a vectorized NumPy kernel per Arrow batch of query points
+   via ``mapInPandas``. Zero exchanges in the plan.
 
-2. :func:`interpolate_points_broadcast` — **broadcast slab** (exact parity
-   with the reference's execution): collect the ordered slab to a dense
-   ndarray, broadcast it, and evaluate a vectorized NumPy kernel per Arrow
-   batch of query points via ``mapInPandas``. Right when the slab is small
-   (the reference's canonical 13×17×10×7 workload is ~15k rows) and the
-   point set is large.
+2. ``"corner"`` — **corner join** (relational, fully distributed): snap
+   each query coordinate to its bracketing grid values per axis (J1),
+   explode each point into its 2^d surrounding corners with multilinear
+   weights, equi-join the (possibly huge) grid on the corner keys, and
+   ``groupBy(point).sum(weight*value)`` (J2). The grid never leaves the
+   executors — this is the 100 TB path.
 
-Both return ``fill_value`` for out-of-bounds points without error
-(kamodo_dask.py:337-338) and treat grid-edge coordinates as in-bounds,
-matching SciPy semantics.
+3. ``"cell"`` — **cell relation**: reshape the dense slab into one row per
+   cell carrying its 2^d corner values, then one equi-join per query
+   (:func:`build_cell_relation`, :func:`interpolate_points_cells`).
+
+``"auto"`` picks broadcast for slabs of at most :data:`_FUSED_SLAB_MAX_ROWS`
+rows and the corner join above; :class:`~kamodo_dask_spark.grid.registry.
+KamodoSpark` resolves its strategy by the same rule. All return
+``fill_value`` for out-of-bounds points without error (kamodo_dask.py:337-338)
+and treat grid-edge coordinates as in-bounds, matching SciPy semantics.
 """
 
 from __future__ import annotations
@@ -51,14 +55,30 @@ _BROADCAST_GRID_MAX_ROWS = 1_000_000
 # picks the join (sort-merge spills; a hash build cannot).
 _HASH_BUILD_MAX_ROWS_PER_TASK = 2_000_000
 
-#: Below this dense-slab row bound, ``interpolate_points(strategy="auto")``
-#: skips the corner join entirely: collect the slab once, broadcast the dense
-#: ndarray, and evaluate the NumPy kernel map-side over the points — ZERO
-#: exchanges in the plan (no corner explode, no join, no group-by). A 200k-row
-#: slab of doubles is a few MB — cheaper to ship to every executor than to
-#: shuffle the (16× exploded) point stream. The reference's canonical
-#: 13×17×10×7 workload (~15k rows) is deep inside this regime.
-_FUSED_SLAB_MAX_ROWS = 200_000
+#: The strategies :func:`interpolate_points` and the registry accept.
+_STRATEGIES = ("auto", "broadcast", "corner", "cell")
+
+#: ``"auto"`` broadcasts dense slabs of at most this many rows (= product of
+#: axis cardinalities) and takes the corner join above: collect the slab
+#: once, broadcast the dense ndarray, and evaluate the NumPy kernel map-side
+#: over the points — ZERO exchanges in the plan (no corner explode, no join,
+#: no group-by). Measured at 4 cores with 200k query points (SCALE.md
+#: §Interpolation), a broadcast registry answered point queries 1.7-2.8×
+#: and gridded maps 1.2-1.9× faster than a corner registry at every slab
+#: size from 1.1M to 3.9M rows.
+_FUSED_SLAB_MAX_ROWS = 4_000_000
+
+
+def _resolve_strategy(strategy: str, dense_bound: int) -> str:
+    """The one strategy rule: validate ``strategy`` and resolve ``"auto"``
+    from the dense-slab row bound."""
+    if strategy not in _STRATEGIES:
+        raise ValueError(
+            f"strategy must be one of {'|'.join(_STRATEGIES)}, got {strategy!r}"
+        )
+    if strategy != "auto":
+        return strategy
+    return "broadcast" if dense_bound <= _FUSED_SLAB_MAX_ROWS else "corner"
 
 
 def nlinear_interp(
@@ -124,8 +144,8 @@ def coerce_axis_value(v) -> float:
     epoch seconds with driver-side (system-local naive) semantics — the
     same interpretation applied to ``collect()``-derived axis values, so a
     user coordinate and the axis array it is compared against always live
-    in the same frame. Shared by ``gridded_eval`` and the registry's
-    ``plot_data``."""
+    in the same frame. Shared by the gridded mesh (``_mesh_points``) and
+    the registry's ``plot_data``."""
     if isinstance(v, str):
         import pandas as pd
 
@@ -374,12 +394,16 @@ def interpolate_points(
 
     ``strategy``:
 
-    - ``"auto"`` (default): when the dense-slab row bound (∏ axis
-      cardinalities) is ≤ :data:`_FUSED_SLAB_MAX_ROWS`, collect + broadcast
-      the slab and evaluate the NumPy kernel map-side — a plan with ZERO
-      exchanges. Non-dense slabs (collect finds fewer rows than the bound)
-      fall back to the corner join, whose coverage accounting turns missing
-      corners into ``fill_value``. Large slabs always take the corner join.
+    - ``"auto"`` (default): ``"broadcast"`` when the dense-slab row bound
+      (∏ axis cardinalities) is ≤ :data:`_FUSED_SLAB_MAX_ROWS`, else
+      ``"corner"``. Non-dense slabs (collect finds fewer rows than the
+      bound) fall back to the corner join, whose coverage accounting turns
+      missing corners into ``fill_value``.
+    - ``"broadcast"``: ordered, cardinality-checked collect of the slab
+      (the explicit version of the reference's trusted reshape,
+      kamodo_dask.py:325,334), broadcast, and the NumPy kernel map-side
+      over Arrow batches of points — a plan with ZERO exchanges. Raises
+      ``ValueError`` when the grid is not dense.
     - ``"corner"``: force the relational corner join (J1 + J2) — snap, 2^d
       corner explode, equi-join, group-by. The grid never leaves the
       executors; this is the 100 TB path for one-shot queries and partial
@@ -398,20 +422,26 @@ def interpolate_points(
     measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
     arrays = axis_arrays or _axis_arrays(grid_df, axes)
     d = len(axes)
+    shape = [len(arrays[ax]) for ax in axes]
+    dense_bound = int(np.prod(shape))
 
-    if strategy not in ("auto", "corner", "cell"):
-        raise ValueError(f"strategy must be auto|corner|cell, got {strategy!r}")
-    if strategy == "cell":
+    resolved = _resolve_strategy(strategy, dense_bound)
+    if resolved == "cell":
         return interpolate_points_cells(
             grid_df, points_df, axes, measures, fill_value, arrays
         )
-    dense_bound = int(np.prod([len(arrays[ax]) for ax in axes]))
-    if strategy == "auto" and dense_bound <= _FUSED_SLAB_MAX_ROWS:
+    if resolved == "broadcast":
         collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
         if collected is not None:
             axis_list, slabs = collected
             return _fused_kernel_map(points_df, axes, measures, axis_list, slabs, fill_value)
-        # non-dense slab: the corner join's coverage accounting handles it
+        if strategy == "broadcast":
+            raise ValueError(
+                f"grid is not dense: {grid_df.count()} rows != {dense_bound} "
+                f"(= {' * '.join(map(str, shape))})"
+            )
+        # "auto" over a non-dense slab: the corner join's coverage
+        # accounting handles it
 
     point_cols = points_df.columns
     pts = _snap_columns(points_df, axes, arrays)
@@ -767,39 +797,44 @@ def interpolate_points_cells(
     return joined.select(*out_cols)
 
 
-def interpolate_points_broadcast(
-    grid_df: DataFrame,
-    points_df: DataFrame,
-    axes: tuple[str, ...] = DEFAULT_AXES,
-    measures: list[str] | None = None,
-    fill_value: float = 0.0,
-    axis_arrays: dict[str, np.ndarray] | None = None,
+def _mesh_points(
+    spark,
+    coords: dict[str, list | float],
+    axes: tuple[str, ...],
+    arrays: dict[str, np.ndarray],
 ) -> DataFrame:
-    """Broadcast-slab strategy: dense ndarray on every executor, NumPy kernel
-    over Arrow batches of points (I3a). Collect is ordered + cardinality
-    checked — the explicit version of the reference's trusted reshape
-    (kamodo_dask.py:325,334). Pass ``axis_arrays`` when the axes are already
-    known to skip the per-axis distinct jobs."""
-    measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
-    arrays = axis_arrays or _axis_arrays(grid_df, axes)
-    shape = tuple(len(arrays[ax]) for ax in axes)
-    expected = int(np.prod(shape))
+    """The per-axis meshgrid as a query-point relation, one column per axis.
 
-    collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
-    if collected is None:
-        n = grid_df.count()
-        raise ValueError(
-            f"grid is not dense: {n} rows != {expected} "
-            f"(= {' * '.join(map(str, shape))})"
-        )
-    axis_list, slabs = collected
-    # Delegate to the fused kernel mapper: it preserves the input point
-    # schema EXACTLY (timestamp axes convert to epoch seconds inside the
-    # kernel, session-tz-aware). The earlier local implementation cast
-    # timestamp point columns to double in the OUTPUT, so the same query
-    # returned different schemas depending on which strategy the registry's
-    # size threshold picked.
-    return _fused_kernel_map(points_df, axes, measures, axis_list, slabs, fill_value)
+    Unspecified axes default to the full grid axis; supplied axes may be a
+    scalar or list (datetime-likes coerce via :func:`coerce_axis_value`).
+    Built as ONE ``range(∏ sizes)`` decode (div/mod strides + literal-array
+    ``element_at``) — a single whole-stage-codegen projection that
+    parallelizes across the range, instead of a chain of one-row
+    ``crossJoin``s (k−1 BroadcastNestedLoopJoins, one partition, and a plan
+    the catalog's no-BNLJ sweep would reject)."""
+    per_axis: list[list[float]] = []
+    for ax in axes:
+        vals = coords.get(ax)
+        if vals is None:
+            vals_list = [float(v) for v in arrays[ax]]
+        elif np.isscalar(vals) or hasattr(vals, "timestamp"):
+            vals_list = [coerce_axis_value(vals)]
+        else:
+            vals_list = [coerce_axis_value(v) for v in vals]
+        per_axis.append(vals_list)
+
+    sizes = [len(v) for v in per_axis]
+    empty = [ax for ax, s in zip(axes, sizes) if s == 0]
+    if empty:
+        # a zero stride would be a bare ZeroDivisionError — name the axis
+        raise ValueError(f"empty coordinate list for axis {empty[0]!r}")
+    n_mesh = int(np.prod(sizes))
+    cols, stride = [], n_mesh
+    for ax, vals_list, size in zip(axes, per_axis, sizes):
+        stride //= size
+        idx = ((F.col("id") / stride).cast("long") % size + 1).cast("int")
+        cols.append(F.element_at(F.lit(vals_list), idx).alias(ax))
+    return spark.range(n_mesh).select(*cols)
 
 
 def gridded_eval(
@@ -815,55 +850,18 @@ def gridded_eval(
     ``var_ijkl(time=…, lon=…, lat=…, h=…)`` (kamodo_dask.py:343-348).
 
     Unspecified axes default to the full grid axis; supplied axes may be a
-    scalar or list. The query-point relation is the per-axis meshgrid,
-    built as ONE ``range(∏ sizes)`` decode (div/mod strides + literal-array
-    ``element_at``) — a single whole-stage-codegen projection that
-    parallelizes across the range, instead of a chain of one-row
-    ``crossJoin``s (k−1 BroadcastNestedLoopJoins, one partition, and a plan
-    the catalog's no-BNLJ sweep would reject). Then point interpolation.
-    Result stays a DataFrame: one row per mesh point.
+    scalar or list. The mesh (:func:`_mesh_points`) is interpolated by
+    :func:`interpolate_points`; the result stays a DataFrame with one row
+    per mesh point.
 
-    ``strategy`` is forwarded to :func:`interpolate_points` (auto | corner |
-    broadcast — and validated there, so typos raise instead of silently
-    running auto). Pass ``axis_arrays`` (e.g. the registry's cached arrays)
-    to skip re-running the distinct-axis aggregation on every call — on a
-    big grid that is a full-table job per invocation.
+    ``strategy`` is forwarded to :func:`interpolate_points` (auto |
+    broadcast | corner | cell — validated there, so typos raise instead of
+    silently running auto). Pass ``axis_arrays`` (e.g. the registry's
+    cached arrays) to skip re-running the distinct-axis aggregation on
+    every call — on a big grid that is a full-table job per invocation.
     """
-    coords = coords or {}
     arrays = axis_arrays or _axis_arrays(grid_df, axes)
-    spark = grid_df.sparkSession
-
-    coerce = coerce_axis_value
-
-    per_axis: list[list[float]] = []
-    for ax in axes:
-        vals = coords.get(ax)
-        if vals is None:
-            vals_list = [float(v) for v in arrays[ax]]
-        elif np.isscalar(vals) or hasattr(vals, "timestamp"):
-            vals_list = [coerce(vals)]
-        else:
-            vals_list = [coerce(v) for v in vals]
-        per_axis.append(vals_list)
-
-    sizes = [len(v) for v in per_axis]
-    empty = [ax for ax, s in zip(axes, sizes) if s == 0]
-    if empty:
-        # the old crossJoin builder returned a silent empty mesh; a zero
-        # stride here would be a bare ZeroDivisionError — name the axis
-        raise ValueError(f"empty coordinate list for axis {empty[0]!r}")
-    n_mesh = int(np.prod(sizes))
-    cols, stride = [], n_mesh
-    for ax, vals_list, size in zip(axes, per_axis, sizes):
-        stride //= size
-        idx = ((F.col("id") / stride).cast("long") % size + 1).cast("int")
-        cols.append(F.element_at(F.lit(vals_list), idx).alias(ax))
-    mesh = spark.range(n_mesh).select(*cols)
-
-    if strategy == "broadcast":
-        return interpolate_points_broadcast(
-            grid_df, mesh, axes, measures, fill_value, axis_arrays=arrays
-        )
+    mesh = _mesh_points(grid_df.sparkSession, coords or {}, axes, arrays)
     return interpolate_points(
         grid_df, mesh, axes, measures, fill_value, axis_arrays=arrays,
         strategy=strategy,

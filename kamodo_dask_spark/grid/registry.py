@@ -26,16 +26,12 @@ from kamodo_dask_spark.grid.model import (
 )
 from kamodo_dask_spark.grid.interpolate import (
     _axis_arrays,
+    _mesh_points,
+    _resolve_strategy,
     build_cell_relation,
-    gridded_eval,
     interpolate_points,
-    interpolate_points_broadcast,
     interpolate_points_cells,
 )
-
-#: Slabs at or below this many rows broadcast comfortably; larger slabs use
-#: the distributed corner join.
-BROADCAST_MAX_ROWS = 4_000_000
 
 
 class KamodoSpark(dict):
@@ -71,17 +67,15 @@ class KamodoSpark(dict):
         n_rows = 1
         for n in self.shape:
             n_rows *= n
-        if strategy == "auto":
-            strategy = "broadcast" if n_rows <= BROADCAST_MAX_ROWS else "corner"
-        self.strategy = strategy
+        self.strategy = _resolve_strategy(strategy, n_rows)
 
         # "cell" = the registry's REPEATED-query plan (SCALE.md): reshape
         # the slab into its cell relation ONCE at registration, persist it,
-        # and answer every point query with a single equi-join — no slab
-        # re-scan, no 2^d explode, per query. Built over all measures in
-        # one pass so k measures share the d window shuffles.
+        # and answer every query with a single equi-join — no slab re-scan,
+        # no 2^d explode, per query. Built over all measures in one pass so
+        # k measures share the d window shuffles.
         self._cells = None
-        if strategy == "cell":
+        if self.strategy == "cell":
             # build_cell_relation runs its own density aggregation even
             # though validate_dense just passed — NOT redundant: the
             # cardinality-product check cannot see a duplicated node
@@ -96,61 +90,69 @@ class KamodoSpark(dict):
             ).persist()
 
         for m in self.measures:
-            # bind `m` at definition time (default-arg binding) — the fix for
-            # the reference's late-binding closure bug.
-            def point_fn(points_df: DataFrame, _m: str = m) -> DataFrame:
-                if self.strategy == "broadcast":
-                    return interpolate_points_broadcast(
-                        self.df,
-                        points_df,
-                        self.axes,
-                        [_m],
-                        self.fill_value,
-                        axis_arrays=self._axis_arrays,
-                    )
-                if self.strategy == "cell":
-                    if self._cells is None:
-                        # loud use-after-release: without this the query
-                        # dies with an opaque NoneType AttributeError deep
-                        # in build_cell_relation
-                        raise RuntimeError(
-                            "this cell-strategy registry has been "
-                            "release()d — rebuild it (or hold the current "
-                            "refresher registry, not a stale reference)"
-                        )
-                    return interpolate_points_cells(
-                        None,
-                        points_df,
-                        self.axes,
-                        [_m],
-                        self.fill_value,
-                        axis_arrays=self._axis_arrays,
-                        cells=self._cells,
-                    )
-                return interpolate_points(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    [_m],
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
+            self._bind(m, [m], self.units[m])
 
-            def gridded_fn(_m: str = m, **coords) -> DataFrame:
-                return gridded_eval(
-                    self.df,
-                    coords,
-                    self.axes,
-                    [_m],
-                    self.fill_value,
-                    strategy="broadcast" if self.strategy == "broadcast" else "auto",
-                    axis_arrays=self._axis_arrays,
-                )
+    def _interpolate(self, points_df: DataFrame, measures: list[str]) -> DataFrame:
+        """Interpolate ``measures`` at ``points_df`` with the registry's
+        strategy — the one path every registered function answers through."""
+        if self.strategy != "cell":
+            return interpolate_points(
+                self.df,
+                points_df,
+                self.axes,
+                measures,
+                self.fill_value,
+                axis_arrays=self._axis_arrays,
+                strategy=self.strategy,
+            )
+        if self._cells is None:
+            # loud use-after-release: without this the query dies with an
+            # opaque NoneType AttributeError deep in build_cell_relation
+            raise RuntimeError(
+                "this cell-strategy registry has been release()d — rebuild "
+                "it (or hold the current refresher registry, not a stale "
+                "reference)"
+            )
+        return interpolate_points_cells(
+            None,
+            points_df,
+            self.axes,
+            measures,
+            self.fill_value,
+            axis_arrays=self._axis_arrays,
+            cells=self._cells,
+        )
 
-            point_fn.units = self.units[m]
-            gridded_fn.units = self.units[m]
-            self[m] = point_fn
-            self[f"{m}_ijkl"] = gridded_fn
+    def _bind(self, name: str, deps: list[str], units: str, expr: str | None = None) -> None:
+        """Register ``name`` (point) and ``name_ijkl`` (gridded) over the
+        measures ``deps``. With ``expr`` the functions project that SQL
+        expression over the interpolated measures; without it ``name`` is
+        the measure itself.
+
+        Each call binds its own ``deps`` — the fix for the reference's
+        late-binding closure bug, where every registered interpolator read
+        the loop's last measure."""
+
+        def project(out: DataFrame) -> DataFrame:
+            if expr is None:
+                return out
+            keep = [c for c in out.columns if c not in deps]
+            return out.select(*keep, F.expr(expr).alias(name))
+
+        def point_fn(points_df: DataFrame) -> DataFrame:
+            return project(self._interpolate(points_df, deps))
+
+        def gridded_fn(**coords) -> DataFrame:
+            mesh = _mesh_points(
+                self.df.sparkSession, coords, self.axes, self._axis_arrays
+            )
+            return project(self._interpolate(mesh, deps))
+
+        point_fn.units = gridded_fn.units = units
+        if expr is not None:
+            point_fn.expr = gridded_fn.expr = expr
+        self[name] = point_fn
+        self[f"{name}_ijkl"] = gridded_fn
 
     def release(self) -> None:
         """Release engine-held state (the persisted cell relation, when
@@ -173,9 +175,10 @@ class KamodoSpark(dict):
         ``expr`` references measure names as columns (Spark SQL spelling:
         ``sqrt(u*u + v*v)``, ``power(rho, 2)``). Evaluation is
         interpolate-then-compose: the point/gridded function interpolates
-        every referenced measure in ONE slab pass, then applies the
-        expression JVM-side — so ``reg['speed'](points)`` costs the same
-        plan as a single multi-measure interpolation plus a project.
+        every referenced measure in ONE pass of the registry's strategy,
+        then applies the expression JVM-side — so ``reg['speed'](points)``
+        costs the same plan as a single multi-measure interpolation plus a
+        project.
 
         ``name`` may carry units in the ``name[units]`` spelling; an explicit
         ``units=`` argument wins.
@@ -194,46 +197,8 @@ class KamodoSpark(dict):
                 f"(known: {self.measures})"
             )
 
-        def point_fn(points_df: DataFrame, _deps=tuple(deps), _expr=expr) -> DataFrame:
-            if self.strategy == "broadcast":
-                out = interpolate_points_broadcast(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    list(_deps),
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
-            else:
-                out = interpolate_points(
-                    self.df,
-                    points_df,
-                    self.axes,
-                    list(_deps),
-                    self.fill_value,
-                    axis_arrays=self._axis_arrays,
-                )
-            return out.select(*points_df.columns, F.expr(_expr).alias(name))
-
-        def gridded_fn(_deps=tuple(deps), _expr=expr, **coords) -> DataFrame:
-            out = gridded_eval(
-                self.df,
-                coords,
-                self.axes,
-                list(_deps),
-                self.fill_value,
-                strategy="broadcast" if self.strategy == "broadcast" else "auto",
-                axis_arrays=self._axis_arrays,
-            )
-            keep = [c for c in out.columns if c not in _deps]
-            return out.select(*keep, F.expr(_expr).alias(name))
-
-        point_fn.units = units
-        gridded_fn.units = units
-        point_fn.expr = gridded_fn.expr = expr
         self.units[name] = units
-        self[name] = point_fn
-        self[f"{name}_ijkl"] = gridded_fn
+        self._bind(name, deps, units, expr)
 
     def __setitem__(self, key, value):
         """Dict-style composition: assigning a STRING registers a derived

@@ -15,7 +15,6 @@ from pyspark.sql import functions as F, types as T
 
 from kamodo_dask_spark.grid.interpolate import (
     interpolate_points,
-    interpolate_points_broadcast,
     gridded_eval,
     nlinear_interp,
 )
@@ -172,7 +171,9 @@ def test_broadcast_matches_oracle(spark, grid_df):
     pts = query_points()
     got = {
         r["point_id"]: r["v"]
-        for r in interpolate_points_broadcast(grid_df, _points_df(spark), AXES, ["v"]).collect()
+        for r in interpolate_points(
+            grid_df, _points_df(spark), AXES, ["v"], strategy="broadcast"
+        ).collect()
     }
     exp = oracle(pts)
     for p, e in zip(pts, exp):
@@ -186,7 +187,7 @@ def test_fill_value_for_out_of_bounds(spark, grid_df):
     for fn in (
         interpolate_points,
         lambda *a, **kw: interpolate_points(*a, strategy="corner", **kw),
-        interpolate_points_broadcast,
+        lambda *a, **kw: interpolate_points(*a, strategy="broadcast", **kw),
     ):
         row = fn(grid_df, pts_df, AXES, ["v"], fill_value=-123.5).collect()[0]
         assert row["v"] == -123.5
@@ -197,7 +198,10 @@ def test_fill_value_for_out_of_bounds(spark, grid_df):
     [
         interpolate_points,
         lambda *a, **kw: interpolate_points(*a, strategy="corner", **kw),
-        interpolate_points_broadcast,
+        pytest.param(
+            lambda *a, **kw: interpolate_points(*a, strategy="broadcast", **kw),
+            id="broadcast",
+        ),
     ],
 )
 def test_nan_grid_values_filled_before_interp(spark, fn):

@@ -1964,10 +1964,7 @@ def test_interpolate_broadcast_preserves_timestamp_schema(spark):
     registry's size threshold silently flipped schemas."""
     from datetime import datetime
 
-    from kamodo_dask_spark.grid.interpolate import (
-        interpolate_points,
-        interpolate_points_broadcast,
-    )
+    from kamodo_dask_spark.grid.interpolate import interpolate_points
 
     import itertools
     rows = [
@@ -1978,7 +1975,7 @@ def test_interpolate_broadcast_preserves_timestamp_schema(spark):
     pts = spark.createDataFrame(
         [(datetime(2024, 1, 1, 0, 5), 0.5)], "time timestamp, x double"
     )
-    b = interpolate_points_broadcast(grid, pts, ("time", "x"), ["rho"])
+    b = interpolate_points(grid, pts, ("time", "x"), ["rho"], strategy="broadcast")
     c = interpolate_points(grid, pts, ("time", "x"), ["rho"], strategy="corner")
     assert dict(b.dtypes)["time"] == "timestamp"
     assert dict(b.dtypes) == dict(c.dtypes)

@@ -7,7 +7,9 @@ from datetime import timedelta
 import pytest
 
 from kamodo_dask_spark.grid.ingest import load_grid_range
+from kamodo_dask_spark.grid.interpolate import interpolate_points
 from kamodo_dask_spark.grid.registry import KamodoSpark
+from kamodo_dask_spark.plans.checks import executed_plan
 
 from tests.conftest import GRID_START, rho_fn, temp_fn
 
@@ -170,6 +172,22 @@ def test_registry_cell_strategy_matches_broadcast(spark, grid_dir, tmp_path):
             assert set(got) == set(exp)
             for k in exp:
                 assert got[k] == pytest.approx(exp[k], rel=1e-9, abs=1e-12)
+        # the gridded and derived functions answer through the same
+        # persisted relation, with the broadcast registry's values
+        ref["r2"] = cell["r2"] = "rho * 2"
+        queries = [
+            (lambda reg: reg["rho_ijkl"](time=t_mid, lat=0.0), ("lon", "h"), "rho"),
+            (lambda reg: reg["r2"](pts), ("point_id",), "r2"),
+            (lambda reg: reg["r2_ijkl"](time=t_mid, lat=0.0), ("lon", "h"), "r2"),
+        ]
+        for query, key, col in queries:
+            out = query(cell)
+            assert "InMemoryTableScan" in executed_plan(out)
+            got = {tuple(r[k] for k in key): r[col] for r in out.collect()}
+            want = {tuple(r[k] for k in key): r[col] for r in query(ref).collect()}
+            assert set(got) == set(want)
+            for k in want:
+                assert got[k] == pytest.approx(want[k], rel=1e-9, abs=1e-12)
     finally:
         cell.release()
     assert cell._cells is None
@@ -190,3 +208,65 @@ def test_cell_registry_use_after_release_raises_clearly(spark):
     reg.release()
     with pytest.raises(RuntimeError, match="release"):
         reg["rho"](pts)
+
+
+def _affine_grid(spark):
+    """3×3 (time, lon) grid of rho = time + 2·lon: bilinear interpolation
+    reproduces it exactly at any in-bounds point."""
+    rows = [
+        (float(t), float(x), t + 2.0 * x)
+        for t in (0.0, 1.0, 2.0)
+        for x in (0.0, 1.0, 2.0)
+    ]
+    return spark.createDataFrame(rows, "time double, lon double, rho double")
+
+
+def test_unknown_strategy_rejected(spark):
+    """A misspelled strategy raises and names the four allowed values, on
+    the registry and on interpolate_points alike."""
+    grid = _affine_grid(spark)
+    pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
+    allowed = r"auto\|broadcast\|corner\|cell"
+    with pytest.raises(ValueError, match=allowed):
+        KamodoSpark(grid, axes=("time", "lon"), strategy="cel")
+    with pytest.raises(ValueError, match=allowed):
+        interpolate_points(grid, pts, ("time", "lon"), ["rho"], strategy="cel")
+
+
+def _is_broadcast(plan):
+    return "MapInPandas" in plan and "Join" not in plan and "Exchange" not in plan
+
+
+def _is_corner(plan):
+    return "Generate explode" in plan and "Join" in plan and "InMemoryTableScan" not in plan
+
+
+def _is_cell(plan):
+    return "InMemoryTableScan" in plan and "Join" in plan and "Generate" not in plan
+
+
+@pytest.mark.parametrize(
+    "strategy, runs",
+    [("broadcast", _is_broadcast), ("corner", _is_corner), ("cell", _is_cell)],
+    ids=["broadcast", "corner", "cell"],
+)
+def test_every_registered_function_runs_the_registry_strategy(spark, strategy, runs):
+    """The strategy a registry reports is the one every function it
+    registered runs: the measure, its gridded form, a derived function and
+    the derived gridded form — even on a slab small enough that ``auto``
+    would broadcast."""
+    reg = KamodoSpark(_affine_grid(spark), axes=("time", "lon"), strategy=strategy)
+    try:
+        assert reg.strategy == strategy
+        reg["d"] = "rho * 2"
+        pts = spark.createDataFrame(
+            [(0, 0.5, 0.25), (1, 1.5, 2.0)], "point_id long, time double, lon double"
+        )
+        for name, scale in (("rho", 1.0), ("d", 2.0)):
+            for out in (reg[name](pts), reg[f"{name}_ijkl"](time=[0.5, 1.5])):
+                plan = executed_plan(out)
+                assert runs(plan), plan
+                for r in out.collect():
+                    assert r[name] == pytest.approx(scale * (r["time"] + 2.0 * r["lon"]))
+    finally:
+        reg.release()

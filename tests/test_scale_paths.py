@@ -56,6 +56,7 @@ def test_large_axis_uses_searchsorted_udf_and_matches_oracle(spark):
 def test_registry_corner_strategy(spark):
     """KamodoSpark with strategy='corner' answers identically to broadcast."""
     from kamodo_dask_spark.grid.registry import KamodoSpark
+    from kamodo_dask_spark.plans.checks import executed_plan
 
     rows = [
         (float(t), float(x), float(y), float(h), float(t + 2 * x + 3 * y + 4 * h))
@@ -69,13 +70,19 @@ def test_registry_corner_strategy(spark):
         [(0, 0.5, 0.25, 0.75, 0.5)],
         "point_id long, time double, lon double, lat double, h double",
     )
-    vals = {}
+    vals, plans = {}, {}
     for strategy in ("corner", "broadcast"):
         reg = KamodoSpark(grid, fill_value=0.0, strategy=strategy)
-        vals[strategy] = reg["v"](pts).collect()[0]["v"]
+        out = reg["v"](pts)
+        plans[strategy] = executed_plan(out)
+        vals[strategy] = out.collect()[0]["v"]
     expected = 0.5 + 2 * 0.25 + 3 * 0.75 + 4 * 0.5
     assert vals["corner"] == pytest.approx(expected, rel=1e-12)
     assert vals["broadcast"] == pytest.approx(expected, rel=1e-12)
+    # each registry runs the strategy it reports, even on a 16-row slab
+    assert "Join" in plans["corner"], plans["corner"]
+    assert "MapInPandas" in plans["broadcast"], plans["broadcast"]
+    assert "Exchange" not in plans["broadcast"], plans["broadcast"]
 
 
 def test_asof_tolerance(spark):
