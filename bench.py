@@ -149,17 +149,35 @@ SF01_BUDGETS = {
 REGRESSION_ABS_FLOOR_S = 0.75
 
 
-def _previous_record(sf) -> dict:
-    """The recorded bench result AT THE SAME SCALE FACTOR from
-    BENCH_LOCAL.json (timings across different SFs aren't comparable — a
-    dev run at sf0.01 must not flag 'regressions' vs the sf0.1 record):
-    ``{"queries": {...}, "calibration": {...}, "jobs": {...}}``, each empty
-    when no record exists at that scale."""
+def _previous_record(sf, cpus: int) -> dict:
+    """The recorded bench result AT THE SAME HOST SHAPE from
+    BENCH_LOCAL.json: the record at scale factor ``sf`` on ``cpus``
+    cores. Timings are comparable across neither: a dev run at sf0.01
+    must not flag 'regressions' vs the sf0.1 record, and a 4-core run
+    must not flag entries whose 8-core plan was simply more parallel.
+    A record without ``cpus`` predates the key and matches no host.
+    Says on stderr which record it compares against, or that none
+    matched. Returns ``{"queries": {...}, "calibration": {...},
+    "jobs": {...}}``, each empty when no record matches."""
     try:
         with open(os.path.join(_REPO, "BENCH_LOCAL.json")) as f:
             local = json.load(f).get(f"sf{sf}", {})
     except Exception:
         local = {}
+    if local.get("cpus") != cpus:
+        local = {}
+    if local:
+        print(
+            f"bench: comparing against BENCH_LOCAL.json sf{sf} "
+            f"(cpus={local.get('cpus')}, total {local.get('value')} s)",
+            file=sys.stderr,
+        )
+    else:
+        print(
+            f"bench: no BENCH_LOCAL.json record at sf={sf}, cpus={cpus}; "
+            "regression flags are off",
+            file=sys.stderr,
+        )
     return {
         "queries": local.get("queries", {}),
         "calibration": local.get("calibration", {}),
@@ -511,6 +529,9 @@ def run() -> dict:
     sf = sf_dir.rstrip("/").rsplit("sf", 1)[-1]
     spark = get_spark("kamodo-dask-spark-bench")
     spark.sparkContext.setLogLevel("ERROR")
+    # the core count the session really runs on (local[N] or the cluster's
+    # total): the host shape this run's record is keyed on
+    cpus = spark.sparkContext.defaultParallelism
 
     # Warmup (not counted): JVM/codegen, and the Python worker pool — several
     # catalog queries use Arrow-batched pandas stages, and cold CPython
@@ -530,7 +551,7 @@ def run() -> dict:
             yield pdf
 
     (
-        spark.range(0, 10_000, 1, int(os.environ.get("SPARK_GRAFT_CPUS", "32")))
+        spark.range(0, 10_000, 1, cpus)
         .mapInPandas(_ident, "id long")
         .write.format("noop")
         .mode("overwrite")
@@ -546,7 +567,9 @@ def run() -> dict:
     jobs: dict[str, int] = {}
     import gc
 
-    prev_rec = _previous_record(float(sf) if sf.replace(".", "").isdigit() else sf)
+    prev_rec = _previous_record(
+        float(sf) if sf.replace(".", "").isdigit() else sf, cpus
+    )
     prev = prev_rec["queries"]
     tracker = spark.sparkContext.statusTracker()
 
@@ -678,6 +701,7 @@ def run() -> dict:
         # BENCH_LOCAL.json only; dropped from the one-line summary.
         "jobs": jobs,
         "sf": float(sf) if sf.replace(".", "").isdigit() else sf,
+        "cpus": cpus,
     }
     # host-speed forensics: absolute walls have drifted ~1.4-2x between
     # runner environments with NO code diff (r4 line_dedup, r5 control

@@ -934,12 +934,7 @@ def _cc_star(
     Convergence is detected DIRECTLY — the iterate is a star forest iff
     no node both points and is pointed at, and no node points at two
     distinct targets (a big→small functional graph whose sinks are
-    never sources has depth 1). The same aggregation also returns the
-    iterate's edge-row count, which drives the per-round
-    adaptive-vs-static execution choice (r15 — see the inline comment:
-    rounds whose measured input is below the AQE-skew-split floor run
-    with AQE scoped off, collapsing ~6 driver-sequential stage-jobs per
-    round into one). That is ONE partial-combined
+    never sources has depth 1). That is ONE partial-combined
     aggregation job per iteration over the checkpointed iterate —
     cheaper than the textbook set-equality check (which needs a
     subtract plus a confirming extra iteration), and each half-round
@@ -950,11 +945,11 @@ def _cc_star(
     a child is larger than its root). Per-iteration cost: ONE job — the
     iterate is marked for local checkpoint non-eagerly and the
     star-forest check's aggregation is the action that materializes it
-    (2 aggs + 2 joins + the check pipelined; judge r10 ask #6 — the job
-    count is what dominates wall-clock on dense dup graphs, SCALE.md
-    round-10 probe: the sched_job_s floor, not data). Superseded
-    iterates and the ``base`` copy free their storage blocks as soon as
-    nothing can re-read them (advisor r10); the converged iterate and
+    (2 aggs + 2 joins + the check pipelined; the job count is what
+    dominates wall-clock on dense dup graphs, SCALE.md round-10 probe:
+    the sched_job_s floor, not data). Superseded iterates and the
+    ``base`` copy free their storage blocks as soon as nothing can
+    re-read them; the converged iterate and
     the vertex universe stay persisted — they are the returned plan.
     """
     # Materialize the CALLER'S pair relation exactly once: both the edge
@@ -962,17 +957,13 @@ def _cc_star(
     # typically the expensive part (dedup_clusters feeds the whole
     # MinHash-LSH candidate pipeline in here — recomputing it per
     # derivation tripled the entry's wall before this checkpoint).
-    from kamodo_dask_spark.session import static_plan_ctx
-
     spark = pairs.sparkSession
     base, base_blocks = _tracked_local_checkpoint(
         pairs.select(F.col(src).alias("p"), F.col(dst).alias("q"))
     )
     # eager=False: the |e0| count below is the action that materializes
-    # it — the SAME one pre-loop job the eager form paid, but it now
-    # also returns the edge count, which (a) answers the old dedicated
-    # ``limit(1).count()`` emptiness probe (one fewer blocking job per
-    # CC call) and (b) seeds the adaptive/static round decision (r15).
+    # it — the same one pre-loop job the eager form paid, and its result
+    # doubles as the emptiness probe.
     e0, edge_blocks = _tracked_local_checkpoint(
         base.select(
             F.greatest(F.col("p"), F.col("q")).alias("a"),
@@ -992,41 +983,15 @@ def _cc_star(
     )
     n_edges = e0.count()
     # e0 and vertices are materialized — base's blocks (a full copy of
-    # the caller's pair relation) have no further reader (advisor r10)
+    # the caller's pair relation) have no further reader
     _unpersist_blocks(spark, base_blocks)
     edges = e0
     node_t = e0.schema["b"].dataType
 
-    # Adaptive-vs-static round execution (r15, judge r14 ask #4): a
-    # star round is a FIXED plan shape — two min-aggregations + two
-    # |E|-keyed equi-joins + a distinct + the convergence check — and
-    # AQE's contribution to it is one driver-sequential stage-job per
-    # exchange (~6 per round; the driver probe measured 66 of
-    # cc_incremental's 67 jobs as such stage-jobs on a delta-sized
-    # graph). AQE's genuine value here is skew-splitting a hub node's
-    # join partition, which by its own thresholds
-    # (skewedPartitionThresholdInBytes, 256 MB default) CANNOT fire
-    # once the whole iterate is below the skew floor (the
-    # ``static_plan_ctx`` default, 4M narrow rows ≲ 128 MB) — so
-    # rounds whose measured input is under the cutoff run with AQE
-    # scoped OFF (one job per round instead of ~6), and data-sized
-    # rounds keep AQE and its skew protection. The iterate's row count
-    # rides the convergence-check aggregation for free, so the decision
-    # re-arms every round as the contraction shrinks the graph; the
-    # cutoff is env-tunable for cluster shapes
-    # (``session.static_plan_ctx`` — the shared size-adaptive rule).
-    def _round_ctx(n_rows: int):
-        return static_plan_ctx(
-            spark, n_rows, env="SPARK_GRAFT_CC_STATIC_EDGE_ROWS"
-        )
-
-    def _star_forest_check(rel: DataFrame) -> "tuple[bool, int]":
-        """One aggregation job answering BOTH loop controls: is the
-        iterate a star forest (no node points at >1 distinct target or
-        both points and is pointed at), and how many edge rows does it
-        hold (each rel row contributes exactly one non-NULL ``t`` under
-        ``n = a``, so ``sum(count(t))`` = |rel| — the next round's
-        adaptive/static decision input)."""
+    def _star_forest_check(rel: DataFrame) -> bool:
+        """One aggregation job: is the iterate a star forest (no node
+        points at >1 distinct target or both points and is pointed
+        at)."""
         row = (
             rel.select(F.col("a").alias("n"), F.col("b").alias("t"))
             .unionByName(
@@ -1038,7 +1003,6 @@ def _cc_star(
             .agg(
                 F.count_distinct("t").alias("nt"),  # null-excluding
                 F.max(F.col("t").isNull()).alias("is_target"),
-                F.count("t").alias("_o"),
             )
             .agg(
                 F.sum(
@@ -1048,11 +1012,10 @@ def _cc_star(
                         1,
                     )
                 ).alias("_bad"),
-                F.sum("_o").alias("_edges"),
             )
             .first()
         )
-        return int(row["_bad"] or 0) == 0, int(row["_edges"] or 0)
+        return int(row["_bad"] or 0) == 0
 
     if n_edges == 0:
         # only self-pairs (or empty): every vertex is its own root
@@ -1078,8 +1041,8 @@ def _cc_star(
         joined = large.join(smins, "a")
         # eager=False: the star-forest check below is the action that
         # materializes the checkpoint — ONE job per iteration where the
-        # eager form ran two (judge r10 ask #6: at ~16 rounds the extra
-        # job was a pure sched_job_s floor on dedup_clusters' wall)
+        # eager form ran two (at ~16 rounds the extra job was a pure
+        # sched_job_s floor on dedup_clusters' wall)
         stepped, new_blocks = _tracked_local_checkpoint(
             joined.select(F.col("a"), F.col("m").alias("b"))
             .unionByName(
@@ -1090,8 +1053,7 @@ def _cc_star(
             .distinct(),
             eager=False,
         )
-        with _round_ctx(n_edges):
-            converged, n_edges = _star_forest_check(stepped)
+        converged = _star_forest_check(stepped)
         edges = stepped
         # previous iterate superseded; the current one must KEEP its
         # blocks — converged, it is part of the returned plan

@@ -21,9 +21,9 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-#: Compact the per-round checkpointed layer lists every this-many rounds
-#: (judge r14 "what's wrong" #3): the visited/distance view is a union
-#: over all accumulated layers, so without compaction the per-round plan
+#: Compact the per-round checkpointed layer lists every this-many rounds:
+#: the visited/distance view is a union over all accumulated layers, so
+#: without compaction the per-round plan
 #: (and, for Bellman-Ford, the unioned row count) grows LINEARLY in the
 #: round count — fine at bounded k, quadratic-total-cost at hundreds of
 #: rounds (deep SSSP). Folding the layers into ONE checkpointed relation
@@ -63,47 +63,30 @@ def pagerank(
     to the node relation to re-admit zero-in-degree nodes; the dangling
     mass rides INSIDE the iteration's dataflow as a 1-row aggregate
     broadcast back through a constant-key equi-join (BroadcastHashJoin —
-    an equi condition, never the banned nested-loop cross; r10: this
-    replaced a per-round driver ``first()``. Local-mode job count is
-    unchanged — AQE materializes the broadcast stage as its own job —
-    but the per-round DRIVER-BLOCKING sync is gone, which is the term
-    that grows with scheduler latency on a real cluster). Per-iteration
-    rounding pins the trajectory cross-engine. Rank state is one row
-    per node, never materialized driver-side.
+    an equi condition, never the banned nested-loop cross; it replaces a
+    per-round driver ``first()``, the term that grows with scheduler
+    latency on a real cluster). Per-iteration rounding pins the
+    trajectory cross-engine. Rank state is one row per node, never
+    materialized driver-side.
 
     Returns ``(node, pr)``. Multi-edges count once per occurrence (each
     parallel edge carries its share) — deduplicate upstream if the input
     may repeat.
     """
-    from kamodo_dask_spark.session import static_plan_ctx
-
     if n_iter < 1:
         raise ValueError(f"n_iter must be >= 1, got {n_iter}")
     if not (0.0 < damping < 1.0):
         raise ValueError(f"damping must be in (0, 1), got {damping}")
-    spark = edges.sparkSession
-    # eager=False: the edge count below is the action that materializes
-    # the checkpoint — the same one job the eager form paid, and the
-    # count it returns drives the size-adaptive execution of every
-    # downstream action (r15; see static_plan_ctx — an iteration is a
-    # fixed plan shape, and below the AQE-skew-split floor its AQE
-    # stage-jobs are pure driver round-trips)
     e = edges.select(
         F.col(src_col).alias("_src"), F.col(dst_col).alias("_dst")
-    ).localCheckpoint(eager=False)
-    m = e.count()
-
-    def _ctx():
-        return static_plan_ctx(spark, m)
-
-    with _ctx():
-        nodes = (
-            e.select(F.col("_src").alias("node"))
-            .unionByName(e.select(F.col("_dst").alias("node")))
-            .distinct()
-            .localCheckpoint(eager=True)
-        )
-        n = nodes.count()
+    ).localCheckpoint(eager=True)
+    nodes = (
+        e.select(F.col("_src").alias("node"))
+        .unionByName(e.select(F.col("_dst").alias("node")))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
+    n = nodes.count()
     if n == 0:
         return nodes.select("node", F.lit(0.0).alias("pr")).limit(0)
     out_deg = e.groupBy(F.col("_src").alias("node")).agg(
@@ -111,16 +94,15 @@ def pagerank(
     )
     # ranks ⟕ out-degree, carried through every iteration (out(u) = 0 for
     # dangling nodes; NULL after the left join → flagged, not divided by)
-    with _ctx():
-        state = (
-            nodes.join(out_deg, "node", "left")
-            .select(
-                "node",
-                F.coalesce(F.col("_out"), F.lit(0)).alias("_out"),
-                F.round(F.lit(1.0 / n), round_digits).alias("pr"),
-            )
-            .localCheckpoint(eager=True)
+    state = (
+        nodes.join(out_deg, "node", "left")
+        .select(
+            "node",
+            F.coalesce(F.col("_out"), F.lit(0)).alias("_out"),
+            F.round(F.lit(1.0 / n), round_digits).alias("pr"),
         )
+        .localCheckpoint(eager=True)
+    )
     base = (1.0 - damping) / n
     for _ in range(n_iter):
         dangling = (
@@ -138,26 +120,25 @@ def pagerank(
             .groupBy(F.col("_dst").alias("node"))
             .agg(F.sum(F.col("pr") / F.col("_out")).alias("_in"))
         )
-        with _ctx():
-            state = (
-                state.select("node", "_out", F.lit(1).alias("_k"))
-                .join(contrib, "node", "left")
-                .join(F.broadcast(dangling), "_k")
-                .select(
-                    "node",
-                    "_out",
-                    F.round(
-                        F.lit(base)
-                        + F.lit(damping)
-                        * (
-                            F.coalesce(F.col("_in"), F.lit(0.0))
-                            + F.col("_dang") / F.lit(float(n))
-                        ),
-                        round_digits,
-                    ).alias("pr"),
-                )
-                .localCheckpoint(eager=True)
+        state = (
+            state.select("node", "_out", F.lit(1).alias("_k"))
+            .join(contrib, "node", "left")
+            .join(F.broadcast(dangling), "_k")
+            .select(
+                "node",
+                "_out",
+                F.round(
+                    F.lit(base)
+                    + F.lit(damping)
+                    * (
+                        F.coalesce(F.col("_in"), F.lit(0.0))
+                        + F.col("_dang") / F.lit(float(n))
+                    ),
+                    round_digits,
+                ).alias("pr"),
             )
+            .localCheckpoint(eager=True)
+        )
     return state.select("node", "pr")
 
 
@@ -193,15 +174,9 @@ def triangle_counts(
     triangle-free nodes), ``triangles`` = number of distinct triangles
     the node belongs to — the local clustering coefficient's numerator.
     """
-    from kamodo_dask_spark.session import static_plan_ctx
-
-    spark = edges.sparkSession
     lo, hi = F.least(F.col("_a"), F.col("_b")), F.greatest(
         F.col("_a"), F.col("_b")
     )
-    # eager=False: the edge count below materializes the checkpoint (the
-    # same one job the eager form paid) and sizes every downstream action
-    # for the adaptive/static choice (r15, static_plan_ctx)
     und = (
         edges.select(
             F.col(src_col).alias("_a"), F.col(dst_col).alias("_b")
@@ -209,40 +184,33 @@ def triangle_counts(
         .filter(F.col("_a") != F.col("_b"))
         .select(lo.alias("_u"), hi.alias("_v"))
         .distinct()
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
-    m = und.count()
-
-    def _ctx():
-        return static_plan_ctx(spark, m)
-
-    with _ctx():
-        deg = (
-            und.select(F.col("_u").alias("node"))
-            .unionByName(und.select(F.col("_v").alias("node")))
-            .groupBy("node")
-            .agg(F.count("*").alias("_deg"))
-            .localCheckpoint(eager=True)
-        )
+    deg = (
+        und.select(F.col("_u").alias("node"))
+        .unionByName(und.select(F.col("_v").alias("node")))
+        .groupBy("node")
+        .agg(F.count("*").alias("_deg"))
+        .localCheckpoint(eager=True)
+    )
     # orient each canonical edge low-rank -> high-rank, rank = (deg, id)
     du = deg.select(F.col("node").alias("_u"), F.col("_deg").alias("_du"))
     dv = deg.select(F.col("node").alias("_v"), F.col("_deg").alias("_dv"))
     u_first = (F.col("_du") < F.col("_dv")) | (
         (F.col("_du") == F.col("_dv")) & (F.col("_u") < F.col("_v"))
     )
-    with _ctx():
-        oriented = (
-            und.join(du, "_u")
-            .join(dv, "_v")
-            .select(
-                F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
-                F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
-                # carry the rank of the head so wedge pairing can order the
-                # two out-neighbors without re-joining degrees
-                F.when(u_first, F.col("_dv")).otherwise(F.col("_du")).alias("_rt"),
-            )
-            .localCheckpoint(eager=True)
+    oriented = (
+        und.join(du, "_u")
+        .join(dv, "_v")
+        .select(
+            F.when(u_first, F.col("_u")).otherwise(F.col("_v")).alias("_s"),
+            F.when(u_first, F.col("_v")).otherwise(F.col("_u")).alias("_t"),
+            # carry the rank of the head so wedge pairing can order the
+            # two out-neighbors without re-joining degrees
+            F.when(u_first, F.col("_dv")).otherwise(F.col("_du")).alias("_rt"),
         )
+        .localCheckpoint(eager=True)
+    )
     e1 = oriented.select(
         F.col("_s"), F.col("_t").alias("_b"), F.col("_rt").alias("_rb")
     )
@@ -260,10 +228,6 @@ def triangle_counts(
         .filter(b_first)
         .select("_s", F.col("_b").alias("_w1"), F.col("_c").alias("_w2"))
     )
-    # the wedge intermediate is O(sum of out-degrees squared) = up to
-    # O(m^1.5) rows — NOT bounded by the measured edge count — so this
-    # action deliberately keeps AQE (skew split / coalescing can be
-    # load-bearing here even when m itself is small)
     tri = wedges.join(
         oriented.select(
             F.col("_s").alias("_w1"), F.col("_t").alias("_w2")
@@ -314,35 +278,25 @@ def k_hop_reachability(
     checkpointed frontier layers — never re-checkpointed per round —
     and the frontier's emptiness probe is the ``count`` that
     materializes its lazy checkpoint, so each round costs exactly ONE
-    driver-blocking action (r14, guide §2.1: the old
-    eager-checkpoint + ``isEmpty`` + visited-checkpoint spelling paid
-    three scheduler round-trips per hop for the same shuffled bytes).
+    driver-blocking action (an eager checkpoint + ``isEmpty`` +
+    visited-checkpoint spelling pays three scheduler round-trips per hop
+    for the same shuffled bytes).
 
     Returns ``(node, hop)`` with ``hop`` = min distance (seeds at 0).
     """
-    from kamodo_dask_spark.session import static_plan_ctx
-
     if k < 0:
         raise ValueError(f"k must be >= 0, got {k}")
-    spark = edges.sparkSession
     fwd = edges.select(
         F.col(src_col).alias("_from"), F.col(dst_col).alias("_to")
     )
     adj = fwd if directed else fwd.unionByName(
         fwd.select(F.col("_to").alias("_from"), F.col("_from").alias("_to"))
     )
-    adj = adj.filter(F.col("_from") != F.col("_to")).distinct()
-    # eager=False: the adjacency count below materializes the checkpoint
-    # (same one job as the eager form) and sizes the per-round actions —
-    # every round's relations (frontier, visited, expansion) are bounded
-    # by O(|adj|), so a sub-threshold adjacency makes the whole loop
-    # safely static (r15, static_plan_ctx)
-    adj = adj.localCheckpoint(eager=False)
-    m = adj.count()
-
-    def _ctx():
-        return static_plan_ctx(spark, m)
-
+    adj = (
+        adj.filter(F.col("_from") != F.col("_to"))
+        .distinct()
+        .localCheckpoint(eager=True)
+    )
     seed_layer = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
@@ -365,9 +319,7 @@ def k_hop_reachability(
             .select("node", F.lit(h).cast("bigint").alias("hop"))
             .localCheckpoint(eager=False)
         )
-        with _ctx():
-            n_new = nxt.count()
-        if n_new == 0:
+        if nxt.count() == 0:
             break
         layers.append(nxt)
         frontier = nxt.select("node")
@@ -426,17 +378,14 @@ def weighted_sssp(
     round instead of re-checkpointed, and the improvement set's
     emptiness probe is the ``count`` that materializes its lazy
     checkpoint: each round costs exactly ONE driver-blocking action
-    (r14, guide §2.1 — was three: eager checkpoint + ``isEmpty`` +
-    state checkpoint — for the same shuffled bytes).
+    (not three: eager checkpoint + ``isEmpty`` + state checkpoint, for
+    the same shuffled bytes).
 
     Returns ``(node, dist)`` for every node reachable within
     ``max_hops`` edges (seeds included at 0).
     """
-    from kamodo_dask_spark.session import static_plan_ctx
-
     if max_hops < 0:
         raise ValueError(f"max_hops must be >= 0, got {max_hops}")
-    spark = edges.sparkSession
     fwd = edges.select(
         F.col(src_col).alias("_from"),
         F.col(dst_col).alias("_to"),
@@ -449,23 +398,13 @@ def weighted_sssp(
             F.col("_w"),
         )
     )
-    # parallel edges keep only the lightest; self-loops never improve.
-    # eager=False: the adjacency count below materializes the checkpoint
-    # (same one job as the eager form) and sizes the relaxation rounds —
-    # candidates/improvements/distance state are all O(|adj|)-bounded,
-    # so a sub-threshold adjacency makes the rounds safely static (r15,
-    # static_plan_ctx)
+    # parallel edges keep only the lightest; self-loops never improve
     adj = (
         adj.filter(F.col("_from") != F.col("_to"))
         .groupBy("_from", "_to")
         .agg(F.min("_w").alias("_w"))
-        .localCheckpoint(eager=False)
+        .localCheckpoint(eager=True)
     )
-    m = adj.count()
-
-    def _ctx():
-        return static_plan_ctx(spark, m)
-
     seed_layer = (
         seeds.select(F.col(seed_col).alias("node"))
         .distinct()
@@ -499,9 +438,7 @@ def weighted_sssp(
             .select("node", F.col("_nd").alias("dist"))
             .localCheckpoint(eager=False)
         )
-        with _ctx():
-            n_improved = improved.count()
-        if n_improved == 0:
+        if improved.count() == 0:
             break
         layers.append(improved)
         frontier = improved

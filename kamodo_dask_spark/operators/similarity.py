@@ -734,21 +734,15 @@ def kmeans_fit(
             round_digits=round_digits,
             keep_vec=True,
         )
-        # join-free aggregation to a k x d summary: AQE has nothing to
-        # decide, so the M-step collect runs as ONE job (r15,
-        # session.summary_agg_ctx)
-        from kamodo_dask_spark.session import summary_agg_ctx
-
-        with summary_agg_ctx(assigned.sparkSession):
-            means = (
-                assigned.select(
-                    F.col("assigned_label").alias("_cl"),
-                    F.posexplode(F.col(vec_col)).alias("_dim", "_x"),
-                )
-                .groupBy("_cl", "_dim")
-                .agg(F.round(F.avg(F.col("_x").cast("double")), round_digits).alias("_c"))
-                .collect()  # k × dims rows (metadata-sized)
+        means = (
+            assigned.select(
+                F.col("assigned_label").alias("_cl"),
+                F.posexplode(F.col(vec_col)).alias("_dim", "_x"),
             )
+            .groupBy("_cl", "_dim")
+            .agg(F.round(F.avg(F.col("_x").cast("double")), round_digits).alias("_c"))
+            .collect()  # k × dims rows (metadata-sized)
+        )
         by_label: dict[int, dict[int, float]] = {}
         for r in means:
             by_label.setdefault(int(r["_cl"]), {})[int(r["_dim"])] = r["_c"]
@@ -833,18 +827,12 @@ def pca_power_iteration(
     rows = df.filter(v.isNotNull() & (F.size(v) == d)).select(
         F.col(id_col), v.alias("_x")
     )
-    # join-free aggregations to d-row summaries: AQE has nothing to
-    # decide, so each per-iteration collect runs as ONE job (r15,
-    # session.summary_agg_ctx)
-    from kamodo_dask_spark.session import summary_agg_ctx
-
-    with summary_agg_ctx(df.sparkSession):
-        mu = (
-            rows.select(F.posexplode("_x").alias("_dim", "_val"))
-            .groupBy("_dim")
-            .agg(F.round(F.avg(F.col("_val").cast("double")), round_digits).alias("_m"))
-            .collect()  # d rows (metadata-sized)
-        )
+    mu = (
+        rows.select(F.posexplode("_x").alias("_dim", "_val"))
+        .groupBy("_dim")
+        .agg(F.round(F.avg(F.col("_val").cast("double")), round_digits).alias("_m"))
+        .collect()  # d rows (metadata-sized)
+    )
     mu_vec = [0.0] * d
     for r in mu:
         mu_vec[int(r["_dim"])] = float(r["_m"])
@@ -855,15 +843,14 @@ def pca_power_iteration(
     for _ in range(n_iter):
         w_arr = F.array(*[F.lit(float(x)) for x in w])
         s = F.round(dot(centered, w_arr), round_digits)
-        with summary_agg_ctx(df.sparkSession):
-            means = (
-                rows.select(s.alias("_s"), F.posexplode(centered).alias("_dim", "_c"))
-                .groupBy("_dim")
-                .agg(
-                    F.round(F.avg(F.col("_s") * F.col("_c")), round_digits).alias("_w")
-                )
-                .collect()  # d rows (metadata-sized)
+        means = (
+            rows.select(s.alias("_s"), F.posexplode(centered).alias("_dim", "_c"))
+            .groupBy("_dim")
+            .agg(
+                F.round(F.avg(F.col("_s") * F.col("_c")), round_digits).alias("_w")
             )
+            .collect()  # d rows (metadata-sized)
+        )
         w = [0.0] * d
         for r in means:
             w[int(r["_dim"])] = float(r["_w"])

@@ -939,27 +939,23 @@ def logreg_fit(
     def sigmoid(m: Column) -> Column:
         return F.lit(1.0) / (F.lit(1.0) + F.exp(-m))
 
-    from kamodo_dask_spark.session import summary_agg_ctx
-
     for _ in range(n_iter):
         p = sigmoid(margin(w))
         # the weight UPDATE (not just the gradient) is computed and
         # rounded IN-ENGINE with F.round — half-away-from-zero, matching
         # the DuckDB oracle's round() and the kmeans_fit/pca discipline;
         # Python round() is banker's rounding and would desync the
-        # trajectory on an exact 6-dp tie. Join-free aggregation to d
-        # doubles: one job per step (r15, session.summary_agg_ctx).
-        with summary_agg_ctx(df.sparkSession):
-            step = df.agg(
-                *[
-                    F.round(
-                        F.lit(wj)
-                        - F.lit(lr) * F.avg(F.col(c).cast("double") * (p - y)),
-                        round_digits,
-                    ).alias(f"_w{j}")
-                    for j, (wj, c) in enumerate(zip(w, feature_cols))
-                ]
-            ).first()
+        # trajectory on an exact 6-dp tie.
+        step = df.agg(
+            *[
+                F.round(
+                    F.lit(wj)
+                    - F.lit(lr) * F.avg(F.col(c).cast("double") * (p - y)),
+                    round_digits,
+                ).alias(f"_w{j}")
+                for j, (wj, c) in enumerate(zip(w, feature_cols))
+            ]
+        ).first()
         w = [step[f"_w{j}"] for j in range(d)]
     scored = df.withColumn(
         "score", F.round(sigmoid(margin(w)), round_digits)

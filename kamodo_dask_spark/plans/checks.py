@@ -24,7 +24,9 @@ def executed_plan(df: DataFrame) -> str:
         spark.conf.set(key, "100000")
         return df._jdf.queryExecution().executedPlan().toString()
     finally:
-        if prev is not None:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
             spark.conf.set(key, prev)
 
 

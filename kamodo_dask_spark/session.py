@@ -57,7 +57,7 @@ DEFAULT_CONF = {
     # spark.sql.shuffle.partitions is added at session BUILD time
     # (get_spark), not here: a module-import-time default would freeze
     # whatever SPARK_GRAFT_CPUS said when the package was first imported
-    # and silently ignore later env changes (judge r14 "what's wrong" #6).
+    # and silently ignore later env changes.
     # NOTE: spark.sql.requireAllClusterKeysForCoPartition=false is NOT set
     # here although the cell interpolation strategy depends on it — its
     # blast radius is every join in the session (any relation already
@@ -126,7 +126,7 @@ def get_spark(
                 builder = builder.master(f"local[{cpus}]")
     conf = dict(DEFAULT_CONF)
     # evaluated per call so the env is read at session build, not at
-    # package import (judge r14 "what's wrong" #6)
+    # package import
     conf["spark.sql.shuffle.partitions"] = _default_shuffle_partitions()
     if extra_conf:
         conf.update(extra_conf)
@@ -145,6 +145,8 @@ def scoped_conf(spark: SparkSession, **confs: str):
 
     Only safe when execution COMPLETES inside the block — a lazy DataFrame
     planned under the scope but executed after it sees the restored values.
+    The confs are session-global: one thread drives a ``SparkSession`` at a
+    time (README §Threads).
     """
     pairs = {k.replace("__", "."): str(v) for k, v in confs.items()}
     prior: dict[str, str | None] = {}
@@ -168,63 +170,6 @@ def scoped_conf(spark: SparkSession, **confs: str):
                     spark.conf.set(k, old)
             except Exception:
                 pass
-
-
-def static_plan_ctx(
-    spark: SparkSession,
-    n_rows: int,
-    env: str = "SPARK_GRAFT_STATIC_PLAN_ROWS",
-    default_threshold: int = 4_000_000,
-):
-    """Context manager for ONE action over a relation whose row count was
-    MEASURED at ``n_rows``: below the threshold, plan it statically (AQE
-    scoped off); at or above, leave AQE on.
-
-    Rationale (r15, guide §1.2/§2.1): AQE materializes every exchange as
-    its own driver-sequential stage-job. AQE's genuine levers cannot
-    engage below the skew-split floor — splitting requires ONE partition
-    past ``spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes``
-    (256 MB default), which is impossible when the WHOLE relation is
-    smaller than that, and partition coalescing only saves empty-task
-    launches — so every stage-job is a pure driver round-trip, on a real
-    cluster as much as locally. The callers pass counts of NARROW
-    relations (2-3 int64 columns, ≲32 B/row shuffled), so the 4M-row
-    default is ≲128 MB total — half the skew floor. Iterative operators
-    (star contraction, PageRank/BFS/Bellman-Ford rounds) learn their
-    relation sizes for free from the counts they already run, so their
-    small-input (or contracted-tail) actions run statically while
-    data-sized actions keep AQE and its protections. The threshold is
-    env-tunable (``env``) for cluster shapes; this is a size-adaptive
-    rule, never a constant tuned to one host."""
-    threshold = default_threshold
-    raw = os.environ.get(env)
-    if raw is not None:
-        try:
-            threshold = int(raw)
-        except ValueError:
-            pass
-    if int(n_rows) <= threshold:
-        return scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"})
-    from contextlib import nullcontext
-
-    return nullcontext()
-
-
-def summary_agg_ctx(spark: SparkSession):
-    """Context manager for ONE action that is a pure AGGREGATION whose
-    every exchange carries post-partial-aggregation SUMMARY-sized data BY
-    CONSTRUCTION (a k x d centroid matrix, d per-dimension means, a
-    |relations|-row stats row) and whose plan contains no join.
-
-    For such a plan AQE has nothing to decide at ANY input scale — there
-    is no join to re-strategize, skew-splitting does not apply to
-    aggregations, and coalescing a summary-sized exchange only saves
-    empty-task launches — while it still materializes each exchange as
-    its own driver-sequential stage-job. Scoping AQE off turns the
-    action back into one job (r15; the join planner's profiling actions
-    established the pattern). Use ONLY where the summary-sized-exchange
-    property is structural, never merely observed."""
-    return scoped_conf(spark, **{"spark.sql.adaptive.enabled": "false"})
 
 
 def ensure_session_conf(spark: SparkSession) -> None:

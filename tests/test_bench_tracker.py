@@ -59,11 +59,50 @@ def test_allowance_degrades_to_raw_without_calibration():
 
 
 def test_previous_record_shape():
-    rec = bench._previous_record(0.1)
+    rec = bench._previous_record(0.1, 4)
     assert set(rec) == {"queries", "calibration", "jobs"}
     assert isinstance(rec["queries"], dict)
-    # the committed BENCH_LOCAL sf0.1 record must keep feeding the tracker
-    assert rec["queries"], "sf0.1 baseline vanished from BENCH_LOCAL.json"
+    # the committed BENCH_LOCAL sf0.1 record of a 4-core host must keep
+    # feeding the tracker
+    assert rec["queries"], "4-core sf0.1 baseline vanished from BENCH_LOCAL.json"
+
+
+def test_previous_record_keys_on_sf_and_cpus(tmp_path, monkeypatch, capsys):
+    """The tracker compares only against a record from the same host
+    shape: a 4-core run must not be flagged against an 8-core record of
+    the same scale factor, nor against a record that carries no core
+    count at all."""
+    import json
+
+    doc = {
+        "sf0.01": {"sf": 0.01, "cpus": 4, "value": 9.0,
+                   "queries": {"pagerank": 5.9}, "calibration": CAL_PREV,
+                   "jobs": {"pagerank": 32}},
+        "sf0.1": {"sf": 0.1, "cpus": 8, "value": 99.0,
+                  "queries": {"pagerank": 3.1}, "calibration": CAL_PREV,
+                  "jobs": {"pagerank": 13}},
+        "sf0.001": {"sf": 0.001, "value": 7.0,
+                    "queries": {"pagerank": 1.0}},
+    }
+    (tmp_path / "BENCH_LOCAL.json").write_text(json.dumps(doc))
+    monkeypatch.setattr(bench, "_REPO", str(tmp_path))
+
+    rec = bench._previous_record(0.01, 4)
+    assert rec["queries"] == {"pagerank": 5.9}
+    assert rec["jobs"] == {"pagerank": 32}
+    assert "comparing against BENCH_LOCAL.json sf0.01 (cpus=4" in (
+        capsys.readouterr().err
+    )
+
+    rec = bench._previous_record(0.1, 4)
+    assert rec == {"queries": {}, "calibration": {}, "jobs": {}}
+    assert "no BENCH_LOCAL.json record at sf=0.1, cpus=4" in (
+        capsys.readouterr().err
+    )
+
+    # a record written before the cpus key matches no host shape
+    assert bench._previous_record(0.001, 4)["queries"] == {}
+    assert "no BENCH_LOCAL.json record at sf=0.001" in capsys.readouterr().err
 
 
 def test_new_budgets_present():

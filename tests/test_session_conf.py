@@ -8,11 +8,14 @@ configuration, where the lazily-created S3A filesystem client reads them.
 
 from __future__ import annotations
 
+import pytest
+
 from kamodo_dask_spark.session import (
     _default_shuffle_partitions,
     _external_master_configured,
     apply_s3a_conf,
     s3a_conf,
+    scoped_conf,
 )
 
 
@@ -102,3 +105,42 @@ def test_external_master_detection_ignores_foreign_master_var():
     assert _external_master_configured(
         {"PYSPARK_SUBMIT_ARGS": "--master spark://h:7077 pyspark-shell"}
     )
+
+
+def test_scoped_conf_restores_prior_values_when_block_raises(spark):
+    """A scoped runtime conf is restored even when the action inside the
+    block fails: a key the session had set gets its value back, and a key
+    it never set is unset again."""
+    set_key = "spark.sql.shuffle.partitions"
+    unset_key = "spark.sql.adaptive.advisoryPartitionSizeInBytes"
+    prior_set = spark.conf.get(set_key)
+    prior_unset = spark.conf.get(unset_key, None)
+    spark.conf.unset(unset_key)
+    try:
+        with pytest.raises(RuntimeError, match="inside the scope"):
+            with scoped_conf(spark, **{set_key: "3", unset_key: "1m"}):
+                assert spark.conf.get(set_key) == "3"
+                assert spark.conf.get(unset_key) == "1m"
+                raise RuntimeError("inside the scope")
+        assert spark.conf.get(set_key) == prior_set
+        assert spark.conf.get(unset_key, None) is None
+    finally:
+        spark.conf.set(set_key, prior_set)
+        if prior_unset is not None:
+            spark.conf.set(unset_key, prior_unset)
+
+
+def test_executed_plan_unsets_the_metadata_length_it_raised(spark):
+    """Rendering a plan raises ``spark.sql.maxMetadataStringLength`` only
+    while it renders: a session that had no value has none afterwards."""
+    from kamodo_dask_spark.plans.checks import executed_plan
+
+    key = "spark.sql.maxMetadataStringLength"
+    prior = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    try:
+        assert "Range" in executed_plan(spark.range(3))
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prior is not None:
+            spark.conf.set(key, prior)
