@@ -7,9 +7,10 @@ kamodo_dask/kamodo_dask.py:335-341). One entry point,
 :func:`interpolate_points`, runs one of three Spark strategies:
 
 1. ``"broadcast"`` — **broadcast slab** (exact parity with the reference's
-   execution): collect the ordered slab to a dense ndarray, broadcast it,
-   and evaluate a vectorized NumPy kernel per Arrow batch of query points
-   via ``mapInPandas``. Zero exchanges in the plan.
+   execution): collect the slab unordered, scatter it into a dense ndarray
+   on the driver, broadcast it, and evaluate a vectorized NumPy kernel per
+   Arrow batch of query points via ``mapInPandas``. Zero exchanges in the
+   plan. A registry collects and broadcasts once, at build.
 
 2. ``"corner"`` — **corner join** (relational, fully distributed): snap
    each query coordinate to its bracketing grid values per axis (J1),
@@ -161,8 +162,9 @@ def _axis_arrays(
     levels: dict[str, list] | None = None,
 ) -> dict[str, np.ndarray]:
     """Distinct sorted per-axis values as float64 (timestamps → epoch secs).
-    Pass ``levels`` (a prior :func:`grid_axes` result) to skip re-running
-    the distinct-axis aggregation jobs."""
+    Pass ``levels`` (a prior :func:`grid_axes` result, or axis arrays the
+    slab collect already sorted) to skip re-running the distinct-axis
+    aggregation jobs."""
     vals = levels if levels is not None else grid_axes(grid_df, axes)
     out = {}
     for ax, vs in vals.items():
@@ -284,56 +286,69 @@ def _collect_dense_slab(
     grid_df: DataFrame,
     axes: tuple[str, ...],
     measures: list[str],
-    arrays: dict[str, np.ndarray],
+    sizes: dict,
     fill_value: float,
 ):
-    """Ordered driver collect of the slab as dense ndarrays.
+    """Unordered driver collect of the slab as dense ndarrays — the one slab
+    collect. ``sizes`` gives each axis's expected cardinality (an int, or
+    the axis values themselves).
 
-    Returns ``(axis_list, slabs)`` or ``None`` when the grid is not dense
-    (row count ≠ ∏ axis cardinalities) — the explicit version of the
-    reference's trusted reshape (kamodo_dask.py:325,334). NaN measures become
-    ``fill_value`` here, before interpolation."""
-    shape = tuple(len(arrays[ax]) for ax in axes)
-    expected = int(np.prod(shape))
-    ordered = (
-        grid_df.select(
-            *[_as_double(ax, grid_df).alias(ax) for ax in axes],
-            *[F.col(m).cast("double").alias(m) for m in measures],
-        )
-        .orderBy(*axes)
-        .toPandas()
+    A plain Arrow ``toPandas()`` of the double-cast axes and measures, no
+    sort: ``np.unique`` per axis yields the sorted axis array and each
+    row's index along it, and the rows scatter into place through
+    ``np.ravel_multi_index``. Returns ``(axis_list, slabs)``, or ``None``
+    when the rows do not fill the grid exactly once: row count ≠ ∏ sizes,
+    an axis cardinality off, or a cell hit twice (a duplicated row masking
+    a missing one) — the explicit version of the reference's trusted
+    reshape (kamodo_dask.py:325,334). NaN measures become ``fill_value``
+    here, before interpolation."""
+    shape = tuple(
+        len(sizes[ax]) if hasattr(sizes[ax], "__len__") else int(sizes[ax])
+        for ax in axes
     )
-    if len(ordered) != expected:
+    expected = int(np.prod(shape))
+    pdf = grid_df.select(
+        *[_as_double(ax, grid_df).alias(ax) for ax in axes],
+        *[F.col(m).cast("double").alias(m) for m in measures],
+    ).toPandas()
+    if len(pdf) != expected:
         return None
-    # Count alone can't catch a duplicated row masking a missing one (the
-    # reshape would then misalign every value after the gap) — the collected
-    # frame is driver-sized here, so an exact pandas duplicate check is free.
-    if ordered.duplicated(subset=list(axes)).any():
+    axis_list, index = [], []
+    for ax, n in zip(axes, shape):
+        values, inverse = np.unique(pdf[ax].to_numpy(np.float64), return_inverse=True)
+        if len(values) != n:
+            return None
+        axis_list.append(values)
+        index.append(inverse.reshape(-1))
+    flat = np.ravel_multi_index(index, shape)
+    covered = np.zeros(expected, dtype=bool)
+    covered[flat] = True
+    if not covered.all():
         return None
-    slabs = {
-        m: np.nan_to_num(ordered[m].to_numpy(np.float64), nan=fill_value).reshape(shape)
-        for m in measures
-    }
-    return [arrays[ax] for ax in axes], slabs
+    slabs = {}
+    for m in measures:
+        slab = np.empty(expected, dtype=np.float64)
+        slab[flat] = pdf[m].to_numpy(np.float64)
+        slabs[m] = np.nan_to_num(slab, nan=fill_value).reshape(shape)
+    return axis_list, slabs
 
 
 def _fused_kernel_map(
     points_df: DataFrame,
     axes: tuple[str, ...],
     measures: list[str],
-    axis_list: list[np.ndarray],
-    slabs: dict[str, np.ndarray],
+    slab,
     fill_value: float,
 ) -> DataFrame:
-    """Map-side interpolation: broadcast the dense slab, evaluate the NumPy
-    kernel per Arrow batch of points. Preserves the input point schema
-    exactly (timestamp axes convert to epoch seconds *inside* the kernel)
-    and appends one double column per measure — same output contract as the
-    corner join, zero exchanges in the plan."""
+    """Map-side interpolation: evaluate the NumPy kernel per Arrow batch of
+    points against ``slab``, a broadcast of :func:`_collect_dense_slab`'s
+    ``(axis_list, slabs)``. Starts no Spark job. Preserves the input point
+    schema exactly (timestamp axes convert to epoch seconds *inside* the
+    kernel) and appends one double column per measure — same output
+    contract as the corner join, zero exchanges in the plan."""
     import pandas as pd  # noqa: F401 — executor-side dependency
 
     spark = points_df.sparkSession
-    bc = spark.sparkContext.broadcast((axis_list, slabs))
     axes_l = list(axes)
     fv = float(fill_value)
     ts_axes = {ax for ax, t in points_df.dtypes if ax in axes_l and t == "timestamp"}
@@ -348,7 +363,7 @@ def _fused_kernel_map(
     )
 
     def eval_batches(batches):
-        ax_arrs, slab_map = bc.value
+        ax_arrs, slab_map = slab.value
         for pdf in batches:
             cols = []
             for ax in axes_l:
@@ -399,11 +414,14 @@ def interpolate_points(
       ``"corner"``. Non-dense slabs (collect finds fewer rows than the
       bound) fall back to the corner join, whose coverage accounting turns
       missing corners into ``fill_value``.
-    - ``"broadcast"``: ordered, cardinality-checked collect of the slab
-      (the explicit version of the reference's trusted reshape,
+    - ``"broadcast"``: unordered collect of the slab, scattered into a
+      dense ndarray on the driver and checked to fill every cell exactly
+      once (the explicit version of the reference's trusted reshape,
       kamodo_dask.py:325,334), broadcast, and the NumPy kernel map-side
       over Arrow batches of points — a plan with ZERO exchanges. Raises
-      ``ValueError`` when the grid is not dense.
+      ``ValueError`` when the grid is not dense. Each call collects the
+      slab; a :class:`~kamodo_dask_spark.grid.registry.KamodoSpark`
+      registry collects it once, at build.
     - ``"corner"``: force the relational corner join (J1 + J2) — snap, 2^d
       corner explode, equi-join, group-by. The grid never leaves the
       executors; this is the 100 TB path for one-shot queries and partial
@@ -433,8 +451,8 @@ def interpolate_points(
     if resolved == "broadcast":
         collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
         if collected is not None:
-            axis_list, slabs = collected
-            return _fused_kernel_map(points_df, axes, measures, axis_list, slabs, fill_value)
+            slab = grid_df.sparkSession.sparkContext.broadcast(collected)
+            return _fused_kernel_map(points_df, axes, measures, slab, fill_value)
         if strategy == "broadcast":
             raise ValueError(
                 f"grid is not dense: {grid_df.count()} rows != {dense_bound} "

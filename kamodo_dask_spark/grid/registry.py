@@ -13,6 +13,8 @@ own data (the intended semantics; guarded by a test).
 
 from __future__ import annotations
 
+from datetime import datetime
+
 from pyspark.sql import DataFrame, functions as F
 
 from kamodo_dask_spark.grid.model import (
@@ -26,12 +28,33 @@ from kamodo_dask_spark.grid.model import (
 )
 from kamodo_dask_spark.grid.interpolate import (
     _axis_arrays,
+    _collect_dense_slab,
+    _fused_kernel_map,
     _mesh_points,
     _resolve_strategy,
     build_cell_relation,
     interpolate_points,
     interpolate_points_cells,
 )
+
+
+def _levels_of(df: DataFrame, arrays: dict) -> dict[str, list]:
+    """:func:`grid_axes` values rebuilt from float64 axis arrays, with no
+    Spark job: timestamp axes as the naive system-local ``datetime`` that
+    ``collect()`` returns, integral axes as ``int``, others as ``float``."""
+    dtypes = dict(df.dtypes)
+
+    def level(ax, v):
+        if dtypes[ax] == "timestamp":
+            us = round(v * 1_000_000)
+            return datetime.fromtimestamp(us // 1_000_000).replace(
+                microsecond=us % 1_000_000
+            )
+        if dtypes[ax] in ("tinyint", "smallint", "int", "bigint"):
+            return int(v)
+        return float(v)
+
+    return {ax: [level(ax, float(v)) for v in vs] for ax, vs in arrays.items()}
 
 
 class KamodoSpark(dict):
@@ -41,6 +64,13 @@ class KamodoSpark(dict):
     ``reg['rho_ijkl'](time=…, lon=…)`` → gridded evaluation (I4, unspecified
     axes default to the full grid). Units parsed from ``name[units]`` column
     spellings ride along as ``StructField`` metadata (I5) and in ``.units``.
+
+    A ``"broadcast"`` registry collects the dense slab once, at build, and
+    holds one broadcast of it for every measure, so its point, gridded and
+    derived functions start no Spark job while they build their frame. The
+    driver holds that slab for the registry's lifetime: at most
+    4M rows × 8 B = 32 MB per measure (``_FUSED_SLAB_MAX_ROWS``).
+    :meth:`release` frees it.
     """
 
     def __init__(
@@ -59,15 +89,34 @@ class KamodoSpark(dict):
 
         sizes = validate_dense(self.df, self.axes)
         self.shape = tuple(sizes[ax] for ax in self.axes)
-        self.levels = grid_axes(self.df, self.axes)
-        # derive the float64 arrays from the levels already collected — a
-        # second grid_axes() here would re-run the distinct-axis jobs
-        self._axis_arrays = _axis_arrays(self.df, self.axes, levels=self.levels)
 
         n_rows = 1
         for n in self.shape:
             n_rows *= n
         self.strategy = _resolve_strategy(strategy, n_rows)
+
+        # "broadcast": the one slab collect also yields the axes, so it
+        # replaces the grid_axes job; every query reuses its broadcast
+        self._slab = None
+        if self.strategy == "broadcast":
+            collected = _collect_dense_slab(
+                self.df, self.axes, self.measures, sizes, self.fill_value
+            )
+            if collected is None:
+                raise ValueError(
+                    f"grid is not dense: its rows do not fill the "
+                    f"{' * '.join(map(str, self.shape))} grid exactly once"
+                )
+            self._axis_arrays = _axis_arrays(
+                self.df, self.axes, levels=dict(zip(self.axes, collected[0]))
+            )
+            self.levels = _levels_of(self.df, self._axis_arrays)
+            self._slab = self.df.sparkSession.sparkContext.broadcast(collected)
+        else:
+            self.levels = grid_axes(self.df, self.axes)
+            # derive the float64 arrays from the levels already collected —
+            # a second grid_axes() here would re-run the distinct-axis jobs
+            self._axis_arrays = _axis_arrays(self.df, self.axes, levels=self.levels)
 
         # "cell" = the registry's REPEATED-query plan (SCALE.md): reshape
         # the slab into its cell relation ONCE at registration, persist it,
@@ -95,7 +144,7 @@ class KamodoSpark(dict):
     def _interpolate(self, points_df: DataFrame, measures: list[str]) -> DataFrame:
         """Interpolate ``measures`` at ``points_df`` with the registry's
         strategy — the one path every registered function answers through."""
-        if self.strategy != "cell":
+        if self.strategy == "corner":
             return interpolate_points(
                 self.df,
                 points_df,
@@ -105,13 +154,17 @@ class KamodoSpark(dict):
                 axis_arrays=self._axis_arrays,
                 strategy=self.strategy,
             )
-        if self._cells is None:
+        if self._slab is None and self._cells is None:
             # loud use-after-release: without this the query dies with an
-            # opaque NoneType AttributeError deep in build_cell_relation
+            # opaque NoneType failure deep in the interpolation path
             raise RuntimeError(
-                "this cell-strategy registry has been release()d — rebuild "
-                "it (or hold the current refresher registry, not a stale "
-                "reference)"
+                f"this {self.strategy}-strategy registry has been release()d "
+                "— rebuild it (or hold the current refresher registry, not a "
+                "stale reference)"
+            )
+        if self.strategy == "broadcast":
+            return _fused_kernel_map(
+                points_df, self.axes, measures, self._slab, self.fill_value
             )
         return interpolate_points_cells(
             None,
@@ -155,10 +208,16 @@ class KamodoSpark(dict):
         self[f"{name}_ijkl"] = gridded_fn
 
     def release(self) -> None:
-        """Release engine-held state (the persisted cell relation, when
-        ``strategy="cell"``). Call when replacing a registry — e.g. a slab
-        refresh loop — so superseded cell relations don't accumulate in
-        the storage layer. No-op for other strategies."""
+        """Release engine-held state: the slab broadcast of a
+        ``"broadcast"`` registry, the persisted cell relation of a
+        ``"cell"`` one. Call when replacing a registry — e.g. a slab
+        refresh loop — so superseded slabs don't accumulate. Frames
+        returned earlier still run (the broadcast is unpersisted, not
+        destroyed); later queries raise ``RuntimeError``. No-op for the
+        corner strategy."""
+        if self._slab is not None:
+            self._slab.unpersist()
+            self._slab = None
         if self._cells is not None:
             try:
                 self._cells.unpersist()

@@ -210,6 +210,149 @@ def test_cell_registry_use_after_release_raises_clearly(spark):
         reg["rho"](pts)
 
 
+def test_broadcast_registry_use_after_release_raises_clearly(spark):
+    """Querying a released broadcast-strategy registry raises the same
+    RuntimeError as the cell strategy, while a frame returned before the
+    release still runs (the broadcast is unpersisted, not destroyed)."""
+    reg = KamodoSpark(_affine_grid(spark), axes=("time", "lon"), strategy="broadcast")
+    pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
+    before = reg["rho"](pts)
+    reg.release()
+    assert reg._slab is None
+    assert before.collect()[0]["rho"] == pytest.approx(1.5)
+    with pytest.raises(RuntimeError, match="release"):
+        reg["rho"](pts)
+    with pytest.raises(RuntimeError, match="release"):
+        reg["rho_ijkl"](time=[0.5])
+
+
+def test_broadcast_registry_levels_match_grid_axes(spark):
+    """A broadcast registry rebuilds ``levels`` from its collected axis
+    arrays; they equal ``grid_axes`` in value and type for double, long and
+    timestamp axes, also under a non-UTC session time zone."""
+    from datetime import datetime
+
+    from kamodo_dask_spark.grid.model import grid_axes
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    reg = None
+    try:
+        times = [
+            datetime(2024, 3, 10, 1, 30, 0, 250000),
+            datetime(2024, 3, 10, 3, 45, 10, 999999),
+        ]
+        rows = [
+            (t, lon, lat, float(i) + lon + 0.5 * lat)
+            for i, t in enumerate(times)
+            for lon in (-3, 7, 2**40)
+            for lat in (-0.5, 0.25)
+        ]
+        df = spark.createDataFrame(
+            rows, "time timestamp, lon long, lat double, rho double"
+        ).repartition(3)
+        axes = ("time", "lon", "lat")
+        reg = KamodoSpark(df, axes=axes, strategy="broadcast")
+        want = grid_axes(df, axes)
+        assert reg.levels == want
+        assert {ax: [type(v) for v in vs] for ax, vs in reg.levels.items()} == {
+            ax: [type(v) for v in vs] for ax, vs in want.items()
+        }
+    finally:
+        if reg is not None:
+            reg.release()
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_broadcast_registry_queries_start_no_job(spark):
+    """Point, gridded and derived functions of a built broadcast registry
+    start no Spark job while they build their frame: the slab was collected
+    and broadcast once, at build."""
+    import uuid
+
+    reg = KamodoSpark(_affine_grid(spark), axes=("time", "lon"), strategy="broadcast")
+    reg["d"] = "rho * 2"
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.25), (1, 1.5, 2.0)], "point_id long, time double, lon double"
+    )
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"broadcast-no-job-{uuid.uuid4().hex}"
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        frames = [reg["rho"](pts), reg["rho_ijkl"](time=[0.5, 1.5]), reg["d"](pts)]
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+        # the group does see jobs: running a frame starts one
+        assert frames[2].count() == 2
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert list(tracker.getJobIdsForGroup(group))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prior)
+        reg.release()
+
+
+def test_broadcast_registry_on_shuffled_rows_matches_nlinear_interp(spark):
+    """The unordered slab collect places every row by its coordinates: a
+    grid whose rows are shuffled across several partitions, with uneven
+    axis spacing and random node values, interpolates exactly as
+    ``nlinear_interp`` over the same nodes — registry and standalone."""
+    import numpy as np
+
+    from kamodo_dask_spark.grid.interpolate import nlinear_interp
+
+    rng = np.random.default_rng(7)
+    axes_v = {
+        "time": np.array([0.0, 1.0, 2.5, 4.0]),
+        "lon": np.array([-10.0, 0.0, 5.0, 30.0, 31.0]),
+        "lat": np.array([1.0, 2.0, 4.0]),
+    }
+    axes = tuple(axes_v)
+    values = rng.normal(size=tuple(len(v) for v in axes_v.values()))
+    mesh = np.meshgrid(*axes_v.values(), indexing="ij")
+    rows = list(zip(*(m.ravel().tolist() for m in mesh), values.ravel().tolist()))
+    order = rng.permutation(len(rows))
+    grid = spark.createDataFrame(
+        [rows[i] for i in order], "time double, lon double, lat double, rho double"
+    ).repartition(4)
+    assert grid.rdd.getNumPartitions() >= 3
+
+    n = 200
+    pts_np = np.column_stack(
+        [rng.uniform(v[0] - 0.5, v[-1] + 0.5, n) for v in axes_v.values()]
+    )
+    pts_np[:10] = np.column_stack([m.ravel()[:10] for m in mesh])  # exact nodes
+    pts = spark.createDataFrame(
+        [(i, *map(float, p)) for i, p in enumerate(pts_np)],
+        "point_id long, time double, lon double, lat double",
+    )
+    want = nlinear_interp(list(axes_v.values()), values, pts_np, -1.0)
+
+    reg = KamodoSpark(grid, axes=axes, fill_value=-1.0, strategy="broadcast")
+    try:
+        for out in (
+            reg["rho"](pts),
+            interpolate_points(grid, pts, axes, ["rho"], -1.0, strategy="broadcast"),
+        ):
+            got = dict(out.select("point_id", "rho").collect())
+            np.testing.assert_allclose(
+                [got[i] for i in range(n)], want, rtol=0, atol=1e-12
+            )
+        t_q = [0.5, 2.5]
+        gmesh = np.meshgrid(t_q, axes_v["lon"], axes_v["lat"], indexing="ij")
+        gpts = np.column_stack([m.ravel() for m in gmesh])
+        gwant = dict(
+            zip(map(tuple, gpts), nlinear_interp(list(axes_v.values()), values, gpts, -1.0))
+        )
+        rows_out = reg["rho_ijkl"](time=t_q).collect()
+        assert len(rows_out) == len(gwant)
+        for r in rows_out:
+            assert abs(r["rho"] - gwant[(r["time"], r["lon"], r["lat"])]) <= 1e-12
+    finally:
+        reg.release()
+
+
 def _affine_grid(spark):
     """3×3 (time, lon) grid of rho = time + 2·lon: bilinear interpolation
     reproduces it exactly at any in-bounds point."""
