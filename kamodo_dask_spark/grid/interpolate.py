@@ -162,9 +162,9 @@ def _axis_arrays(
     levels: dict[str, list] | None = None,
 ) -> dict[str, np.ndarray]:
     """Distinct sorted per-axis values as float64 (timestamps → epoch secs).
-    Pass ``levels`` (a prior :func:`grid_axes` result, or axis arrays the
-    slab collect already sorted) to skip re-running the distinct-axis
-    aggregation jobs."""
+    Pass ``levels`` (a prior :func:`validate_dense` or :func:`grid_axes`
+    result, or axis arrays the slab collect already sorted) to skip the
+    distinct-axis job."""
     vals = levels if levels is not None else grid_axes(grid_df, axes)
     out = {}
     for ax, vs in vals.items():
@@ -286,26 +286,23 @@ def _collect_dense_slab(
     grid_df: DataFrame,
     axes: tuple[str, ...],
     measures: list[str],
-    sizes: dict,
+    levels: dict,
     fill_value: float,
 ):
     """Unordered driver collect of the slab as dense ndarrays — the one slab
-    collect. ``sizes`` gives each axis's expected cardinality (an int, or
-    the axis values themselves).
+    collect. ``levels`` gives each axis's values (a :func:`validate_dense`
+    result, or axis arrays); their counts are the expected cardinalities.
 
     A plain Arrow ``toPandas()`` of the double-cast axes and measures, no
     sort: ``np.unique`` per axis yields the sorted axis array and each
     row's index along it, and the rows scatter into place through
     ``np.ravel_multi_index``. Returns ``(axis_list, slabs)``, or ``None``
-    when the rows do not fill the grid exactly once: row count ≠ ∏ sizes,
+    when the rows do not fill the grid exactly once: row count ≠ ∏ counts,
     an axis cardinality off, or a cell hit twice (a duplicated row masking
     a missing one) — the explicit version of the reference's trusted
     reshape (kamodo_dask.py:325,334). NaN measures become ``fill_value``
     here, before interpolation."""
-    shape = tuple(
-        len(sizes[ax]) if hasattr(sizes[ax], "__len__") else int(sizes[ax])
-        for ax in axes
-    )
+    shape = tuple(len(levels[ax]) for ax in axes)
     expected = int(np.prod(shape))
     pdf = grid_df.select(
         *[_as_double(ax, grid_df).alias(ax) for ax in axes],

@@ -9,6 +9,7 @@ explicit, checkable invariant.
 
 from __future__ import annotations
 
+import math
 import re
 
 from pyspark.sql import Column, DataFrame, functions as F
@@ -60,17 +61,28 @@ def units_of(df: DataFrame, column: str) -> str:
     raise KeyError(column)
 
 
+def _sorted_levels(row, axes: tuple[str, ...]) -> dict[str, list]:
+    """Sort each axis's ``collect_set`` on the driver. ``collect_set`` merges
+    ``-0.0`` with ``0.0`` but keeps every NaN as its own element, so a NaN
+    coordinate would become duplicate levels: it is rejected instead."""
+    for ax in axes:
+        if any(isinstance(v, float) and math.isnan(v) for v in row[ax]):
+            raise ValueError(f"grid axis {ax!r} has a NaN coordinate")
+    return {ax: sorted(row[ax]) for ax in axes}
+
+
 def grid_axes(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, list]:
     """Distinct sorted coordinate values per axis (A3; ``df.index.levels``,
     kamodo_dask.py:316-317). Axes are small by construction (their cardinality
     product equals the dense-grid row count), so collecting them to the driver
     is safe even for a 100 TB grid table. ONE job for all axes — a
     partial-aggregated ``collect_set`` per axis in a single pass, sorted on
-    the driver."""
+    the driver. Raises ``ValueError`` on a NaN coordinate. A registry takes
+    the same levels from :func:`validate_dense` instead."""
     row = df.agg(
         *[F.collect_set(ax).alias(ax) for ax in axes]
     ).collect()[0]
-    return {ax: sorted(row[ax]) for ax in axes}
+    return _sorted_levels(row, axes)
 
 
 def grid_bounds(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, tuple]:
@@ -138,23 +150,24 @@ def assert_time_bounds(df: DataFrame, time_col: str, start, end) -> None:
         )
 
 
-def validate_dense(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, int]:
+def validate_dense(df: DataFrame, axes: tuple[str, ...] = DEFAULT_AXES) -> dict[str, list]:
     """Check the dense-grid invariant: row count == ∏ per-axis cardinalities.
 
     The reference *assumes* this for its reshape (kamodo_dask.py:325,334) and
-    silently corrupts data when violated; here it is an explicit one-pass
-    check. Returns the axis sizes. Raises ``ValueError`` on violation.
+    silently corrupts data when violated; here it is an explicit check, and
+    the grid's one metadata job: a ``collect_set`` per axis plus the row
+    count in a single pass. Returns the sorted levels ``{axis: [values]}``,
+    equal to :func:`grid_axes` (sizes are their ``len``). Raises
+    ``ValueError`` on violation or on a NaN coordinate.
     """
-    aggs = [F.count_distinct(ax).alias(ax) for ax in axes]
-    aggs.append(F.count("*").alias("_rows"))
-    row = df.agg(*aggs).collect()[0]
-    sizes = {ax: row[ax] for ax in axes}
-    expected = 1
-    for n in sizes.values():
-        expected *= n
+    row = df.agg(
+        *[F.collect_set(ax).alias(ax) for ax in axes], F.count("*").alias("_rows")
+    ).collect()[0]
+    levels = _sorted_levels(row, axes)
+    expected = math.prod(len(vs) for vs in levels.values())
     if row["_rows"] != expected:
         raise ValueError(
-            f"grid is not dense: {row['_rows']} rows != "
-            f"{expected} = {' * '.join(f'{ax}:{n}' for ax, n in sizes.items())}"
+            f"grid is not dense: {row['_rows']} rows != {expected} = "
+            + " * ".join(f"{ax}:{len(vs)}" for ax, vs in levels.items())
         )
-    return sizes
+    return levels

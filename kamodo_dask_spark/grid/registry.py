@@ -13,15 +13,13 @@ own data (the intended semantics; guarded by a test).
 
 from __future__ import annotations
 
-from datetime import datetime
+import math
 
 from pyspark.sql import DataFrame, functions as F
 
 from kamodo_dask_spark.grid.model import (
     DEFAULT_AXES,
-    grid_axes,
-    grid_bounds,
-    grid_midpoint,
+    grid_axes,  # noqa: F401 — not called; perfbench's LAYER_PATCHES rebinds it
     normalize_measure_columns,
     units_of,
     validate_dense,
@@ -38,25 +36,6 @@ from kamodo_dask_spark.grid.interpolate import (
 )
 
 
-def _levels_of(df: DataFrame, arrays: dict) -> dict[str, list]:
-    """:func:`grid_axes` values rebuilt from float64 axis arrays, with no
-    Spark job: timestamp axes as the naive system-local ``datetime`` that
-    ``collect()`` returns, integral axes as ``int``, others as ``float``."""
-    dtypes = dict(df.dtypes)
-
-    def level(ax, v):
-        if dtypes[ax] == "timestamp":
-            us = round(v * 1_000_000)
-            return datetime.fromtimestamp(us // 1_000_000).replace(
-                microsecond=us % 1_000_000
-            )
-        if dtypes[ax] in ("tinyint", "smallint", "int", "bigint"):
-            return int(v)
-        return float(v)
-
-    return {ax: [level(ax, float(v)) for v in vs] for ax, vs in arrays.items()}
-
-
 class KamodoSpark(dict):
     """Dict-like registry mapping measure names to interpolator callables.
 
@@ -64,6 +43,12 @@ class KamodoSpark(dict):
     ``reg['rho_ijkl'](time=…, lon=…)`` → gridded evaluation (I4, unspecified
     axes default to the full grid). Units parsed from ``name[units]`` column
     spellings ride along as ``StructField`` metadata (I5) and in ``.units``.
+
+    The build runs one grid-metadata job, :func:`validate_dense`, whatever
+    the strategy: its sorted levels are ``.levels``, their counts
+    ``.shape``, and the axis arrays, :meth:`get_bounds` and
+    :meth:`get_midpoint` all read them with no further job (the reference's
+    MultiIndex levels, kamodo_dask.py:316-317).
 
     A ``"broadcast"`` registry collects the dense slab once, at build, and
     holds one broadcast of it for every measure, so its point, gridded and
@@ -87,36 +72,32 @@ class KamodoSpark(dict):
         self.measures = [c for c in self.df.columns if c not in self.axes]
         self.units = {m: units_of(self.df, m) for m in self.measures}
 
-        sizes = validate_dense(self.df, self.axes)
-        self.shape = tuple(sizes[ax] for ax in self.axes)
+        # the grid's one metadata job: its sorted levels (kamodo_dask.py:316-317)
+        self.levels = validate_dense(self.df, self.axes)
+        self.shape = tuple(len(self.levels[ax]) for ax in self.axes)
+        self.strategy = _resolve_strategy(strategy, math.prod(self.shape))
 
-        n_rows = 1
-        for n in self.shape:
-            n_rows *= n
-        self.strategy = _resolve_strategy(strategy, n_rows)
-
-        # "broadcast": the one slab collect also yields the axes, so it
-        # replaces the grid_axes job; every query reuses its broadcast
-        self._slab = None
+        # "broadcast": collect the slab once; every query reuses its broadcast
+        self._slab = collected = None
         if self.strategy == "broadcast":
             collected = _collect_dense_slab(
-                self.df, self.axes, self.measures, sizes, self.fill_value
+                self.df, self.axes, self.measures, self.levels, self.fill_value
             )
             if collected is None:
                 raise ValueError(
                     f"grid is not dense: its rows do not fill the "
                     f"{' * '.join(map(str, self.shape))} grid exactly once"
                 )
-            self._axis_arrays = _axis_arrays(
-                self.df, self.axes, levels=dict(zip(self.axes, collected[0]))
-            )
-            self.levels = _levels_of(self.df, self._axis_arrays)
+        # a broadcast registry keeps the arrays its collect returned: the
+        # kernel compares points against those exact values, and the
+        # datetime.timestamp() of a level can differ from them by 1 ulp
+        self._axis_arrays = _axis_arrays(
+            self.df,
+            self.axes,
+            levels=dict(zip(self.axes, collected[0])) if collected else self.levels,
+        )
+        if collected is not None:
             self._slab = self.df.sparkSession.sparkContext.broadcast(collected)
-        else:
-            self.levels = grid_axes(self.df, self.axes)
-            # derive the float64 arrays from the levels already collected —
-            # a second grid_axes() here would re-run the distinct-axis jobs
-            self._axis_arrays = _axis_arrays(self.df, self.axes, levels=self.levels)
 
         # "cell" = the registry's REPEATED-query plan (SCALE.md): reshape
         # the slab into its cell relation ONCE at registration, persist it,
@@ -125,11 +106,10 @@ class KamodoSpark(dict):
         # k measures share the d window shuffles.
         self._cells = None
         if self.strategy == "cell":
-            # build_cell_relation runs its own density aggregation even
-            # though validate_dense just passed — NOT redundant: the
-            # cardinality-product check cannot see a duplicated node
-            # masking a missing one, the build's count+distinct check can
-            # (and a fooled windowed lead would silently corrupt cells).
+            # build_cell_relation runs its own count + distinct-node check
+            # although validate_dense passed: a duplicated node masking a
+            # missing one passes a level-count check, and a fooled windowed
+            # lead would silently corrupt cells.
             self._cells = build_cell_relation(
                 self.df,
                 self.axes,
@@ -324,12 +304,15 @@ class KamodoSpark(dict):
         }
 
     def get_bounds(self) -> dict:
-        """Per-axis (min, max) — ``get_bounds``, kamodo_dask.py:353-354."""
-        return grid_bounds(self.df, self.axes)
+        """Per-axis (min, max) — ``get_bounds``, kamodo_dask.py:353-354 —
+        read from the build's levels; starts no Spark job."""
+        return {ax: (vs[0], vs[-1]) for ax, vs in self.levels.items()}
 
     def get_midpoint(self) -> dict:
-        """Per-axis mean of distinct values — ``get_midpoint``, kamodo_dask.py:356-357."""
-        return grid_midpoint(self.df, self.axes)
+        """Per-axis mean of distinct values — ``get_midpoint``,
+        kamodo_dask.py:356-357 — over the build's axis arrays (timestamps as
+        epoch seconds); starts no Spark job."""
+        return {ax: float(arr.mean()) for ax, arr in self._axis_arrays.items()}
 
     def __repr__(self) -> str:  # pragma: no cover
         entries = ", ".join(

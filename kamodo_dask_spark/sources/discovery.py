@@ -87,7 +87,6 @@ def fetch_file_range(
     # warn only when there IS a found subset to proceed with — the
     # all-missing case raises IOError in the caller, and a "proceeding
     # with the found subset" warning right before that raise is noise
-    # (judge r11 What's-wrong #4)
     if found and len(found) < len(candidates):
         missing = len(candidates) - len(found)
         warnings.warn(

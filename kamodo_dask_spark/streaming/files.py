@@ -144,13 +144,11 @@ class SlabRefresher:
         spark = batch_df.sparkSession
         # Emptiness (and, under retention, the batch's max time) ride as
         # OBSERVED METRICS on the append write itself — zero extra Spark
-        # jobs and O(1) metadata per batch. The r14 spelling listed the
-        # entire slab store twice per micro-batch: O(files-in-store)
-        # metadata per batch grows unboundedly on a long-running stream
-        # and is pagination-expensive on object stores (judge r14 "what's
-        # wrong" #4); the r13 spelling before it paid a per-batch
-        # ``isEmpty()`` scan job. Metrics are computed by the write job
-        # Spark was running anyway.
+        # jobs and O(1) metadata per batch. Listing the slab store per
+        # micro-batch would cost O(files-in-store) metadata, which grows
+        # unboundedly on a long-running stream and is pagination-expensive
+        # on object stores; an ``isEmpty()`` check would cost a scan job.
+        # Metrics are computed by the write job Spark was running anyway.
         metrics_exprs = [F.count(F.lit(1)).alias("_n")]
         if self.retention_seconds is not None:
             metrics_exprs.append(

@@ -121,11 +121,58 @@ def test_snap_range_unbracketable_raises(small_grid):
 
 
 def test_validate_dense(small_grid, spark):
-    sizes = validate_dense(small_grid, ("t", "x"))
-    assert sizes == {"t": 3, "x": 4}
+    levels = validate_dense(small_grid, ("t", "x"))
+    assert levels == {"t": [0.0, 1.0, 2.0], "x": [10.0, 20.0, 30.0, 40.0]}
     broken = small_grid.filter(~((F.col("t") == 0) & (F.col("x") == 10.0)))
     with pytest.raises(ValueError, match="not dense"):
         validate_dense(broken, ("t", "x"))
+
+
+def test_validate_dense_levels_match_grid_axes(spark):
+    """validate_dense returns the levels grid_axes returns, equal in value
+    and type, for double, long and timestamp axes."""
+    from datetime import datetime
+
+    times = [datetime(2024, 3, 10, 1, 30, 0, 250000), datetime(2024, 3, 10, 3, 45)]
+    rows = [
+        (t, lon, lat, 1.0)
+        for t in times
+        for lon in (7, -3, 2**40)
+        for lat in (0.25, -0.5)
+    ]
+    df = spark.createDataFrame(
+        rows, "time timestamp, lon long, lat double, rho double"
+    ).repartition(3)
+    axes = ("time", "lon", "lat")
+    got, want = validate_dense(df, axes), grid_axes(df, axes)
+    assert got == want
+    assert got["lon"] == [-3, 7, 2**40] and got["lat"] == [-0.5, 0.25]
+    assert {ax: [type(v) for v in vs] for ax, vs in got.items()} == {
+        ax: [type(v) for v in vs] for ax, vs in want.items()
+    }
+    assert [type(v) for v in got["time"]] == [datetime, datetime]
+
+
+def test_nan_axis_value_rejected_and_signed_zero_is_one_node(spark):
+    """A NaN coordinate raises in both validate_dense and grid_axes
+    (collect_set keeps every NaN as its own element, so it would otherwise
+    yield duplicate levels); -0.0 and 0.0 are one node in both."""
+    nan = float("nan")
+    with_nan = spark.createDataFrame(
+        [(t, x, 1.0) for t in (0.0, 1.0) for x in (0.0, nan)],
+        "t double, x double, v double",
+    )
+    for fn in (validate_dense, grid_axes):
+        with pytest.raises(ValueError, match="NaN"):
+            fn(with_nan, ("t", "x"))
+
+    signed = spark.createDataFrame(
+        [(0.0, 0.0, 1.0), (0.0, 1.0, 2.0), (1.0, -0.0, 3.0), (1.0, 1.0, 4.0)],
+        "t double, x double, v double",
+    )
+    want = {"t": [0.0, 1.0], "x": [0.0, 1.0]}
+    assert validate_dense(signed, ("t", "x")) == want
+    assert grid_axes(signed, ("t", "x")) == want
 
 
 def test_range_filter(small_grid):

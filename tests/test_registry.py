@@ -293,6 +293,79 @@ def test_broadcast_registry_queries_start_no_job(spark):
         reg.release()
 
 
+@pytest.mark.parametrize("strategy", ["broadcast", "corner", "cell"])
+def test_registry_build_runs_one_grid_metadata_call(spark, monkeypatch, strategy):
+    """Every registry build, whatever its strategy, learns the grid's levels
+    from exactly one validate_dense call and never calls grid_axes."""
+    import kamodo_dask_spark.grid.interpolate as interpolate_mod
+    import kamodo_dask_spark.grid.registry as registry_mod
+
+    calls = []
+    real = registry_mod.validate_dense
+
+    def counting(*args, **kwargs):
+        calls.append(args)
+        return real(*args, **kwargs)
+
+    def no_grid_axes(*args, **kwargs):
+        raise AssertionError("grid_axes called during a registry build")
+
+    monkeypatch.setattr(registry_mod, "validate_dense", counting)
+    monkeypatch.setattr(registry_mod, "grid_axes", no_grid_axes)
+    monkeypatch.setattr(interpolate_mod, "grid_axes", no_grid_axes)
+    reg = KamodoSpark(_affine_grid(spark), axes=("time", "lon"), strategy=strategy)
+    try:
+        assert len(calls) == 1
+        assert reg.levels == {"time": [0.0, 1.0, 2.0], "lon": [0.0, 1.0, 2.0]}
+        assert reg.shape == (3, 3)
+        pts = spark.createDataFrame(
+            [(0, 0.5, 0.25)], "point_id long, time double, lon double"
+        )
+        assert reg["rho"](pts).collect()[0]["rho"] == pytest.approx(1.0)
+        assert len(calls) == 1
+    finally:
+        reg.release()
+
+
+@pytest.mark.parametrize("strategy", ["broadcast", "corner", "cell"])
+def test_bounds_and_midpoint_start_no_job(spark, strategy):
+    """get_bounds and get_midpoint read the levels collected at build: they
+    start no Spark job, and equal grid_bounds (exactly) and grid_midpoint
+    on double, long and timestamp axes."""
+    import uuid
+    from datetime import datetime
+
+    from kamodo_dask_spark.grid.model import grid_bounds, grid_midpoint
+
+    times = [datetime(2024, 3, 10, 1, 30, 0, 250000), datetime(2024, 3, 10, 3, 45)]
+    rows = [
+        (t, lon, lat, float(i) + lon + 0.5 * lat)
+        for i, t in enumerate(times)
+        for lon in (-3, 7, 40)
+        for lat in (-0.5, 0.25, 2.0)
+    ]
+    df = spark.createDataFrame(rows, "time timestamp, lon long, lat double, rho double")
+    axes = ("time", "lon", "lat")
+    reg = KamodoSpark(df, axes=axes, strategy=strategy)
+    sc = spark.sparkContext
+    tracker = sc.statusTracker()
+    group = f"bounds-no-job-{uuid.uuid4().hex}"
+    prior = sc.getLocalProperty("spark.jobGroup.id")
+    sc.setLocalProperty("spark.jobGroup.id", group)
+    try:
+        bounds, mid = reg.get_bounds(), reg.get_midpoint()
+        sc._jsc.sc().listenerBus().waitUntilEmpty(30_000)
+        assert list(tracker.getJobIdsForGroup(group)) == []
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", prior)
+        reg.release()
+    assert bounds == grid_bounds(df, axes)
+    want = grid_midpoint(df, axes)
+    assert set(mid) == set(want)
+    for ax in axes:
+        assert mid[ax] == pytest.approx(want[ax], rel=1e-12)
+
+
 def test_broadcast_registry_on_shuffled_rows_matches_nlinear_interp(spark):
     """The unordered slab collect places every row by its coordinates: a
     grid whose rows are shuffled across several partitions, with uneven
