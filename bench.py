@@ -460,9 +460,7 @@ def cell_reuse_micro(spark, n_pts: int = 100_000) -> float:
         ((F.col("id") % 107) / 9.91).alias("x4"),
     )
     def _body():
-        out = interpolate_points_cells(
-            None, pts, axes, ["val"], axis_arrays=arrays, cells=cells
-        )
+        out = interpolate_points_cells(cells, pts, axes, arrays, ["val"])
         out.write.format("noop").mode("overwrite").save()
 
     try:

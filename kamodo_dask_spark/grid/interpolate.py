@@ -46,14 +46,14 @@ from kamodo_dask_spark.grid.model import DEFAULT_AXES, grid_axes
 _LITERAL_AXIS_MAX = 2048
 
 #: A dense slab with at most this many rows (= product of axis cardinalities)
-#: gets an explicit broadcast hint on the corner join: the size is provable at
-#: plan time, so there is no reason to plan a shuffle exchange and wait for
-#: AQE's runtime broadcast conversion. ~1M rows of (d doubles + measures)
-#: is well under the 8GB broadcast ceiling.
+#: gets an explicit broadcast hint on the corner join (a cell relation: this
+#: many / 2^d), see :func:`_hint_build_side`. ~1M rows of (d doubles +
+#: measures) is well under the 8GB broadcast ceiling.
 _BROADCAST_GRID_MAX_ROWS = 1_000_000
-# Ceiling on the per-task hash-build side of the corner join: slab rows per
-# shuffle partition above which the SHUFFLE_HASH hint is NOT applied and AQE
-# picks the join (sort-merge spills; a hash build cannot).
+# Ceiling on the per-task hash-build side of a relational join: slab rows per
+# shuffle partition (a cell relation: this many / 2^d) above which the
+# SHUFFLE_HASH hint is NOT applied and AQE picks the join (sort-merge spills;
+# a hash build cannot).
 _HASH_BUILD_MAX_ROWS_PER_TASK = 2_000_000
 
 #: The strategies :func:`interpolate_points` and the registry accept.
@@ -191,20 +191,16 @@ def _snap_columns(
     points: DataFrame,
     axes: tuple[str, ...],
     arrays: dict[str, np.ndarray],
-    with_index: bool = False,
 ) -> DataFrame:
-    """Append ``_lo/_hi/_frac`` per axis and an ``_oob`` flag to the points.
+    """Append ``_lo/_hi/_frac`` and the low-corner axis index ``_loi``
+    (int) per axis, and an ``_oob`` flag, to the points.
 
     Small axes (the normal dense-grid case) snap JVM-side against a literal
     sorted array — stays inside whole-stage codegen, zero joins, zero
     shuffles. Oversized axes fall back to an Arrow-batched
-    ``np.searchsorted`` (O(log n) per point).
-
-    ``with_index=True`` additionally emits the cell's low-corner AXIS INDEX
-    per axis (``_loi_{ax}`` int) — integer join keys for the cell strategy:
-    int keys carry no ``NormalizeFloatingNumbers`` wrapper, so a persisted
-    cell relation's build-time ordering/partitioning satisfies the join
-    requirements outright (the double-key join re-sorted per query).
+    ``np.searchsorted`` (O(log n) per point). ``_loi_{ax}`` is the cell
+    strategy's join key; the corner join never reads it and Catalyst
+    prunes it from that plan.
     """
     big = [ax for ax in axes if len(arrays[ax]) > _LITERAL_AXIS_MAX]
     oob = F.lit(False)
@@ -225,12 +221,11 @@ def _snap_columns(
             lo = F.element_at(lit_arr, idx + F.lit(1))
             hi = F.element_at(lit_arr, idx + F.lit(2))
             frac = (x - lo) / (hi - lo)
-            cols = {f"_lo_{ax}": lo, f"_hi_{ax}": hi, f"_frac_{ax}": frac}
-            if with_index:
-                cols[f"_loi_{ax}"] = idx.cast("int")
-            df = df.withColumns(cols)
+            df = df.withColumns(
+                {f"_lo_{ax}": lo, f"_hi_{ax}": hi, f"_frac_{ax}": frac, f"_loi_{ax}": idx}
+            )
     if big:
-        df = _snap_udf(df, big, arrays, with_index=with_index)
+        df = _snap_udf(df, big, arrays)
     return df.withColumn("_oob", oob)
 
 
@@ -238,7 +233,6 @@ def _snap_udf(
     df: DataFrame,
     axes_subset: list[str],
     arrays: dict[str, np.ndarray],
-    with_index: bool = False,
 ) -> DataFrame:
     """Arrow-batched searchsorted snap for large axes (broadcast axis arrays)."""
     spark = df.sparkSession
@@ -246,7 +240,7 @@ def _snap_udf(
 
     import pandas as pd
 
-    parts = ("lo", "hi", "frac") + (("loi",) if with_index else ())
+    parts = ("lo", "hi", "frac", "loi")
     fields = [
         T.StructField(
             f"_{part}_{ax}", T.IntegerType() if part == "loi" else T.DoubleType()
@@ -269,8 +263,7 @@ def _snap_udf(
             data[f"_lo_{ax}"] = lo
             data[f"_hi_{ax}"] = hi
             data[f"_frac_{ax}"] = (x - lo) / (hi - lo)
-            if with_index:
-                data[f"_loi_{ax}"] = i.astype(np.int32)
+            data[f"_loi_{ax}"] = i.astype(np.int32)
         return pd.DataFrame(data)
 
     snap = F.pandas_udf(_snap, out_type)
@@ -427,8 +420,8 @@ def interpolate_points(
       slab into its cell relation (d window passes), then one equi-join
       per query with a row-local weighted sum: the point stream crosses a
       single 1×-width exchange instead of 2^d-exploding and re-grouping.
-      Wins when points ≫ slab or the slab serves repeated queries (pass a
-      prebuilt relation directly to ``interpolate_points_cells``).
+      Wins when points ≫ slab or the slab serves repeated queries (build
+      the relation once and pass it to ``interpolate_points_cells``).
 
     Semantics note: the corner join merges duplicate point rows in its final
     group-by; the fused and cell paths preserve them. Include a unique
@@ -442,8 +435,9 @@ def interpolate_points(
 
     resolved = _resolve_strategy(strategy, dense_bound)
     if resolved == "cell":
+        cells = build_cell_relation(grid_df, axes, measures, fill_value, arrays)
         return interpolate_points_cells(
-            grid_df, points_df, axes, measures, fill_value, arrays
+            cells, points_df, axes, arrays, measures, fill_value
         )
     if resolved == "broadcast":
         collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
@@ -496,29 +490,7 @@ def interpolate_points(
             for m in measures
         ],
     )
-
-    # Dense-grid row count is provable at plan time (∏ axis cardinalities, an
-    # upper bound for partial slabs) — hint broadcast for small slabs instead
-    # of planning a shuffle and waiting for AQE's runtime conversion. Large
-    # slabs stay a hash join on near-uniform corner keys; AQE still applies.
-    if dense_bound <= _BROADCAST_GRID_MAX_ROWS:
-        grid_keyed = F.broadcast(grid_keyed)
-    else:
-        # Mid-size slabs: SHUFFLE_HASH with the grid as build side. Spark's
-        # default picks a sort-merge join here — two full sorts on 4
-        # normalized-double corner keys (measured 1.7× slower at a 1.23M-row
-        # slab × 1.6M corner rows). Per-task build size is the slab divided
-        # by spark.sql.shuffle.partitions (NOT the scan's maxPartitionBytes
-        # — post-shuffle partitioning is governed by the shuffle-partition
-        # count / AQE advisory size), so the hint is gated: hash-build only
-        # while dense_bound / shuffle_partitions stays under
-        # _HASH_BUILD_MAX_ROWS_PER_TASK (~2M rows ≈ low hundreds of MB of
-        # packed doubles + hash overhead per task). Slabs beyond that leave
-        # join selection to AQE, where sort-merge spills instead of OOMing
-        # the build.
-        # same gate as the cell relation's (d=0: corner rows are 1× wide)
-        if _cells_hash_join_safe(dense_bound, 0, grid_df.sparkSession):
-            grid_keyed = grid_keyed.hint("SHUFFLE_HASH")
+    grid_keyed = _hint_build_side(grid_keyed, dense_bound, 1)
     joined = exploded.join(grid_keyed, on=[f"_k_{ax}" for ax in axes], how="left")
 
     aggs = []
@@ -577,38 +549,53 @@ def build_cell_relation(
     axis_arrays: dict[str, np.ndarray] | None = None,
 ) -> DataFrame:
     """Reshape a DENSE grid slab into its CELL relation: one row per grid
-    cell, keyed by the cell's low corner (``_k_{ax}`` float64 per axis),
-    carrying all 2^d corner values per measure as an array
-    (``_cells_{m}``, index ``i`` = corner bits ``b_1..b_d`` of the axes in
-    order, ``b_1`` most significant).
+    cell, with exactly these columns:
+
+    - ``_ki_{ax}`` (int), one per axis in order: the index of the cell's
+      low corner in that axis's array;
+    - ``_cells_{m}`` (array<double>), one per measure: the cell's 2^d
+      corner values, index ``i`` = corner bits ``b_1..b_d`` of the axes in
+      order, ``b_1`` most significant.
 
     This is the join-side precomputation behind the ``"cell"``
-    interpolation strategy: d windowed ``lead`` passes (one shuffle per
-    axis, slab-sized but narrow) gather each cell's corners so point
-    lookups become ONE equi-join with a row-local weighted sum — no 2^d
+    interpolation strategy: d windowed passes (one shuffle per axis,
+    slab-sized but narrow) gather each cell's corners so point lookups
+    become ONE equi-join on int keys with a row-local weighted sum — no 2^d
     point explode and no per-point re-aggregation shuffle. The relation
     depends only on the slab, so repeated point queries (the registry's
     usage pattern — one slab, many lookups) amortize the build; persist it
     or write it as a table for a long-lived slab.
 
+    Key derivation: the pass along axis ``ax`` orders each line of nodes by
+    its coordinate, pairs every node with the next one (``lead``) and
+    numbers it (``row_number() - 1``). The number becomes ``_ki_{ax}`` only
+    when it and the next node's number index exactly the node and the next
+    node in ``axis_arrays`` (the values points snap against); a cell with a
+    node missing from ``axis_arrays``, and the last node of each line, get
+    no row, so queries into them return ``fill_value``. Later passes
+    partition on the ``_ki_`` of the axes already passed, so the relation
+    leaves the build hash-partitioned on ``_ki_`` of axes 2..d — the
+    partitioning a persisted relation's point joins reuse.
+
     NULL/NaN node values become ``fill_value`` (the corner join's node
-    semantics). Requires a dense slab (row count = ∏ axis cardinalities) —
-    raises ``ValueError`` otherwise, because a windowed ``lead`` over a
-    gapped axis would silently pair non-adjacent nodes; non-dense slabs
-    belong to the corner join, whose coverage accounting defines them.
+    semantics). Requires a dense slab (row count = distinct coordinates =
+    ∏ axis cardinalities) — raises ``ValueError`` otherwise, because a
+    windowed ``lead`` over a gapped axis would silently pair non-adjacent
+    nodes; non-dense slabs belong to the corner join, whose coverage
+    accounting defines them.
 
     d=1 caveat: the single window has no partition keys, so the build
     sorts the whole axis in ONE task — fine for axis-sized relations
     (axes are small by construction), but a huge 1-D "grid" should use
     ``asof_uniform_grid`` or the corner join instead.
 
-    Cache-budget cap (measured, SCALE.md round-6 probe): the relation is
-    2^d× WIDER than the raw slab (every corner materialized in 2^d cells
-    ≈ ``dense_bound × 2^d × 8 B × n_measures``), and the strategy's
-    per-query win assumes the persisted relation is served from memory.
-    At 96M cells (~19 GB, past the local storage pool) query scans went
-    disk-bound and the corner join won outright — size the cache budget
-    before choosing this strategy for a long-lived slab.
+    Cache-budget cap (measured, SCALE.md round-6 probe): a row costs
+    ``2^d × 8 B`` per measure plus ``4 B`` per axis, so the relation is
+    about 2^d× WIDER than the raw slab, and the strategy's per-query win
+    assumes the persisted relation is served from memory. At 96M cells
+    (~19 GB, past the local storage pool) query scans went disk-bound and
+    the corner join won outright — size the cache budget before choosing
+    this strategy for a long-lived slab.
     """
     from pyspark.sql import Window
 
@@ -617,13 +604,15 @@ def build_cell_relation(
     arrays = axis_arrays or _axis_arrays(grid_df, axes)
     expected = int(np.prod([len(arrays[ax]) for ax in axes]))
 
-    base = grid_df.select(
+    cells = grid_df.select(
         *[_as_double(ax, grid_df).alias(f"_k_{ax}") for ax in axes],
         *[
-            F.nanvl(
-                F.coalesce(F.col(m).cast("double"), F.lit(float("nan"))),
-                F.lit(float(fill_value)),
-            ).alias(m)
+            F.array(
+                F.nanvl(
+                    F.coalesce(F.col(m).cast("double"), F.lit(float("nan"))),
+                    F.lit(float(fill_value)),
+                )
+            ).alias(f"_cells_{m}")
             for m in measures
         ],
     )
@@ -633,7 +622,7 @@ def build_cell_relation(
     # duplicate key — two cells sharing one low corner, silently duplicating
     # and corrupting every query row that joins them. Same hole
     # _collect_dense_slab guards on the broadcast path.
-    n, nd = base.agg(
+    n, nd = cells.agg(
         F.count(F.lit(1)), F.countDistinct(*[f"_k_{ax}" for ax in axes])
     ).first()
     if n != expected or nd != expected:
@@ -643,42 +632,20 @@ def build_cell_relation(
             "partial or duplicated slabs"
         )
 
-    # Integer axis-index key per axis (``_ki_{ax}``) alongside the node
-    # value: int join keys carry no NormalizeFloatingNumbers wrapper, so a
-    # persisted relation's build-time hash partitioning AND in-partition
-    # ordering satisfy the point join's requirements syntactically — the
-    # double-key join re-sorted the whole relation per query. Derived by
-    # exact-equality position in the axis literal (the same exactness the
-    # value join itself assumed); NULL when a node value is not a literal
-    # array member, which the value join would also have failed to match.
-    # Axes beyond the literal bound keep the legacy value keys.
-    int_keys = all(len(arrays[ax]) <= _LITERAL_AXIS_MAX for ax in axes)
-    key = (lambda ax: f"_ki_{ax}") if int_keys else (lambda ax: f"_k_{ax}")
-    if int_keys:
-        idx_cols = {}
-        for ax in axes:
-            lit_arr = F.lit([float(v) for v in arrays[ax]])
-            pos = F.array_position(lit_arr, F.col(f"_k_{ax}"))
-            idx_cols[f"_ki_{ax}"] = F.when(pos > 0, (pos - 1).cast("int"))
-        base = base.withColumns(idx_cols)
-
-    cells = base.select(
-        *[F.col(f"_k_{ax}") for ax in axes],
-        *([F.col(f"_ki_{ax}") for ax in axes] if int_keys else []),
-        *[F.array(F.col(m)).alias(f"_cells_{m}") for m in measures],
-    )
-    carry = [f"_k_{a}" for a in axes] + ([f"_ki_{a}" for a in axes] if int_keys else [])
+    # each axis's column: its coordinate until its pass numbers it
+    key = {ax: f"_k_{ax}" for ax in axes}
     # process axes LAST-first so the final array index is
     # b_1*2^(d-1) + ... + b_d (axis 1 most significant)
     for ax in reversed(axes):
-        w = (
-            Window.partitionBy(*[key(a) for a in axes if a != ax])
-            .orderBy(key(ax))
-        )
+        w = Window.partitionBy(*[key[a] for a in axes if a != ax]).orderBy(key[ax])
+        arr = F.lit([float(v) for v in arrays[ax]])
+        i = F.col("_i")
+        in_place = (F.get(arr, i) == F.col(key[ax])) & (F.get(arr, i + 1) == F.col("_nxt"))
         cells = (
             cells.select(
-                *[F.col(c) for c in carry],
-                F.lead(key(ax)).over(w).alias("_nxt"),
+                *[F.col(key[a]) for a in axes],
+                (F.row_number().over(w) - 1).alias("_i"),
+                F.lead(key[ax]).over(w).alias("_nxt"),
                 *[
                     F.concat(
                         F.col(f"_cells_{m}"), F.lead(f"_cells_{m}").over(w)
@@ -686,112 +653,108 @@ def build_cell_relation(
                     for m in measures
                 ],
             )
-            # the last node along the axis is not the low corner of any cell
-            .filter(F.col("_nxt").isNotNull())
-            .drop("_nxt")
+            .select(
+                *[
+                    F.when(in_place, i).alias(f"_ki_{a}") if a == ax else F.col(key[a])
+                    for a in axes
+                ],
+                *[f"_cells_{m}" for m in measures],
+            )
+            .filter(F.col(f"_ki_{ax}").isNotNull())
         )
-    if not _cells_hash_join_safe(expected, len(axes), grid_df.sparkSession):
+        key[ax] = f"_ki_{ax}"
+    if not _hash_build_safe(expected, 2 ** len(axes), grid_df.sparkSession):
         # SMJ regime (relation too big for an unspillable hash build): sort
-        # within the final window pass's partitions ONCE at build. With int
-        # keys the persisted ordering satisfies the join's required ordering
-        # outright (no normalization wrapper), so the per-query cells-side
-        # Sort is ELIDED from the plan; with legacy double keys the Sort
-        # node stays but runs spill-free over already-ordered cached runs
-        # (21.3 s -> 2.0 s per 1M-point query at a 19M-cell relation). No
-        # exchange: the subset hash partitioning (co-partition reuse) kept.
-        cells = cells.sortWithinPartitions(*[key(ax) for ax in axes])
+        # within the final window pass's partitions ONCE at build. Int keys
+        # carry no NormalizeFloatingNumbers wrapper, so the persisted
+        # ordering satisfies the join's required ordering outright and the
+        # per-query cells-side Sort is ELIDED from the plan. No exchange:
+        # the subset hash partitioning (co-partition reuse) is kept.
+        cells = cells.sortWithinPartitions(*key.values())
     return cells
 
 
-def _cells_hash_join_safe(dense_bound: int, d: int, spark) -> bool:
-    """True while a cell relation of ``dense_bound`` nodes can safely be the
+def _hash_build_safe(dense_bound: int, width: int, spark) -> bool:
+    """True while a relation of ``dense_bound`` nodes, each ``width`` slab
+    rows wide (1 for the grid, 2^d for a cell relation), can safely be the
     build side of a shuffled-hash join: per-task build rows (dense_bound /
-    shuffle partitions) under the corner-join ceiling scaled by the 2^d row
-    widening. A hash build cannot spill — beyond this, the join must be
+    shuffle partitions) under :data:`_HASH_BUILD_MAX_ROWS_PER_TASK` divided
+    by ``width``. A hash build cannot spill — beyond this, the join must be
     left to AQE so sort-merge can spill instead of OOMing."""
     try:
         n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
     except Exception:
         n_shuffle = 200
-    return dense_bound <= (_HASH_BUILD_MAX_ROWS_PER_TASK // (2**d)) * max(n_shuffle, 1)
+    return dense_bound <= (_HASH_BUILD_MAX_ROWS_PER_TASK // width) * max(n_shuffle, 1)
+
+
+def _hint_build_side(df: DataFrame, dense_bound: int, width: int) -> DataFrame:
+    """The one join-hint rule of both relational strategies, for ``df``, the
+    build side: the grid (``width`` 1) or a cell relation (``width`` 2^d,
+    its rows that much wider than the slab's).
+
+    Its row count is provable at plan time (∏ axis cardinalities, an upper
+    bound for partial slabs), so up to :data:`_BROADCAST_GRID_MAX_ROWS` /
+    ``width`` it is broadcast instead of planning a shuffle and waiting for
+    AQE's runtime conversion. Above that it is the SHUFFLE_HASH build side
+    while :func:`_hash_build_safe`: Spark's default would pick a sort-merge
+    join — two full sorts on the keys, measured 1.7× slower for the corner
+    join at a 1.23M-row slab × 1.6M corner rows. Per-task build size is
+    ``dense_bound`` divided by spark.sql.shuffle.partitions (NOT the scan's
+    maxPartitionBytes — post-shuffle partitioning is governed by the
+    shuffle-partition count / AQE advisory size). Beyond the ceiling no hint
+    is given and AQE picks the join: sort-merge spills where a hash build
+    would OOM (an ungated hint did, at a 96M-cell relation: 100^4 probe, 32
+    shuffle partitions, ~3M 2^d-wide rows per task)."""
+    if dense_bound <= _BROADCAST_GRID_MAX_ROWS // width:
+        return F.broadcast(df)
+    if _hash_build_safe(dense_bound, width, df.sparkSession):
+        return df.hint("SHUFFLE_HASH")
+    return df
 
 
 def interpolate_points_cells(
-    grid_df: DataFrame | None,
+    cells: DataFrame,
     points_df: DataFrame,
-    axes: tuple[str, ...] = DEFAULT_AXES,
+    axes: tuple[str, ...],
+    axis_arrays: dict[str, np.ndarray],
     measures: list[str] | None = None,
     fill_value: float = 0.0,
-    axis_arrays: dict[str, np.ndarray] | None = None,
-    cells: DataFrame | None = None,
 ) -> DataFrame:
     """Cell-relation interpolation strategy: snap each point to its low
-    corner, ONE equi-join against :func:`build_cell_relation`'s output, and
-    a row-local unrolled weighted sum over the 2^d in-row corner values.
+    corner's axis indices (``_loi_``), ONE equi-join on them against
+    ``cells`` (a :func:`build_cell_relation` output over the same
+    ``axis_arrays``, possibly persisted), and a row-local unrolled weighted
+    sum over the 2^d in-row corner values. ``measures`` defaults to every
+    measure the relation carries.
 
     vs the corner join: no 2^d point explode and no per-point group-by —
     the point stream crosses exactly one exchange at 1× width, so for the
     production regime (points ≫ slab, or repeated queries against one
-    slab via ``cells=``) this is the cheapest relational plan. The build
+    persisted relation) this is the cheapest relational plan. The build
     itself costs d slab-sized window shuffles, so for one-shot queries
     with slab ≫ points the corner join still wins — measured crossover in
     SCALE.md. Duplicate point rows are PRESERVED (fused-path semantics;
-    the corner join's final group-by would merge them).
-
-    Pass ``cells`` to reuse a prebuilt (possibly persisted) cell relation;
-    ``grid_df`` may then be None. Requires a dense slab (see
-    :func:`build_cell_relation`).
+    the corner join's final group-by would merge them). Points that are
+    out of bounds, or whose cell the relation lacks, get ``fill_value``.
     """
     if measures is None:
-        if grid_df is not None:
-            measures = [c for c, _ in grid_df.dtypes if c not in axes]
-        elif cells is not None:
-            measures = [
-                c[len("_cells_"):] for c in cells.columns if c.startswith("_cells_")
-            ]
-        else:
-            raise ValueError("pass grid_df or a prebuilt cells relation")
-    if axis_arrays is None:
-        if grid_df is None:
-            raise ValueError("axis_arrays is required when grid_df is None")
-        axis_arrays = _axis_arrays(grid_df, axes)
-    arrays = axis_arrays
+        measures = [c[len("_cells_"):] for c in cells.columns if c.startswith("_cells_")]
     d = len(axes)
     _enable_subset_copartition(points_df.sparkSession)
-    if cells is None:
-        cells = build_cell_relation(grid_df, axes, measures, fill_value, arrays)
-
-    dense_bound = int(np.prod([len(arrays[ax]) for ax in axes]))
-    # the cell relation is 2^d× wider per row than the raw slab — scale the
-    # broadcast cutoff down accordingly; above it, same hash-build logic as
-    # the corner join (cells build side, point stream probes), with the
-    # per-task ceiling also divided by 2^d: a hash build cannot spill, and
-    # an ungated hint OOMed the build at a 96M-cell relation (100^4 probe,
-    # 32 shuffle partitions → ~3M × 2^d-wide rows per task). Beyond the
-    # ceiling AQE picks the join; sort-merge spills instead of dying.
-    if dense_bound <= _BROADCAST_GRID_MAX_ROWS // (2**d):
-        cells = F.broadcast(cells)
-    elif _cells_hash_join_safe(dense_bound, d, points_df.sparkSession):
-        cells = cells.hint("SHUFFLE_HASH")
+    dense_bound = int(np.prod([len(axis_arrays[ax]) for ax in axes]))
+    cells = _hint_build_side(cells, dense_bound, 2**d)
 
     point_cols = points_df.columns
-    # join on the integer axis-index keys when the relation carries them
-    # (built with all axes inside the literal bound): int keys avoid the
-    # NormalizeFloatingNumbers wrapper on join requirements, so a persisted
-    # relation's build partitioning AND ordering are reused as-is — no
-    # cells-side Exchange and no cells-side Sort in the per-query plan.
-    int_keys = all(f"_ki_{ax}" in cells.columns for ax in axes)
-    pts = _snap_columns(points_df, axes, arrays, with_index=int_keys)
-    if int_keys:
-        cond = reduce(
-            lambda a, b: a & b,
-            [pts[f"_loi_{ax}"] == cells[f"_ki_{ax}"] for ax in axes],
-        )
-    else:
-        cond = reduce(
-            lambda a, b: a & b,
-            [pts[f"_lo_{ax}"] == cells[f"_k_{ax}"] for ax in axes],
-        )
+    # int keys avoid the NormalizeFloatingNumbers wrapper on join
+    # requirements, so a persisted relation's build partitioning AND
+    # ordering are reused as-is — no cells-side Exchange and no cells-side
+    # Sort in the per-query plan.
+    pts = _snap_columns(points_df, axes, axis_arrays)
+    cond = reduce(
+        lambda a, b: a & b,
+        [pts[f"_loi_{ax}"] == cells[f"_ki_{ax}"] for ax in axes],
+    )
     joined = pts.join(cells, on=cond, how="left")
 
     out_cols = list(point_cols)

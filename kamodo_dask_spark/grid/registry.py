@@ -100,10 +100,12 @@ class KamodoSpark(dict):
             self._slab = self.df.sparkSession.sparkContext.broadcast(collected)
 
         # "cell" = the registry's REPEATED-query plan (SCALE.md): reshape
-        # the slab into its cell relation ONCE at registration, persist it,
-        # and answer every query with a single equi-join — no slab re-scan,
-        # no 2^d explode, per query. Built over all measures in one pass so
-        # k measures share the d window shuffles.
+        # the slab into its cell relation (int `_ki_*` keys + `_cells_*`
+        # corner arrays) ONCE at registration, persist it, and answer every
+        # query with a single int-key equi-join against it (`_interpolate`
+        # passes it to interpolate_points_cells) — no slab re-scan, no 2^d
+        # explode, per query. Built over all measures in one pass so k
+        # measures share the d window shuffles.
         self._cells = None
         if self.strategy == "cell":
             # build_cell_relation runs its own count + distinct-node check
@@ -147,13 +149,8 @@ class KamodoSpark(dict):
                 points_df, self.axes, measures, self._slab, self.fill_value
             )
         return interpolate_points_cells(
-            None,
-            points_df,
-            self.axes,
-            measures,
+            self._cells, points_df, self.axes, self._axis_arrays, measures,
             self.fill_value,
-            axis_arrays=self._axis_arrays,
-            cells=self._cells,
         )
 
     def _bind(self, name: str, deps: list[str], units: str, expr: str | None = None) -> None:

@@ -372,8 +372,8 @@ def test_cell_strategy_null_node_and_fill(spark):
 
 
 def test_cell_relation_reuse_and_dense_requirement(spark, grid_df):
-    """A prebuilt cell relation answers repeated queries without rebuilding
-    (grid_df=None), and a non-dense slab refuses the cell path loudly."""
+    """A prebuilt cell relation answers repeated queries without rebuilding,
+    and a non-dense slab refuses the cell path loudly."""
     from kamodo_dask_spark.grid.interpolate import (
         _axis_arrays,
         build_cell_relation,
@@ -392,7 +392,7 @@ def test_cell_relation_reuse_and_dense_requirement(spark, grid_df):
         got = {
             r["point_id"]: r["v"]
             for r in interpolate_points_cells(
-                None, _points_df(spark), AXES, axis_arrays=arrays, cells=cells
+                cells, _points_df(spark), AXES, arrays
             ).collect()
         }
         for p, e in zip(pts, exp):
@@ -500,6 +500,35 @@ def test_cell_relation_rejects_duplicate_masked_hole(spark):
     arrays = {"x1": np.array([0.0, 1.0]), "x2": np.array([0.0, 1.0])}
     with pytest.raises(ValueError, match="distinct"):
         build_cell_relation(grid, ("x1", "x2"), ["val"], axis_arrays=arrays)
+
+
+def test_grid_node_missing_from_axis_arrays_fills_its_cells(spark):
+    """A grid node absent from ``axis_arrays`` (here the node x1=2 where the
+    arrays say 2.5) corners no interpolated cell: points in the two x1
+    cells it bounds get ``fill_value`` from the cell strategy, as from the
+    corner join (whose coverage sum misses that node), while cells away
+    from it interpolate normally."""
+    from kamodo_dask_spark.grid.interpolate import build_cell_relation
+
+    rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0, 2.0, 3.0) for x2 in (0.0, 1.0)]
+    grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
+    arrays = {"x1": np.array([0.0, 1.0, 2.5, 3.0]), "x2": np.array([0.0, 1.0])}
+    axes = ("x1", "x2")
+    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays)
+    assert cells.count() == 1  # only the cell x1 in [0, 1]
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.5), (1, 1.5, 0.5), (2, 2.7, 0.5)],
+        "point_id long, x1 double, x2 double",
+    )
+    for strategy in ("cell", "corner"):
+        got = {
+            r["point_id"]: r["val"]
+            for r in interpolate_points(
+                grid, pts, axes, ["val"], fill_value=-7.0,
+                axis_arrays=arrays, strategy=strategy,
+            ).collect()
+        }
+        assert got == {0: pytest.approx(1.5), 1: -7.0, 2: -7.0}, strategy
 
 
 def test_gridded_eval_empty_axis_list_raises(spark, grid_df):

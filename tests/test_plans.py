@@ -419,14 +419,13 @@ def test_cell_strategy_point_side_zero_exchange(spark):
         ((F.col("id") % 61) / 16.0).alias("x3"),
         ((F.col("id") % 59) / 16.0).alias("x4"),
     )
-    out = interpolate_points_cells(
-        None, pts, ("x1", "x2", "x3", "x4"), ["val"], axis_arrays=arrays, cells=cells
-    )
+    out = interpolate_points_cells(cells, pts, ("x1", "x2", "x3", "x4"), arrays, ["val"])
     plan = executed_plan(out)
     assert "BroadcastHashJoin" in plan, plan
     # every hash exchange must belong to the CELL-BUILD subtree (window
-    # passes partition on the _ki_*/_k_* cell keys); the point stream itself
-    # is never shuffled and nothing aggregates per point
+    # passes partition on the _ki_* keys of the axes already passed and the
+    # _k_* coordinates of the rest); the point stream itself is never
+    # shuffled and nothing aggregates per point
     for line in plan.splitlines():
         if "Exchange hashpartitioning" in line:
             assert "_ki_x" in line or "_k_x" in line, f"point-side exchange: {line}\n{plan}"
@@ -512,9 +511,7 @@ def test_cell_strategy_persisted_relation_not_reexchanged(spark):
             ((F.col("id") % 389) / 9.73).alias("x3"),
             ((F.col("id") % 107) / 9.91).alias("x4"),
         )
-        out = interpolate_points_cells(
-            None, pts, axes, ["val"], axis_arrays=arrays, cells=cells
-        )
+        out = interpolate_points_cells(cells, pts, axes, arrays, ["val"])
         plan = executed_plan(out)
         assert "ShuffledHashJoin" in plan, plan
         above_cache = plan.split("InMemoryRelation")[0]
@@ -576,16 +573,14 @@ def test_cell_join_hash_hint_gated_on_per_task_build_rows(spark):
         # broadcast cutoff, under per_task_max * shuffle.partitions
         arrays_mid = {ax: np.arange(20.0) for ax in axes}
         plan_mid = (
-            interpolate_points_cells(None, pts, axes, ["val"],
-                                     axis_arrays=arrays_mid, cells=cells)
+            interpolate_points_cells(cells, pts, axes, arrays_mid, ["val"])
             ._jdf.queryExecution().sparkPlan().toString()
         )
         assert "ShuffledHashJoin" in plan_mid, plan_mid
         # huge claim: 100^4 = 100M dense bound — beyond the ceiling, no hint
         arrays_big = {ax: np.arange(100.0) for ax in axes}
         plan_big = (
-            interpolate_points_cells(None, pts, axes, ["val"],
-                                     axis_arrays=arrays_big, cells=cells)
+            interpolate_points_cells(cells, pts, axes, arrays_big, ["val"])
             ._jdf.queryExecution().sparkPlan().toString()
         )
         assert "ShuffledHashJoin" not in plan_big, plan_big
@@ -616,9 +611,7 @@ def test_cell_smj_regime_elides_cells_side_sort(spark, monkeypatch):
     hash-safe ceiling is sorted within its build partitions on the INTEGER
     axis-index keys — no NormalizeFloatingNumbers wrapper, so the cached
     ordering satisfies the join requirement outright and each point query
-    plans exactly ONE Sort (the point side). With the legacy double keys
-    the cells side re-sorted per query (cheap over ordered runs, but
-    present)."""
+    plans exactly ONE Sort (the point side)."""
     import numpy as np
     from pyspark.sql import functions as F
 
@@ -654,9 +647,7 @@ def test_cell_smj_regime_elides_cells_side_sort(spark, monkeypatch):
         prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
         spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
         try:
-            out = interpolate_points_cells(
-                None, pts, axes, ["val"], axis_arrays=arrays_big, cells=cells
-            )
+            out = interpolate_points_cells(cells, pts, axes, arrays_big, ["val"])
             plan = executed_plan(out)
         finally:
             spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)

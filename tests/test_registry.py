@@ -210,6 +210,49 @@ def test_cell_registry_use_after_release_raises_clearly(spark):
         reg["rho"](pts)
 
 
+def test_cell_registry_on_axis_past_literal_bound_matches_nlinear_interp(spark):
+    """A cell registry over an axis longer than the literal-array snap bound
+    (its points snap through the searchsorted UDF) interpolates exactly as
+    ``nlinear_interp`` at interior, edge and out-of-bounds points, and its
+    persisted relation holds the int cell keys and the corner arrays only."""
+    import numpy as np
+
+    from kamodo_dask_spark.grid.interpolate import _LITERAL_AXIS_MAX, nlinear_interp
+
+    axes_v = {
+        "time": np.arange(_LITERAL_AXIS_MAX + 52, dtype=np.float64) * 0.5,
+        "lon": np.array([-10.0, 0.0, 25.0]),
+    }
+    axes = tuple(axes_v)
+    mesh = np.meshgrid(*axes_v.values(), indexing="ij")
+    values = np.sin(mesh[0] / 7.0) * 3.0 + mesh[1] ** 2 / 10.0
+    rows = list(zip(*(m.ravel().tolist() for m in mesh), values.ravel().tolist()))
+    grid = spark.createDataFrame(rows, "time double, lon double, rho double")
+    t, lon = axes_v["time"], axes_v["lon"]
+    pts_np = np.array(
+        [
+            [1.3, -5.0], [517.25, 12.5], [1049.75, 24.0], [600.0, 0.0],  # interior
+            [t[0], lon[0]], [t[-1], lon[-1]], [t[-1], 3.0], [t[1024], lon[-1]],  # edges
+            [t[0] - 0.1, 0.0], [10.0, lon[-1] + 1.0], [t[-1] + 0.5, 0.0],  # oob
+        ]
+    )
+    pts = spark.createDataFrame(
+        [(i, *map(float, p)) for i, p in enumerate(pts_np)],
+        "point_id long, time double, lon double",
+    )
+    want = nlinear_interp(list(axes_v.values()), values, pts_np, -1.0)
+
+    reg = KamodoSpark(grid, axes=axes, fill_value=-1.0, strategy="cell")
+    try:
+        assert reg._cells.columns == ["_ki_time", "_ki_lon", "_cells_rho"]
+        got = dict(reg["rho"](pts).select("point_id", "rho").collect())
+        np.testing.assert_allclose(
+            [got[i] for i in range(len(pts_np))], want, rtol=1e-12, atol=1e-12
+        )
+    finally:
+        reg.release()
+
+
 def test_broadcast_registry_use_after_release_raises_clearly(spark):
     """Querying a released broadcast-strategy registry raises the same
     RuntimeError as the cell strategy, while a frame returned before the

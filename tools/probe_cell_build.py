@@ -130,9 +130,9 @@ def main():
     best = float("inf")
     for _ in range(2):
         t0 = time.perf_counter()
-        interpolate_points_cells(
-            None, pts, AXES, ["val"], axis_arrays=arrays, cells=cells
-        ).write.format("noop").mode("overwrite").save()
+        interpolate_points_cells(cells, pts, AXES, arrays, ["val"]).write.format(
+            "noop"
+        ).mode("overwrite").save()
         best = min(best, time.perf_counter() - t0)
     print(f"cell query 1M pts (persisted): {best:.2f} s")
 
