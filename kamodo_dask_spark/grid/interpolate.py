@@ -34,6 +34,7 @@ from __future__ import annotations
 
 from functools import reduce
 from itertools import product
+from operator import add, and_, mul
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -195,12 +196,14 @@ def _snap_columns(
     """Append ``_lo/_hi/_frac`` and the low-corner axis index ``_loi``
     (int) per axis, and an ``_oob`` flag, to the points.
 
-    Small axes (the normal dense-grid case) snap JVM-side against a literal
-    sorted array — stays inside whole-stage codegen, zero joins, zero
-    shuffles. Oversized axes fall back to an Arrow-batched
-    ``np.searchsorted`` (O(log n) per point). ``_loi_{ax}`` is the cell
-    strategy's join key; the corner join never reads it and Catalyst
-    prunes it from that plan.
+    Small axes (the normal dense-grid case) snap JVM-side against the
+    sorted axis array, shipped as ONE float64 literal — zero joins, zero
+    shuffles. The count is ``F.aggregate`` (``ArrayAggregate``, a
+    ``CodegenFallback`` expression), so it evaluates interpreted inside the
+    point stage, O(n) per point. Oversized axes fall back to an
+    Arrow-batched ``np.searchsorted`` (O(log n) per point). ``_loi_{ax}``
+    is the cell strategy's join key; the corner join never reads it and
+    Catalyst prunes it from that plan.
     """
     big = [ax for ax in axes if len(arrays[ax]) > _LITERAL_AXIS_MAX]
     oob = F.lit(False)
@@ -210,16 +213,13 @@ def _snap_columns(
         x = _as_double(ax, points)
         oob = oob | (x < float(arr[0])) | (x > float(arr[-1])) | x.isNull()
         if ax not in big:
-            n = len(arr)
-            lit_arr = F.lit([float(v) for v in arr])
+            lit_arr = F.lit(np.asarray(arr, dtype=np.float64))
             cnt = F.aggregate(
-                lit_arr,
-                F.lit(0),
-                lambda acc, v: acc + F.when(v <= x, F.lit(1)).otherwise(F.lit(0)),
+                lit_arr, F.lit(0), lambda acc, v: acc + F.when(v <= x, 1).otherwise(0)
             )
-            idx = F.least(F.greatest(cnt - F.lit(1), F.lit(0)), F.lit(n - 2))
-            lo = F.element_at(lit_arr, idx + F.lit(1))
-            hi = F.element_at(lit_arr, idx + F.lit(2))
+            idx = F.least(F.greatest(cnt - 1, F.lit(0)), F.lit(len(arr) - 2))
+            lo = F.element_at(lit_arr, idx + 1)
+            hi = F.element_at(lit_arr, idx + 2)
             frac = (x - lo) / (hi - lo)
             df = df.withColumns(
                 {f"_lo_{ax}": lo, f"_hi_{ax}": hi, f"_frac_{ax}": frac, f"_loi_{ax}": idx}
@@ -273,6 +273,20 @@ def _snap_udf(
         for part in parts:
             packed = packed.withColumn(f"_{part}_{ax}", F.col(f"_snap._{part}_{ax}"))
     return packed.drop("_snap")
+
+
+def _filled(m: str, fill_value: float) -> F.Column:
+    """Measure ``m`` as a grid-node value of both relational strategies:
+    double, with NaN AND NULL → ``fill_value`` before interpolation
+    (kamodo_dask.py:334). ``nanvl`` alone passes SQL NULL through (NULL is
+    not NaN), which would zero the corner join's coverage sum and hard-fill
+    the whole point — while the fused path (``np.nan_to_num`` after
+    ``toPandas``, NULL→NaN) blends ``fill_value`` at just that node.
+    Coalescing to NaN first keeps the strategies identical."""
+    return F.nanvl(
+        F.coalesce(F.col(m).cast("double"), F.lit(float("nan"))),
+        F.lit(float(fill_value)),
+    )
 
 
 def _collect_dense_slab(
@@ -413,9 +427,11 @@ def interpolate_points(
       slab; a :class:`~kamodo_dask_spark.grid.registry.KamodoSpark`
       registry collects it once, at build.
     - ``"corner"``: force the relational corner join (J1 + J2) — snap, 2^d
-      corner explode, equi-join, group-by. The grid never leaves the
-      executors; this is the 100 TB path for one-shot queries and partial
-      slabs.
+      corner explode (one ``explode(sequence(0, 2^d − 1))`` whose bits pick
+      each axis's node and weight factor, so the plan grows with d, not
+      2^d), equi-join, group-by with one coverage sum for every measure.
+      The grid never leaves the executors; this is the 100 TB path for
+      one-shot queries and partial slabs.
     - ``"cell"``: :func:`interpolate_points_cells` — reshape the (dense)
       slab into its cell relation (d window passes), then one equi-join
       per query with a row-local weighted sum: the point stream crosses a
@@ -455,66 +471,58 @@ def interpolate_points(
     point_cols = points_df.columns
     pts = _snap_columns(points_df, axes, arrays)
 
-    # Explode each point into its 2^d corners with multilinear weights.
-    corners = []
-    for bits in product((0, 1), repeat=d):
-        fields, w = [], F.lit(1.0)
-        for k, b in enumerate(bits):
-            ax = axes[k]
-            fields.append((F.col(f"_hi_{ax}") if b else F.col(f"_lo_{ax}")).alias(f"_k_{ax}"))
-            fr = F.col(f"_frac_{ax}")
-            w = w * (fr if b else (F.lit(1.0) - fr))
-        corners.append(F.struct(*fields, w.alias("_w")))
-    exploded = pts.withColumn("_c", F.explode(F.array(*corners)))
+    # Explode each point into its 2^d corners: bit d-1-k of the corner index
+    # picks axis k's high node and weight frac (else its low node and
+    # 1 - frac), so axis 1 is the most significant bit.
+    corner = F.col("_c")
+    high = [corner.bitwiseAND(1 << (d - 1 - k)) != 0 for k in range(d)]
+    exploded = pts.withColumn("_c", F.explode(F.sequence(F.lit(0), F.lit(2**d - 1))))
     exploded = exploded.select(
         *point_cols,
         "_oob",
-        *[F.col(f"_c._k_{ax}").alias(f"_k_{ax}") for ax in axes],
-        F.col("_c._w").alias("_w"),
+        *[
+            F.when(h, F.col(f"_hi_{ax}")).otherwise(F.col(f"_lo_{ax}")).alias(f"_k_{ax}")
+            for h, ax in zip(high, axes)
+        ],
+        reduce(
+            mul,
+            [
+                F.when(h, F.col(f"_frac_{ax}")).otherwise(1.0 - F.col(f"_frac_{ax}"))
+                for h, ax in zip(high, axes)
+            ],
+        ).alias("_w"),
     )
 
     # Grid keyed by float64 corner coordinates (exact values — they came from
-    # the grid itself, so float equality is safe). NaN AND NULL measures
-    # become fill_value BEFORE interpolation (kamodo_dask.py:334): nanvl
-    # alone passes SQL NULL through (NULL is not NaN), which would zero the
-    # coverage sum and hard-fill the whole point — while the fused path
-    # (np.nan_to_num after toPandas, NULL→NaN) blends fill_value at just
-    # that node. coalesce-to-NaN first keeps the two strategies identical.
+    # the grid itself, so float equality is safe), measures filled.
     grid_keyed = grid_df.select(
         *[_as_double(ax, grid_df).alias(f"_k_{ax}") for ax in axes],
-        *[
-            F.nanvl(
-                F.coalesce(F.col(m).cast("double"), F.lit(float("nan"))),
-                F.lit(float(fill_value)),
-            ).alias(m)
-            for m in measures
-        ],
+        *[_filled(m, fill_value).alias(m) for m in measures],
     )
     grid_keyed = _hint_build_side(grid_keyed, dense_bound, 1)
     joined = exploded.join(grid_keyed, on=[f"_k_{ax}" for ax in axes], how="left")
 
-    aggs = []
-    for m in measures:
-        aggs.append(F.sum(F.col("_w") * F.col(m)).alias(f"_v_{m}"))
-        aggs.append(F.sum(F.when(F.col(m).isNotNull(), F.col("_w"))).alias(f"_cov_{m}"))
-    grouped = joined.groupBy(*point_cols, "_oob").agg(*aggs)
+    # Coverage = the weight of the corners that found a grid row. A matched
+    # row carries every measure already filled (never NULL), so one sum
+    # serves every measure.
+    grouped = joined.groupBy(*point_cols, "_oob").agg(
+        F.sum(F.when(F.col(measures[0]).isNotNull(), F.col("_w"))).alias("_cov"),
+        *[F.sum(F.col("_w") * F.col(m)).alias(f"_v_{m}") for m in measures],
+    )
 
     # fill_value for out-of-bounds points AND for points whose corner support
     # is incomplete (non-dense slab) — the latter turns the reference's
-    # silent reshape corruption into defined behavior.
-    out_cols = list(point_cols)
-    for m in measures:
-        # coalesce: zero corner support (all 2^d grid rows missing) leaves the
-        # conditional sum NULL — without it the when() below would propagate
-        # NULL instead of fill_value for those points.
-        cov = F.coalesce(F.col(f"_cov_{m}"), F.lit(0.0))
-        covered = F.abs(cov - F.lit(1.0)) < F.lit(1e-9)
-        out_cols.append(
-            F.when(F.col("_oob") | ~covered, F.lit(float(fill_value)))
-            .otherwise(F.col(f"_v_{m}"))
-            .alias(m)
-        )
-    return grouped.select(*out_cols)
+    # silent reshape corruption into defined behavior. coalesce: zero corner
+    # support (all 2^d grid rows missing) leaves the sum NULL.
+    covered = F.abs(F.coalesce(F.col("_cov"), F.lit(0.0)) - 1.0) < 1e-9
+    filled = F.col("_oob") | ~covered
+    return grouped.select(
+        *point_cols,
+        *[
+            F.when(filled, float(fill_value)).otherwise(F.col(f"_v_{m}")).alias(m)
+            for m in measures
+        ],
+    )
 
 
 def _enable_subset_copartition(spark) -> None:
@@ -606,15 +614,7 @@ def build_cell_relation(
 
     cells = grid_df.select(
         *[_as_double(ax, grid_df).alias(f"_k_{ax}") for ax in axes],
-        *[
-            F.array(
-                F.nanvl(
-                    F.coalesce(F.col(m).cast("double"), F.lit(float("nan"))),
-                    F.lit(float(fill_value)),
-                )
-            ).alias(f"_cells_{m}")
-            for m in measures
-        ],
+        *[F.array(_filled(m, fill_value)).alias(f"_cells_{m}") for m in measures],
     )
     # count AND distinct-coordinate count in one job: a duplicated node
     # masking a missing one passes a bare row count (and validate_dense's
@@ -638,7 +638,7 @@ def build_cell_relation(
     # b_1*2^(d-1) + ... + b_d (axis 1 most significant)
     for ax in reversed(axes):
         w = Window.partitionBy(*[key[a] for a in axes if a != ax]).orderBy(key[ax])
-        arr = F.lit([float(v) for v in arrays[ax]])
+        arr = F.lit(np.asarray(arrays[ax], dtype=np.float64))
         i = F.col("_i")
         in_place = (F.get(arr, i) == F.col(key[ax])) & (F.get(arr, i + 1) == F.col("_nxt"))
         cells = (
@@ -751,26 +751,24 @@ def interpolate_points_cells(
     # ordering are reused as-is — no cells-side Exchange and no cells-side
     # Sort in the per-query plan.
     pts = _snap_columns(points_df, axes, axis_arrays)
-    cond = reduce(
-        lambda a, b: a & b,
-        [pts[f"_loi_{ax}"] == cells[f"_ki_{ax}"] for ax in axes],
-    )
+    cond = reduce(and_, [pts[f"_loi_{ax}"] == cells[f"_ki_{ax}"] for ax in axes])
     joined = pts.join(cells, on=cond, how="left")
 
+    # the 2^d corner weights, once per query for every measure: corner i's
+    # bit d-1-k picks frac (else 1 - frac) of axis k, axis 1 most significant
+    weights = [F.lit(1.0)]
+    for ax in axes:
+        fr = F.col(f"_frac_{ax}")
+        weights = [w * t for w in weights for t in (1.0 - fr, fr)]
+    fill = F.lit(float(fill_value))
     out_cols = list(point_cols)
     for m in measures:
-        total = F.lit(0.0)
-        for i in range(2**d):
-            w = F.lit(1.0)
-            for k, ax in enumerate(axes):
-                bit = (i >> (d - 1 - k)) & 1
-                fr = F.col(f"_frac_{ax}")
-                w = w * (fr if bit else (F.lit(1.0) - fr))
-            total = total + F.element_at(F.col(f"_cells_{m}"), i + 1) * w
+        vals = F.col(f"_cells_{m}")
+        total = reduce(
+            add, [F.element_at(vals, i + 1) * w for i, w in enumerate(weights)], F.lit(0.0)
+        )
         out_cols.append(
-            F.when(F.col("_oob"), F.lit(float(fill_value)))
-            .otherwise(F.coalesce(total, F.lit(float(fill_value))))
-            .alias(m)
+            F.when(F.col("_oob"), fill).otherwise(F.coalesce(total, fill)).alias(m)
         )
     return joined.select(*out_cols)
 
@@ -790,16 +788,16 @@ def _mesh_points(
     parallelizes across the range, instead of a chain of one-row
     ``crossJoin``s (k−1 BroadcastNestedLoopJoins, one partition, and a plan
     the catalog's no-BNLJ sweep would reject)."""
-    per_axis: list[list[float]] = []
+    per_axis: list[np.ndarray] = []
     for ax in axes:
         vals = coords.get(ax)
         if vals is None:
-            vals_list = [float(v) for v in arrays[ax]]
+            vals = arrays[ax]
         elif np.isscalar(vals) or hasattr(vals, "timestamp"):
-            vals_list = [coerce_axis_value(vals)]
+            vals = [coerce_axis_value(vals)]
         else:
-            vals_list = [coerce_axis_value(v) for v in vals]
-        per_axis.append(vals_list)
+            vals = [coerce_axis_value(v) for v in vals]
+        per_axis.append(np.asarray(vals, dtype=np.float64))
 
     sizes = [len(v) for v in per_axis]
     empty = [ax for ax, s in zip(axes, sizes) if s == 0]
@@ -808,10 +806,10 @@ def _mesh_points(
         raise ValueError(f"empty coordinate list for axis {empty[0]!r}")
     n_mesh = int(np.prod(sizes))
     cols, stride = [], n_mesh
-    for ax, vals_list, size in zip(axes, per_axis, sizes):
+    for ax, vals, size in zip(axes, per_axis, sizes):
         stride //= size
         idx = ((F.col("id") / stride).cast("long") % size + 1).cast("int")
-        cols.append(F.element_at(F.lit(vals_list), idx).alias(ax))
+        cols.append(F.element_at(F.lit(vals), idx).alias(ax))
     return spark.range(n_mesh).select(*cols)
 
 

@@ -268,6 +268,36 @@ def test_null_grid_cell_strategies_agree(spark):
     assert results["corner"] == pytest.approx(results["auto"])
 
 
+def test_corner_two_measures_share_one_coverage_sum(spark):
+    """The corner join sums coverage once for every measure. Over a partial
+    slab, a missing node fills BOTH measures in the cells it bounds, while a
+    NULL value of one measure blends fill_value at that node for that
+    measure only — the node still covers its cell."""
+    rows = []
+    for x1 in (0.0, 1.0, 2.0):
+        for x2 in (0.0, 1.0):
+            if (x1, x2) == (2.0, 1.0):
+                continue  # missing node: bounds the cell x1 in [1, 2]
+            b = None if (x1, x2) == (0.0, 1.0) else 10 * x1 - x2
+            rows.append((x1, x2, x1 + 2 * x2, b))
+    grid = spark.createDataFrame(rows, "x1 double, x2 double, a double, b double")
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.5), (1, 1.5, 0.5)], "point_id long, x1 double, x2 double"
+    )
+    arrays = {"x1": np.array([0.0, 1.0, 2.0]), "x2": np.array([0.0, 1.0])}
+    got = {
+        r["point_id"]: (r["a"], r["b"])
+        for r in interpolate_points(
+            grid, pts, ("x1", "x2"), ["a", "b"], fill_value=7.0,
+            axis_arrays=arrays, strategy="corner",
+        ).collect()
+    }
+    # cell x1 in [0, 1]: a = 0.25*(0 + 2 + 1 + 3); b's NULL node (0, 1)
+    # contributes 7: b = 0.25*(0 + 7 + 10 + 9)
+    assert got[0] == (pytest.approx(1.5), pytest.approx(6.5))
+    assert got[1] == (7.0, 7.0)
+
+
 def test_duplicate_slab_row_not_silently_reshaped(spark):
     """A duplicated grid row compensating a missing one passes the row-count
     check; the duplicate check must reject the dense collect (falling back
@@ -417,7 +447,7 @@ def test_cell_strategy_preserves_duplicate_points(spark, grid_df):
     assert len({r["v"] for r in out}) == 1
 
 
-@pytest.mark.parametrize("seed,d", [(1, 2), (2, 3), (3, 4)])
+@pytest.mark.parametrize("seed,d", [(1, 2), (2, 3), (3, 4), (4, 6)])
 def test_cell_and_corner_agree_on_random_grids(spark, seed, d):
     """Randomized cross-strategy equivalence: non-uniform axis spacings,
     NaN/NULL-poked node values, interior + boundary + OOB points — the cell
