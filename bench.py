@@ -267,9 +267,9 @@ def _micro_timed(spark, name: str, body) -> float:
     """Time ONE micro invocation under its own job group and record the
     group's statusTracker job count in ``_MICRO_JOBS[name]`` (max across
     invocations, matching the catalog entries' ``_timed_run``). Only the
-    timed window is counted — setup/build jobs (fixture writes, the
-    cell-relation build) run under the caller's group and stay excluded,
-    so the count prices exactly the jobs inside the measured wall."""
+    timed window is counted — setup jobs (fixture writes) run under the
+    caller's group and stay excluded, so the count prices exactly the jobs
+    inside the measured wall."""
     _MICRO_SEQ[0] += 1
     gid = f"bench-micro:{name}:{_MICRO_SEQ[0]}"
     tracker = spark.sparkContext.statusTracker()
@@ -420,56 +420,6 @@ def keyless_asof_micro(spark, n_right: int = 1_000_000, n_left: int = 100_000) -
         out.write.format("noop").mode("overwrite").save()
 
     return _micro_timed(spark, "keyless_asof_1m_rows", _body)
-
-
-def cell_reuse_micro(spark, n_pts: int = 100_000) -> float:
-    """Cell-relation strategy in its amortized regime: the 1.23M-row probe
-    slab reshaped once (build+persist NOT timed — that cost is the
-    documented upfront trade, SCALE.md), then one n_pts-point query through
-    the single-equi-join plan. Tracks the per-query number the registry's
-    repeated-lookup pattern actually pays; compare with interp_4d_corner
-    (same slab/points through the corner join, build amortized nowhere)."""
-    import numpy as np
-
-    from kamodo_dask_spark.grid.interpolate import (
-        build_cell_relation,
-        interpolate_points_cells,
-    )
-    from pyspark.sql import functions as F
-
-    dims = (50, 50, 41, 12)
-    d2, d3, d4 = dims[1], dims[2], dims[3]
-    grid = spark.range(0, 50 * 50 * 41 * 12, 1, 32).select(
-        ((F.col("id") / (d2 * d3 * d4)).cast("long") % dims[0]).cast("double").alias("x1"),
-        ((F.col("id") / (d3 * d4)).cast("long") % d2).cast("double").alias("x2"),
-        ((F.col("id") / d4).cast("long") % d3).cast("double").alias("x3"),
-        (F.col("id") % d4).cast("double").alias("x4"),
-    ).withColumn(
-        "val",
-        F.col("x1") + 2 * F.col("x2") + 3 * F.col("x3") + 4 * F.col("x4"),
-    )
-    arrays = {f"x{i + 1}": np.arange(float(n)) for i, n in enumerate(dims)}
-    axes = ("x1", "x2", "x3", "x4")
-    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays).persist()
-    cells.count()
-    pts = spark.range(0, n_pts, 1, 32).select(
-        F.col("id").alias("point_id"),
-        ((F.col("id") % 479) / 9.81).alias("x1"),
-        ((F.col("id") % 467) / 9.53).alias("x2"),
-        ((F.col("id") % 389) / 9.73).alias("x3"),
-        ((F.col("id") % 107) / 9.91).alias("x4"),
-    )
-    def _body():
-        out = interpolate_points_cells(cells, pts, axes, arrays, ["val"])
-        out.write.format("noop").mode("overwrite").save()
-
-    try:
-        best = float("inf")
-        for _ in range(2):
-            best = min(best, _micro_timed(spark, "cell_reuse_100k_points", _body))
-        return best
-    finally:
-        cells.unpersist()
 
 
 def _calibration(spark) -> dict:
@@ -637,8 +587,6 @@ def run() -> dict:
     timings["keyless_asof_1m_rows"] = round(
         min(keyless_asof_micro(spark) for _ in range(2)), 3
     )
-    # already best-of-2 internally (build excluded — SCALE.md documents it)
-    timings["cell_reuse_100k_points"] = round(cell_reuse_micro(spark), 3)
     # merge the micros' job-group counts so the regression tracker prices
     # their sched_job_s swing like any catalog entry (judge r11 ask #1)
     jobs.update(_MICRO_JOBS)

@@ -19,9 +19,12 @@ kamodo_dask/kamodo_dask.py:335-341). One entry point,
    ``groupBy(point).sum(weight*value)`` (J2). The grid never leaves the
    executors — this is the 100 TB path.
 
-3. ``"cell"`` — **cell relation**: reshape the dense slab into one row per
-   cell carrying its 2^d corner values, then one equi-join per query
-   (:func:`build_cell_relation`, :func:`interpolate_points_cells`).
+3. ``"block"`` — **block relation**: reshape the dense slab into one row
+   per interval of its longest axis, holding that interval's two bounding
+   slices as dense arrays (:func:`_block_relation`), then one ``cogroup``
+   per query that runs the broadcast path's NumPy kernel on each interval
+   (:func:`_interpolate_blocks`). The repeated-query plan of a registry
+   whose slab should not live on the driver.
 
 ``"auto"`` picks broadcast for slabs of at most :data:`_FUSED_SLAB_MAX_ROWS`
 rows and the corner join above; :class:`~kamodo_dask_spark.grid.registry.
@@ -34,7 +37,7 @@ from __future__ import annotations
 
 from functools import reduce
 from itertools import product
-from operator import add, and_, mul
+from operator import mul
 
 import numpy as np
 from pyspark.sql import DataFrame, functions as F
@@ -47,18 +50,17 @@ from kamodo_dask_spark.grid.model import DEFAULT_AXES, grid_axes
 _LITERAL_AXIS_MAX = 2048
 
 #: A dense slab with at most this many rows (= product of axis cardinalities)
-#: gets an explicit broadcast hint on the corner join (a cell relation: this
-#: many / 2^d), see :func:`_hint_build_side`. ~1M rows of (d doubles +
-#: measures) is well under the 8GB broadcast ceiling.
+#: gets an explicit broadcast hint on the corner join, see
+#: :func:`_hint_build_side`. ~1M rows of (d doubles + measures) is well
+#: under the 8GB broadcast ceiling.
 _BROADCAST_GRID_MAX_ROWS = 1_000_000
-# Ceiling on the per-task hash-build side of a relational join: slab rows per
-# shuffle partition (a cell relation: this many / 2^d) above which the
-# SHUFFLE_HASH hint is NOT applied and AQE picks the join (sort-merge spills;
-# a hash build cannot).
+# Ceiling on the per-task hash-build side of the corner join: slab rows per
+# shuffle partition above which the SHUFFLE_HASH hint is NOT applied and AQE
+# picks the join (sort-merge spills; a hash build cannot).
 _HASH_BUILD_MAX_ROWS_PER_TASK = 2_000_000
 
 #: The strategies :func:`interpolate_points` and the registry accept.
-_STRATEGIES = ("auto", "broadcast", "corner", "cell")
+_STRATEGIES = ("auto", "broadcast", "corner", "block")
 
 #: ``"auto"`` broadcasts dense slabs of at most this many rows (= product of
 #: axis cardinalities) and takes the corner join above: collect the slab
@@ -202,7 +204,7 @@ def _snap_columns(
     ``CodegenFallback`` expression), so it evaluates interpreted inside the
     point stage, O(n) per point. Oversized axes fall back to an
     Arrow-batched ``np.searchsorted`` (O(log n) per point). ``_loi_{ax}``
-    is the cell strategy's join key; the corner join never reads it and
+    is the block strategy's group key; the corner join never reads it and
     Catalyst prunes it from that plan.
     """
     big = [ax for ax in axes if len(arrays[ax]) > _LITERAL_AXIS_MAX]
@@ -432,15 +434,16 @@ def interpolate_points(
       2^d), equi-join, group-by with one coverage sum for every measure.
       The grid never leaves the executors; this is the 100 TB path for
       one-shot queries and partial slabs.
-    - ``"cell"``: :func:`interpolate_points_cells` — reshape the (dense)
-      slab into its cell relation (d window passes), then one equi-join
-      per query with a row-local weighted sum: the point stream crosses a
-      single 1×-width exchange instead of 2^d-exploding and re-grouping.
-      Wins when points ≫ slab or the slab serves repeated queries (build
-      the relation once and pass it to ``interpolate_points_cells``).
+    - ``"block"``: build the (dense) slab's block relation
+      (:func:`_block_relation`, one shuffle) and answer through one
+      ``cogroup`` on the longest axis's interval, where the NumPy kernel
+      runs per interval (:func:`_interpolate_blocks`). Raises
+      ``ValueError`` when the grid is not dense. Built per call here; a
+      :class:`~kamodo_dask_spark.grid.registry.KamodoSpark` registry builds
+      and persists it once, at build.
 
     Semantics note: the corner join merges duplicate point rows in its final
-    group-by; the fused and cell paths preserve them. Include a unique
+    group-by; the fused and block paths preserve them. Include a unique
     ``point_id`` column when duplicates are possible (then all paths agree).
     """
     measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
@@ -450,11 +453,9 @@ def interpolate_points(
     dense_bound = int(np.prod(shape))
 
     resolved = _resolve_strategy(strategy, dense_bound)
-    if resolved == "cell":
-        cells = build_cell_relation(grid_df, axes, measures, fill_value, arrays)
-        return interpolate_points_cells(
-            cells, points_df, axes, arrays, measures, fill_value
-        )
+    if resolved == "block":
+        blocks = _block_relation(grid_df, axes, measures, fill_value, arrays)
+        return _interpolate_blocks(blocks, points_df, axes, arrays, measures, fill_value)
     if resolved == "broadcast":
         collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
         if collected is not None:
@@ -499,7 +500,7 @@ def interpolate_points(
         *[_as_double(ax, grid_df).alias(f"_k_{ax}") for ax in axes],
         *[_filled(m, fill_value).alias(m) for m in measures],
     )
-    grid_keyed = _hint_build_side(grid_keyed, dense_bound, 1)
+    grid_keyed = _hint_build_side(grid_keyed, dense_bound)
     joined = exploded.join(grid_keyed, on=[f"_k_{ax}" for ax in axes], how="left")
 
     # Coverage = the weight of the corners that found a grid row. A matched
@@ -525,252 +526,195 @@ def interpolate_points(
     )
 
 
-def _enable_subset_copartition(spark) -> None:
-    """Sticky, cell-strategy-scoped opt-in: accept co-partitioning on a
-    SUBSET of the join keys. A persisted cell relation keeps its
-    build-time window partitioning (hash on d−1 axis keys); with Spark's
-    conservative default (require ALL keys) every point query re-exchanges
-    the full slab-sized relation — this conf is what lets the query
-    shuffle ONLY the point side (plan-pinned in test_plans.py).
-
-    Deliberately NOT an engine-wide default (it used to be): the conf
-    changes exchange planning for every join in the session — a relation
-    pre-partitioned on a low-cardinality subset of later join keys would
-    run that join at the subset's parallelism. Sessions that never touch
-    the cell strategy keep Spark's default; sessions that do accept the
-    trade session-wide (the conf must be live at ACTION time, after these
-    lazy builders have returned, so a set/restore scope cannot work).
-    Axis keys are high-cardinality by construction, so the known downside
-    does not apply to the joins this enables."""
-    try:
-        spark.conf.set("spark.sql.requireAllClusterKeysForCoPartition", "false")
-    except Exception:
-        pass  # read-only conf service (e.g. Connect) — planner falls back
-        # to re-exchanging the cells side: slower, never wrong
-
-
-def build_cell_relation(
-    grid_df: DataFrame,
-    axes: tuple[str, ...] = DEFAULT_AXES,
-    measures: list[str] | None = None,
-    fill_value: float = 0.0,
-    axis_arrays: dict[str, np.ndarray] | None = None,
-) -> DataFrame:
-    """Reshape a DENSE grid slab into its CELL relation: one row per grid
-    cell, with exactly these columns:
-
-    - ``_ki_{ax}`` (int), one per axis in order: the index of the cell's
-      low corner in that axis's array;
-    - ``_cells_{m}`` (array<double>), one per measure: the cell's 2^d
-      corner values, index ``i`` = corner bits ``b_1..b_d`` of the axes in
-      order, ``b_1`` most significant.
-
-    This is the join-side precomputation behind the ``"cell"``
-    interpolation strategy: d windowed passes (one shuffle per axis,
-    slab-sized but narrow) gather each cell's corners so point lookups
-    become ONE equi-join on int keys with a row-local weighted sum — no 2^d
-    point explode and no per-point re-aggregation shuffle. The relation
-    depends only on the slab, so repeated point queries (the registry's
-    usage pattern — one slab, many lookups) amortize the build; persist it
-    or write it as a table for a long-lived slab.
-
-    Key derivation: the pass along axis ``ax`` orders each line of nodes by
-    its coordinate, pairs every node with the next one (``lead``) and
-    numbers it (``row_number() - 1``). The number becomes ``_ki_{ax}`` only
-    when it and the next node's number index exactly the node and the next
-    node in ``axis_arrays`` (the values points snap against); a cell with a
-    node missing from ``axis_arrays``, and the last node of each line, get
-    no row, so queries into them return ``fill_value``. Later passes
-    partition on the ``_ki_`` of the axes already passed, so the relation
-    leaves the build hash-partitioned on ``_ki_`` of axes 2..d — the
-    partitioning a persisted relation's point joins reuse.
-
-    NULL/NaN node values become ``fill_value`` (the corner join's node
-    semantics). Requires a dense slab (row count = distinct coordinates =
-    ∏ axis cardinalities) — raises ``ValueError`` otherwise, because a
-    windowed ``lead`` over a gapped axis would silently pair non-adjacent
-    nodes; non-dense slabs belong to the corner join, whose coverage
-    accounting defines them.
-
-    d=1 caveat: the single window has no partition keys, so the build
-    sorts the whole axis in ONE task — fine for axis-sized relations
-    (axes are small by construction), but a huge 1-D "grid" should use
-    ``asof_uniform_grid`` or the corner join instead.
-
-    Cache-budget cap (measured, SCALE.md round-6 probe): a row costs
-    ``2^d × 8 B`` per measure plus ``4 B`` per axis, so the relation is
-    about 2^d× WIDER than the raw slab, and the strategy's per-query win
-    assumes the persisted relation is served from memory. At 96M cells
-    (~19 GB, past the local storage pool) query scans went disk-bound and
-    the corner join won outright — size the cache budget before choosing
-    this strategy for a long-lived slab.
-    """
-    from pyspark.sql import Window
-
-    _enable_subset_copartition(grid_df.sparkSession)
-    measures = measures or [c for c, _ in grid_df.dtypes if c not in axes]
-    arrays = axis_arrays or _axis_arrays(grid_df, axes)
-    expected = int(np.prod([len(arrays[ax]) for ax in axes]))
-
-    cells = grid_df.select(
-        *[_as_double(ax, grid_df).alias(f"_k_{ax}") for ax in axes],
-        *[F.array(_filled(m, fill_value)).alias(f"_cells_{m}") for m in measures],
-    )
-    # count AND distinct-coordinate count in one job: a duplicated node
-    # masking a missing one passes a bare row count (and validate_dense's
-    # per-axis cardinality product) but would make the windowed lead pair a
-    # duplicate key — two cells sharing one low corner, silently duplicating
-    # and corrupting every query row that joins them. Same hole
-    # _collect_dense_slab guards on the broadcast path.
-    n, nd = cells.agg(
-        F.count(F.lit(1)), F.countDistinct(*[f"_k_{ax}" for ax in axes])
-    ).first()
-    if n != expected or nd != expected:
-        raise ValueError(
-            f"cell relation requires a dense slab: {n} rows / {nd} distinct "
-            f"coordinates != {expected} expected; use the corner join for "
-            "partial or duplicated slabs"
-        )
-
-    # each axis's column: its coordinate until its pass numbers it
-    key = {ax: f"_k_{ax}" for ax in axes}
-    # process axes LAST-first so the final array index is
-    # b_1*2^(d-1) + ... + b_d (axis 1 most significant)
-    for ax in reversed(axes):
-        w = Window.partitionBy(*[key[a] for a in axes if a != ax]).orderBy(key[ax])
-        arr = F.lit(np.asarray(arrays[ax], dtype=np.float64))
-        i = F.col("_i")
-        in_place = (F.get(arr, i) == F.col(key[ax])) & (F.get(arr, i + 1) == F.col("_nxt"))
-        cells = (
-            cells.select(
-                *[F.col(key[a]) for a in axes],
-                (F.row_number().over(w) - 1).alias("_i"),
-                F.lead(key[ax]).over(w).alias("_nxt"),
-                *[
-                    F.concat(
-                        F.col(f"_cells_{m}"), F.lead(f"_cells_{m}").over(w)
-                    ).alias(f"_cells_{m}")
-                    for m in measures
-                ],
-            )
-            .select(
-                *[
-                    F.when(in_place, i).alias(f"_ki_{a}") if a == ax else F.col(key[a])
-                    for a in axes
-                ],
-                *[f"_cells_{m}" for m in measures],
-            )
-            .filter(F.col(f"_ki_{ax}").isNotNull())
-        )
-        key[ax] = f"_ki_{ax}"
-    if not _hash_build_safe(expected, 2 ** len(axes), grid_df.sparkSession):
-        # SMJ regime (relation too big for an unspillable hash build): sort
-        # within the final window pass's partitions ONCE at build. Int keys
-        # carry no NormalizeFloatingNumbers wrapper, so the persisted
-        # ordering satisfies the join's required ordering outright and the
-        # per-query cells-side Sort is ELIDED from the plan. No exchange:
-        # the subset hash partitioning (co-partition reuse) is kept.
-        cells = cells.sortWithinPartitions(*key.values())
-    return cells
-
-
-def _hash_build_safe(dense_bound: int, width: int, spark) -> bool:
-    """True while a relation of ``dense_bound`` nodes, each ``width`` slab
-    rows wide (1 for the grid, 2^d for a cell relation), can safely be the
-    build side of a shuffled-hash join: per-task build rows (dense_bound /
-    shuffle partitions) under :data:`_HASH_BUILD_MAX_ROWS_PER_TASK` divided
-    by ``width``. A hash build cannot spill — beyond this, the join must be
-    left to AQE so sort-merge can spill instead of OOMing."""
-    try:
-        n_shuffle = int(spark.conf.get("spark.sql.shuffle.partitions", "200"))
-    except Exception:
-        n_shuffle = 200
-    return dense_bound <= (_HASH_BUILD_MAX_ROWS_PER_TASK // width) * max(n_shuffle, 1)
-
-
-def _hint_build_side(df: DataFrame, dense_bound: int, width: int) -> DataFrame:
-    """The one join-hint rule of both relational strategies, for ``df``, the
-    build side: the grid (``width`` 1) or a cell relation (``width`` 2^d,
-    its rows that much wider than the slab's).
+def _hint_build_side(df: DataFrame, dense_bound: int) -> DataFrame:
+    """The corner join's hint rule for ``df``, the grid as build side.
 
     Its row count is provable at plan time (∏ axis cardinalities, an upper
-    bound for partial slabs), so up to :data:`_BROADCAST_GRID_MAX_ROWS` /
-    ``width`` it is broadcast instead of planning a shuffle and waiting for
-    AQE's runtime conversion. Above that it is the SHUFFLE_HASH build side
-    while :func:`_hash_build_safe`: Spark's default would pick a sort-merge
-    join — two full sorts on the keys, measured 1.7× slower for the corner
-    join at a 1.23M-row slab × 1.6M corner rows. Per-task build size is
-    ``dense_bound`` divided by spark.sql.shuffle.partitions (NOT the scan's
-    maxPartitionBytes — post-shuffle partitioning is governed by the
-    shuffle-partition count / AQE advisory size). Beyond the ceiling no hint
-    is given and AQE picks the join: sort-merge spills where a hash build
-    would OOM (an ungated hint did, at a 96M-cell relation: 100^4 probe, 32
-    shuffle partitions, ~3M 2^d-wide rows per task)."""
-    if dense_bound <= _BROADCAST_GRID_MAX_ROWS // width:
+    bound for partial slabs), so up to :data:`_BROADCAST_GRID_MAX_ROWS` it
+    is broadcast instead of planning a shuffle and waiting for AQE's
+    runtime conversion. Above that it is the SHUFFLE_HASH build side while
+    each task's share (``dense_bound`` / spark.sql.shuffle.partitions, NOT
+    the scan's maxPartitionBytes — post-shuffle partitioning is governed by
+    the shuffle-partition count / AQE advisory size) stays under
+    :data:`_HASH_BUILD_MAX_ROWS_PER_TASK`: Spark's default would pick a
+    sort-merge join — two full sorts on the keys, measured 1.7× slower at a
+    1.23M-row slab × 1.6M corner rows. Beyond the ceiling no hint is given
+    and AQE picks the join: a hash build cannot spill, sort-merge can (an
+    ungated hint OOMed at ~3M build rows per task)."""
+    if dense_bound <= _BROADCAST_GRID_MAX_ROWS:
         return F.broadcast(df)
-    if _hash_build_safe(dense_bound, width, df.sparkSession):
+    try:
+        n_shuffle = int(df.sparkSession.conf.get("spark.sql.shuffle.partitions", "200"))
+    except Exception:
+        n_shuffle = 200
+    if dense_bound <= _HASH_BUILD_MAX_ROWS_PER_TASK * max(n_shuffle, 1):
         return df.hint("SHUFFLE_HASH")
     return df
 
 
-def interpolate_points_cells(
-    cells: DataFrame,
+def _block_layout(axes: tuple[str, ...], arrays: dict[str, np.ndarray]):
+    """The block relation's axis order, its float64 axis arrays in that
+    order, and the shape of one block. The key axis comes first: the axis
+    with the most nodes, the first on a tie — the most groups and the
+    smallest blocks. The other axes follow in order; a block spans two key
+    nodes and every node of the others, 2 × ∏(other axes)."""
+    key = max(axes, key=lambda ax: len(arrays[ax]))
+    order = [key, *[ax for ax in axes if ax != key]]
+    arrs = [np.asarray(arrays[ax], dtype=np.float64) for ax in order]
+    return order, arrs, (2, *[len(a) for a in arrs[1:]])
+
+
+def _block_relation(
+    grid_df: DataFrame,
+    axes: tuple[str, ...],
+    measures: list[str],
+    fill_value: float,
+    arrays: dict[str, np.ndarray],
+) -> DataFrame:
+    """Reshape a DENSE slab into its BLOCK relation: one row per interval
+    ``g`` of the key axis (:func:`_block_layout`), holding the two key-axis
+    slices that bound it as dense arrays of shape 2 × ∏(other axes),
+    flattened C-order with the key axis first and the other axes in order,
+    each stored as its raw bytes (a binary column caches and crosses Arrow
+    as one buffer, where an array<double> is built element by element):
+
+    - ``_g`` (int): the interval, ``arrays[key][g] .. arrays[key][g + 1]``;
+    - ``_mask`` (binary, bool): which nodes the slab holds;
+    - ``_block_{m}`` (binary, float64), one per measure: the node values,
+      NaN/NULL → ``fill_value`` (:func:`_filled`, the corner join's node
+      semantics).
+
+    A node at key index i bounds the intervals i−1 and i, clipped to
+    [0, n−2], so the build replicates each node at most twice and runs
+    one shuffle, a ``groupBy(_g).applyInPandas`` scatter. Node indices come
+    from an exact match against ``arrays`` (the values points snap
+    against); a node that matches none is absent, and absent nodes hold 0
+    and ``False``, so queries that weigh them get ``fill_value``.
+
+    Requires a dense slab (row count = distinct coordinates = ∏ axis
+    cardinalities) and raises ``ValueError`` otherwise: a duplicated node
+    masking a missing one would overwrite it in the scatter. Non-dense
+    slabs belong to the corner join.
+
+    Limits: a block is 2 × ∏(other axes) × 8 B per measure and must fit a
+    Python worker (a finer grid needs tiling along a second axis with a
+    one-node halo, not built here); and :func:`_interpolate_blocks` meets
+    all points of one interval in one worker, so a query runs at most
+    n_key − 1 tasks in parallel."""
+    import pandas as pd
+
+    (key, *others), arrs, block_shape = _block_layout(axes, arrays)
+    size = int(np.prod(block_shape))
+    expected = len(arrs[0]) * size // 2
+
+    nodes = grid_df.select(
+        *[_as_double(ax, grid_df).alias(ax) for ax in axes],
+        *[_filled(m, fill_value).alias(m) for m in measures],
+    )
+    # count AND distinct-coordinate count in one job: a duplicated node
+    # masking a missing one passes a bare row count (and validate_dense's
+    # per-axis cardinality product) — the hole _collect_dense_slab guards
+    # on the broadcast path
+    n, nd = nodes.agg(F.count(F.lit(1)), F.countDistinct(*axes)).first()
+    if n != expected or nd != expected:
+        raise ValueError(
+            f"block relation requires a dense slab: {n} rows / {nd} distinct "
+            f"coordinates != {expected} expected; use the corner join for "
+            "partial or duplicated slabs"
+        )
+
+    # each node's key-axis index (array_position: 1-based, 0 = no match)
+    # and the one or two intervals it bounds
+    i = F.col("_i")
+    last = F.lit(len(arrs[0]) - 2)
+    tagged = (
+        nodes.withColumn("_i", F.array_position(F.lit(arrs[0]), F.col(key)).cast("int") - 1)
+        .filter(i >= 0)
+        .select(
+            F.explode(F.sequence(F.greatest(i - 1, F.lit(0)), F.least(i, last))).alias("_g"),
+            "_i", *others, *measures,
+        )
+    )
+
+    def scatter(pdf):
+        g = int(pdf["_g"].iloc[0])
+        index = [pdf["_i"].to_numpy() - g]
+        found = np.ones(len(pdf), dtype=bool)
+        for ax, arr in zip(others, arrs[1:]):
+            x = pdf[ax].to_numpy(np.float64)
+            j = np.minimum(np.searchsorted(arr, x), len(arr) - 1)
+            found &= arr[j] == x
+            index.append(j)
+        flat = np.ravel_multi_index([ix[found] for ix in index], block_shape)
+        mask = np.zeros(size, dtype=bool)
+        mask[flat] = True
+        out = {"_g": [g], "_mask": [mask.tobytes()]}
+        for m in measures:
+            vals = np.zeros(size, dtype=np.float64)
+            vals[flat] = pdf[m].to_numpy(np.float64)[found]
+            out[f"_block_{m}"] = [vals.tobytes()]
+        return pd.DataFrame(out)
+
+    schema = ", ".join(["_g int", "_mask binary", *[f"`_block_{m}` binary" for m in measures]])
+    return tagged.groupBy("_g").applyInPandas(scatter, schema)
+
+
+def _interpolate_blocks(
+    blocks: DataFrame,
     points_df: DataFrame,
     axes: tuple[str, ...],
-    axis_arrays: dict[str, np.ndarray],
-    measures: list[str] | None = None,
+    arrays: dict[str, np.ndarray],
+    measures: list[str],
     fill_value: float = 0.0,
 ) -> DataFrame:
-    """Cell-relation interpolation strategy: snap each point to its low
-    corner's axis indices (``_loi_``), ONE equi-join on them against
-    ``cells`` (a :func:`build_cell_relation` output over the same
-    ``axis_arrays``, possibly persisted), and a row-local unrolled weighted
-    sum over the 2^d in-row corner values. ``measures`` defaults to every
-    measure the relation carries.
+    """Block-relation interpolation: snap each point on the key axis only,
+    then one ``cogroup`` of the points and ``blocks`` (a
+    :func:`_block_relation` over the same ``arrays``, possibly persisted) on
+    the interval, where :func:`nlinear_interp` — the broadcast path's
+    kernel — evaluates every measure over the interval's block.
 
-    vs the corner join: no 2^d point explode and no per-point group-by —
-    the point stream crosses exactly one exchange at 1× width, so for the
-    production regime (points ≫ slab, or repeated queries against one
-    persisted relation) this is the cheapest relational plan. The build
-    itself costs d slab-sized window shuffles, so for one-shot queries
-    with slab ≫ points the corner join still wins — measured crossover in
-    SCALE.md. Duplicate point rows are PRESERVED (fused-path semantics;
-    the corner join's final group-by would merge them). Points that are
-    out of bounds, or whose cell the relation lacks, get ``fill_value``.
-    """
-    if measures is None:
-        measures = [c[len("_cells_"):] for c in cells.columns if c.startswith("_cells_")]
-    d = len(axes)
-    _enable_subset_copartition(points_df.sparkSession)
-    dense_bound = int(np.prod([len(axis_arrays[ax]) for ax in axes]))
-    cells = _hint_build_side(cells, dense_bound, 2**d)
+    The mask, interpolated once per group, is the coverage: a point whose
+    positively weighted corners are not all present (``|cov − 1| ≥ 1e-9``,
+    the corner join's ``_cov`` rule), or whose interval has no block, gets
+    ``fill_value``. Out-of-bounds and NULL coordinates on any axis, the key
+    axis included, fall out of the kernel's own bounds check. The axis
+    columns are cast to double Spark-side, so the kernel sees epoch seconds
+    for a timestamp axis whatever the session timezone. Duplicate point
+    rows are PRESERVED (no per-point group-by)."""
+    import pandas as pd
 
+    order, arrs, block_shape = _block_layout(axes, arrays)
+    fv = float(fill_value)
     point_cols = points_df.columns
-    # int keys avoid the NormalizeFloatingNumbers wrapper on join
-    # requirements, so a persisted relation's build partitioning AND
-    # ordering are reused as-is — no cells-side Exchange and no cells-side
-    # Sort in the per-query plan.
-    pts = _snap_columns(points_df, axes, axis_arrays)
-    cond = reduce(and_, [pts[f"_loi_{ax}"] == cells[f"_ki_{ax}"] for ax in axes])
-    joined = pts.join(cells, on=cond, how="left")
+    pts = _snap_columns(points_df, (order[0],), arrays).select(
+        *point_cols,
+        F.col(f"_loi_{order[0]}").alias("_g"),
+        *[_as_double(ax, points_df).alias(f"_x_{ax}") for ax in order],
+    )
+    out_schema = T.StructType(
+        list(points_df.schema.fields) + [T.StructField(m, T.DoubleType()) for m in measures]
+    )
 
-    # the 2^d corner weights, once per query for every measure: corner i's
-    # bit d-1-k picks frac (else 1 - frac) of axis k, axis 1 most significant
-    weights = [F.lit(1.0)]
-    for ax in axes:
-        fr = F.col(f"_frac_{ax}")
-        weights = [w * t for w in weights for t in (1.0 - fr, fr)]
-    fill = F.lit(float(fill_value))
-    out_cols = list(point_cols)
-    for m in measures:
-        vals = F.col(f"_cells_{m}")
-        total = reduce(
-            add, [F.element_at(vals, i + 1) * w for i, w in enumerate(weights)], F.lit(0.0)
-        )
-        out_cols.append(
-            F.when(F.col("_oob"), fill).otherwise(F.coalesce(total, fill)).alias(m)
-        )
-    return joined.select(*out_cols)
+    def evaluate(pdf, blk):
+        if pdf.empty:
+            return pd.DataFrame()
+        res = pdf[point_cols].copy()
+        if blk.empty:
+            return res.assign(**dict.fromkeys(measures, fv))
+        g = int(blk["_g"].iloc[0])
+        block_axes = [arrs[0][g : g + 2], *arrs[1:]]
+        xs = np.column_stack([pdf[f"_x_{ax}"].to_numpy(np.float64) for ax in order])
+        mask = np.frombuffer(blk["_mask"].iloc[0], dtype=bool).reshape(block_shape)
+        hole = np.abs(nlinear_interp(block_axes, mask, xs) - 1.0) >= 1e-9
+        for m in measures:
+            vals = np.frombuffer(blk[f"_block_{m}"].iloc[0], dtype=np.float64)
+            out = nlinear_interp(block_axes, vals.reshape(block_shape), xs, fv)
+            out[hole] = fv
+            res[m] = out
+        return res
+
+    right = blocks.select("_g", "_mask", *[f"_block_{m}" for m in measures])
+    return pts.groupBy("_g").cogroup(right.groupBy("_g")).applyInPandas(evaluate, out_schema)
 
 
 def _mesh_points(
@@ -831,7 +775,7 @@ def gridded_eval(
     per mesh point.
 
     ``strategy`` is forwarded to :func:`interpolate_points` (auto |
-    broadcast | corner | cell — validated there, so typos raise instead of
+    broadcast | corner | block — validated there, so typos raise instead of
     silently running auto). Pass ``axis_arrays`` (e.g. the registry's
     cached arrays) to skip re-running the distinct-axis aggregation on
     every call — on a big grid that is a full-table job per invocation.

@@ -26,13 +26,13 @@ from kamodo_dask_spark.grid.model import (
 )
 from kamodo_dask_spark.grid.interpolate import (
     _axis_arrays,
+    _block_relation,
     _collect_dense_slab,
     _fused_kernel_map,
+    _interpolate_blocks,
     _mesh_points,
     _resolve_strategy,
-    build_cell_relation,
     interpolate_points,
-    interpolate_points_cells,
 )
 
 
@@ -55,7 +55,15 @@ class KamodoSpark(dict):
     derived functions start no Spark job while they build their frame. The
     driver holds that slab for the registry's lifetime: at most
     4M rows × 8 B = 32 MB per measure (``_FUSED_SLAB_MAX_ROWS``).
-    :meth:`release` frees it.
+
+    A ``"block"`` registry keeps its slab on the executors instead: it
+    builds the block relation once (one row per interval of the longest
+    axis, its two bounding slices as dense arrays — 2 × ∏(other axes) ×
+    8 B per measure, which must fit a Python worker) and persists it, and
+    every query is one ``cogroup`` against it running the broadcast path's
+    NumPy kernel per interval, at most n_key − 1 tasks in parallel.
+
+    :meth:`release` frees either.
     """
 
     def __init__(
@@ -99,25 +107,15 @@ class KamodoSpark(dict):
         if collected is not None:
             self._slab = self.df.sparkSession.sparkContext.broadcast(collected)
 
-        # "cell" = the registry's REPEATED-query plan (SCALE.md): reshape
-        # the slab into its cell relation (int `_ki_*` keys + `_cells_*`
-        # corner arrays) ONCE at registration, persist it, and answer every
-        # query with a single int-key equi-join against it (`_interpolate`
-        # passes it to interpolate_points_cells) — no slab re-scan, no 2^d
-        # explode, per query. Built over all measures in one pass so k
-        # measures share the d window shuffles.
-        self._cells = None
-        if self.strategy == "cell":
-            # build_cell_relation runs its own count + distinct-node check
-            # although validate_dense passed: a duplicated node masking a
-            # missing one passes a level-count check, and a fooled windowed
-            # lead would silently corrupt cells.
-            self._cells = build_cell_relation(
-                self.df,
-                self.axes,
-                self.measures,
-                self.fill_value,
-                axis_arrays=self._axis_arrays,
+        # "block": build the block relation once over every measure and
+        # persist it; every query cogroups its points with it. The build
+        # runs its own count + distinct-node check although validate_dense
+        # passed: a duplicated node masking a missing one passes a
+        # level-count check.
+        self._blocks = None
+        if self.strategy == "block":
+            self._blocks = _block_relation(
+                self.df, self.axes, self.measures, self.fill_value, self._axis_arrays
             ).persist()
 
         for m in self.measures:
@@ -136,7 +134,7 @@ class KamodoSpark(dict):
                 axis_arrays=self._axis_arrays,
                 strategy=self.strategy,
             )
-        if self._slab is None and self._cells is None:
+        if self._slab is None and self._blocks is None:
             # loud use-after-release: without this the query dies with an
             # opaque NoneType failure deep in the interpolation path
             raise RuntimeError(
@@ -148,8 +146,8 @@ class KamodoSpark(dict):
             return _fused_kernel_map(
                 points_df, self.axes, measures, self._slab, self.fill_value
             )
-        return interpolate_points_cells(
-            self._cells, points_df, self.axes, self._axis_arrays, measures,
+        return _interpolate_blocks(
+            self._blocks, points_df, self.axes, self._axis_arrays, measures,
             self.fill_value,
         )
 
@@ -186,21 +184,19 @@ class KamodoSpark(dict):
 
     def release(self) -> None:
         """Release engine-held state: the slab broadcast of a
-        ``"broadcast"`` registry, the persisted cell relation of a
-        ``"cell"`` one. Call when replacing a registry — e.g. a slab
+        ``"broadcast"`` registry, the persisted block relation of a
+        ``"block"`` one. Call when replacing a registry — e.g. a slab
         refresh loop — so superseded slabs don't accumulate. Frames
         returned earlier still run (the broadcast is unpersisted, not
-        destroyed); later queries raise ``RuntimeError``. No-op for the
+        destroyed, and an unpersisted block relation is recomputed from the
+        slab); later queries raise ``RuntimeError``. No-op for the
         corner strategy."""
         if self._slab is not None:
             self._slab.unpersist()
             self._slab = None
-        if self._cells is not None:
-            try:
-                self._cells.unpersist()
-            except Exception:
-                pass
-            self._cells = None
+        if self._blocks is not None:
+            self._blocks.unpersist()
+            self._blocks = None
 
     def register(self, name: str, expr: str, units: str = "") -> None:
         """Register a DERIVED function: a Spark SQL expression over already-

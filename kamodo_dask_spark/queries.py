@@ -1368,25 +1368,25 @@ sessionization.__doc__ = sessionization.__doc__.format(gap=_SESSIONIZE_GAP_S)
     """,
 )
 def streaming_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """SURVEY §2.9's sliding-window interpolator refresh END TO END (judge
-    r4 ask #4): grid files stream through a real Structured Streaming file
-    source into ``SlabRefresher``'s foreachBatch sink (slab store append →
+    """SURVEY §2.9's sliding-window interpolator refresh END TO END: grid
+    files stream through a real Structured Streaming file source into
+    ``SlabRefresher``'s foreachBatch sink (slab store append →
     trailing-window rebuild → fresh ``KamodoSpark`` registry), and the
     FINAL registry answers a 150-point query — the streaming equivalent of
     the reference's "re-run ingestion every wall-clock tick"
-    (docs/interpolator.md:25-31). The refresher runs ``strategy="cell"``:
-    each refresh builds + persists the slab's cell relation once and the
-    point query is a single equi-join — the repeated-query plan SCALE.md
-    measures — so the cell machinery (and the refresher's release of the
-    superseded relation) sits under a driver-checked row. The oracle is
-    batch interpolation over the final file set, expressed as the
-    unit-grid corner join in normalized axis coordinates (u =
-    (x-x0)/spacing — exact: every axis spacing is a power of two or 600
-    with /16-dyadic query offsets, node values are small integers
-    ``16k + 8i + 4j + m``, so weights, products and sums are all exact
-    dyadic doubles in BOTH engines whatever the evaluation order — the
-    cell path's fixed-order unrolled sum included — and the hashes match
-    bit-for-bit).
+    (docs/interpolator.md:25-31). Unit tests drive the refresher with
+    hand-made batches; this entry is the one place the whole chain runs
+    from a real file source under a driver-checked row. The refresher runs
+    ``strategy="block"``: each refresh builds and persists the slab's
+    block relation once and the point query is one cogroup against it, so
+    the block path and the refresher's release of the superseded relation
+    are parity-checked too. The oracle is batch interpolation over the
+    final file set, expressed as the unit-grid corner join in normalized
+    axis coordinates (u = (x-x0)/spacing — exact: every axis spacing is a
+    power of two or 600 with /16-dyadic query offsets, node values are
+    small integers ``16k + 8i + 4j + m``, so weights, products and sums are
+    all exact dyadic doubles in BOTH engines whatever the evaluation order,
+    and the hashes match bit-for-bit).
     """
     import os
     import tempfile
@@ -1435,7 +1435,7 @@ def streaming_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ]
     )
     stream = stream_grid_files(spark, src, schema)
-    refresher = SlabRefresher(os.path.join(root, "slab_store"), strategy="cell")
+    refresher = SlabRefresher(os.path.join(root, "slab_store"), strategy="block")
     with _ephemeral_checkpoint() as ckpt:
         q = (
             stream.transform(normalize_measure_columns)
@@ -1457,11 +1457,11 @@ def streaming_interp(spark: SparkSession, sf_dir: str) -> DataFrame:
         ((F.col("id") % 33) / 16.0 * 128.0).alias("h"),
     )
     out = reg["rho"](pts).select("point_id", F.round("rho", 6).alias("rho"))
-    # force the plan to bind while the persisted cell relation exists, then
-    # release it — a shared bench/parity session runs this entry repeatedly
-    # and unreleased relations would accumulate in the storage layer. The
-    # returned (lazy) plan stays valid: unpersist only drops cached blocks;
-    # re-execution recomputes the cells from the slab-store parquet.
+    # force the plan to bind while the persisted block relation exists,
+    # then release it — a shared bench/parity session runs this entry
+    # repeatedly and unreleased relations would accumulate in the storage
+    # layer. The returned (lazy) plan stays valid: unpersist only drops
+    # cached blocks; re-execution recomputes them from the slab-store parquet.
     out = out.localCheckpoint(eager=True)
     reg.release()
     return out

@@ -58,15 +58,6 @@ DEFAULT_CONF = {
     # (get_spark), not here: a module-import-time default would freeze
     # whatever SPARK_GRAFT_CPUS said when the package was first imported
     # and silently ignore later env changes.
-    # NOTE: spark.sql.requireAllClusterKeysForCoPartition=false is NOT set
-    # here although the cell interpolation strategy depends on it — its
-    # blast radius is every join in the session (any relation already
-    # hash-partitioned on a SUBSET of later join keys would skip its
-    # re-exchange, trading parallelism for the reuse even where the subset
-    # key is low-cardinality). The cell-strategy entry points flip it on
-    # for their session instead (grid/interpolate.py::
-    # _enable_subset_copartition), so only sessions that actually run the
-    # cell strategy pay the planner-behavior change.
     "spark.ui.enabled": "false",
 }
 

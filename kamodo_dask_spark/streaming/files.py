@@ -108,11 +108,11 @@ class SlabRefresher:
         self.fill_value = fill_value
         self.registry = None
         self.batches_seen = 0
-        #: Interpolation strategy for the rebuilt registries; "cell" makes
-        #: each refresh build+persist the cell relation once so the many
-        #: point queries between refreshes are single-join plans (the
-        #: repeated-query regime SCALE.md measures at 2.8x) — the previous
-        #: refresh's relation is released on replacement.
+        #: Interpolation strategy for the rebuilt registries; "block" makes
+        #: each refresh build and persist the block relation once, so the
+        #: point queries between refreshes each run one cogroup against it
+        #: instead of re-reading the slab — the previous refresh's relation
+        #: is released on replacement.
         self.strategy = strategy
         #: Trailing-window bound: rows whose time axis is more than this far
         #: behind the store's max are EXCLUDED from the rebuilt slab. Without

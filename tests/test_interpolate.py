@@ -362,14 +362,14 @@ def test_gridded_eval_accepts_datetime_coords(spark):
     assert got == {0.0: pytest.approx(0.0), 1.0: pytest.approx(1.0)}
 
 
-def test_cell_strategy_matches_oracle(spark, grid_df):
-    """strategy='cell' (cell-relation join) agrees with the NumPy oracle on
+def test_block_strategy_matches_oracle(spark, grid_df):
+    """strategy='block' (block-relation cogroup) agrees with the NumPy oracle on
     interior / node / face / out-of-bounds points."""
     pts = query_points()
     got = {
         r["point_id"]: r["v"]
         for r in interpolate_points(
-            grid_df, _points_df(spark), AXES, ["v"], strategy="cell"
+            grid_df, _points_df(spark), AXES, ["v"], strategy="block"
         ).collect()
     }
     exp = oracle(pts)
@@ -378,8 +378,8 @@ def test_cell_strategy_matches_oracle(spark, grid_df):
         assert got[p[0]] == pytest.approx(e, rel=1e-9, abs=1e-12), f"point {p}"
 
 
-def test_cell_strategy_null_node_and_fill(spark):
-    """Cell path node semantics = corner path: a NULL/NaN node blends
+def test_block_strategy_null_node_and_fill(spark):
+    """Block path node semantics = corner path: a NULL/NaN node blends
     fill_value at just that node; OOB points get fill_value whole."""
     rows = []
     for x1 in (0.0, 1.0):
@@ -394,35 +394,34 @@ def test_cell_strategy_null_node_and_fill(spark):
         r["point_id"]: r["val"]
         for r in interpolate_points(
             grid, pts, axes=("x1", "x2"), measures=["val"],
-            fill_value=7.0, strategy="cell",
+            fill_value=7.0, strategy="block",
         ).collect()
     }
     assert got[0] == pytest.approx(2.5)  # 0.25*(0+2+1+7)
     assert got[1] == 7.0  # out of bounds
 
 
-def test_cell_relation_reuse_and_dense_requirement(spark, grid_df):
-    """A prebuilt cell relation answers repeated queries without rebuilding,
-    and a non-dense slab refuses the cell path loudly."""
+def test_block_relation_reuse_and_dense_requirement(spark, grid_df):
+    """A prebuilt block relation answers repeated queries without
+    rebuilding, and a non-dense slab refuses the block path loudly. Its key
+    axis is lon, the axis with the most nodes, so it holds one row per lon
+    interval."""
     from kamodo_dask_spark.grid.interpolate import (
         _axis_arrays,
-        build_cell_relation,
-        interpolate_points_cells,
+        _block_relation,
+        _interpolate_blocks,
     )
 
     arrays = _axis_arrays(grid_df, AXES)
-    cells = build_cell_relation(grid_df, AXES, ["v"], axis_arrays=arrays)
-    n_cells = cells.count()
-    assert n_cells == (len(TIME_V) - 1) * (len(LON_V) - 1) * (len(LAT_V) - 1) * (
-        len(H_V) - 1
-    )
+    blocks = _block_relation(grid_df, AXES, ["v"], 0.0, arrays)
+    assert blocks.count() == len(LON_V) - 1
     pts = query_points()
     exp = oracle(pts)
     for _ in range(2):  # two queries against the SAME relation
         got = {
             r["point_id"]: r["v"]
-            for r in interpolate_points_cells(
-                cells, _points_df(spark), AXES, arrays
+            for r in _interpolate_blocks(
+                blocks, _points_df(spark), AXES, arrays, ["v"]
             ).collect()
         }
         for p, e in zip(pts, exp):
@@ -433,24 +432,24 @@ def test_cell_relation_reuse_and_dense_requirement(spark, grid_df):
           & (F.col("lat") == -90.0) & (F.col("h") == 100.0))
     )
     with pytest.raises(ValueError, match="dense"):
-        build_cell_relation(sparse, AXES, ["v"], axis_arrays=arrays)
+        _block_relation(sparse, AXES, ["v"], 0.0, arrays)
 
 
-def test_cell_strategy_preserves_duplicate_points(spark, grid_df):
-    """Duplicate point rows survive the cell path (single join, no group-by)
+def test_block_strategy_preserves_duplicate_points(spark, grid_df):
+    """Duplicate point rows survive the block path (one cogroup, no group-by)
     — fused-path semantics, unlike the corner join's merging group-by."""
     pts = spark.createDataFrame(
         [(600.0, 45.0, 30.0, 250.0)] * 3, "time double, lon double, lat double, h double"
     )
-    out = interpolate_points(grid_df, pts, AXES, ["v"], strategy="cell").collect()
+    out = interpolate_points(grid_df, pts, AXES, ["v"], strategy="block").collect()
     assert len(out) == 3
     assert len({r["v"] for r in out}) == 1
 
 
-@pytest.mark.parametrize("seed,d", [(1, 2), (2, 3), (3, 4), (4, 6)])
-def test_cell_and_corner_agree_on_random_grids(spark, seed, d):
+@pytest.mark.parametrize("seed,d", [(1, 2), (2, 3), (3, 4), (4, 6), (5, 1)])
+def test_block_and_corner_agree_on_random_grids(spark, seed, d):
     """Randomized cross-strategy equivalence: non-uniform axis spacings,
-    NaN/NULL-poked node values, interior + boundary + OOB points — the cell
+    NaN/NULL-poked node values, interior + boundary + OOB points — the block
     and corner strategies must agree with the NumPy oracle (NaN/NULL nodes
     contribute fill_value at that node in all three)."""
     rng = np.random.default_rng(seed)
@@ -501,7 +500,7 @@ def test_cell_and_corner_agree_on_random_grids(spark, seed, d):
         np.array([p[1:] for p in pts]), fill_value=fill,
     )
 
-    for strategy in ("corner", "cell"):
+    for strategy in ("corner", "block"):
         got = {
             r["point_id"]: r["val"]
             for r in interpolate_points(
@@ -516,12 +515,12 @@ def test_cell_and_corner_agree_on_random_grids(spark, seed, d):
             )
 
 
-def test_cell_relation_rejects_duplicate_masked_hole(spark):
+def test_block_relation_rejects_duplicate_masked_hole(spark):
     """A duplicated node compensating a missing one passes a bare row count
-    (and the per-axis cardinality product) but must be REJECTED: a windowed
-    lead over the duplicate key would build two cells sharing one low
-    corner and silently duplicate query rows."""
-    from kamodo_dask_spark.grid.interpolate import build_cell_relation
+    (and the per-axis cardinality product) but must be REJECTED: the
+    scatter would write the duplicate over one node and leave the missing
+    one absent, with no error."""
+    from kamodo_dask_spark.grid.interpolate import _block_relation
 
     rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0) for x2 in (0.0, 1.0)]
     rows.remove((1.0, 1.0, 3.0))
@@ -529,28 +528,29 @@ def test_cell_relation_rejects_duplicate_masked_hole(spark):
     grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
     arrays = {"x1": np.array([0.0, 1.0]), "x2": np.array([0.0, 1.0])}
     with pytest.raises(ValueError, match="distinct"):
-        build_cell_relation(grid, ("x1", "x2"), ["val"], axis_arrays=arrays)
+        _block_relation(grid, ("x1", "x2"), ["val"], 0.0, arrays)
 
 
 def test_grid_node_missing_from_axis_arrays_fills_its_cells(spark):
     """A grid node absent from ``axis_arrays`` (here the node x1=2 where the
     arrays say 2.5) corners no interpolated cell: points in the two x1
-    cells it bounds get ``fill_value`` from the cell strategy, as from the
+    cells it bounds get ``fill_value`` from the block strategy, as from the
     corner join (whose coverage sum misses that node), while cells away
     from it interpolate normally."""
-    from kamodo_dask_spark.grid.interpolate import build_cell_relation
+    from kamodo_dask_spark.grid.interpolate import _block_relation
 
     rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0, 2.0, 3.0) for x2 in (0.0, 1.0)]
     grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
     arrays = {"x1": np.array([0.0, 1.0, 2.5, 3.0]), "x2": np.array([0.0, 1.0])}
     axes = ("x1", "x2")
-    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays)
-    assert cells.count() == 1  # only the cell x1 in [0, 1]
+    blocks = _block_relation(grid, axes, ["val"], 0.0, arrays)
+    complete = [r["_g"] for r in blocks.collect() if np.frombuffer(r["_mask"], bool).all()]
+    assert complete == [0]  # only the cell x1 in [0, 1]
     pts = spark.createDataFrame(
         [(0, 0.5, 0.5), (1, 1.5, 0.5), (2, 2.7, 0.5)],
         "point_id long, x1 double, x2 double",
     )
-    for strategy in ("cell", "corner"):
+    for strategy in ("block", "corner"):
         got = {
             r["point_id"]: r["val"]
             for r in interpolate_points(
@@ -559,6 +559,94 @@ def test_grid_node_missing_from_axis_arrays_fills_its_cells(spark):
             ).collect()
         }
         assert got == {0: pytest.approx(1.5), 1: -7.0, 2: -7.0}, strategy
+
+
+def test_block_strategy_timestamp_key_axis_non_utc_session_tz(spark):
+    """A timestamp key axis under a non-UTC session timezone: the block
+    path casts the point axes to epoch seconds Spark-side, so a point
+    between two nodes and a point on a node read the grid's values, and
+    the point's own timestamp column comes back unchanged."""
+    import pandas as pd
+
+    prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    try:
+        times = pd.date_range("2024-03-01 00:00:00", periods=4, freq="h")
+        rows = [
+            (t.to_pydatetime(), x, float(i) + x)
+            for i, t in enumerate(times)
+            for x in (0.0, 1.0)
+        ]
+        grid = spark.createDataFrame(rows, "time timestamp, x double, val double")
+        asked = {
+            0: ((times[1] + pd.Timedelta(minutes=30)).to_pydatetime(), 0.5),
+            1: (times[2].to_pydatetime(), 1.0),
+        }
+        pts = spark.createDataFrame(
+            [(k, t, x) for k, (t, x) in asked.items()],
+            "point_id long, time timestamp, x double",
+        )
+        out = interpolate_points(
+            grid, pts, axes=("time", "x"), measures=["val"], fill_value=-99.0,
+            strategy="block",
+        ).collect()
+        got = {r["point_id"]: (r["time"], r["val"]) for r in out}
+        assert got[0] == (asked[0][0], pytest.approx(2.0))
+        assert got[1] == (asked[1][0], pytest.approx(3.0))
+    finally:
+        spark.conf.set("spark.sql.session.timeZone", prev)
+
+
+def test_block_strategy_null_and_out_of_range_coordinates(spark):
+    """NULL and out-of-range coordinates, on the key axis (x2, the axis
+    with the most nodes) and off it, get ``fill_value``; the key axis's
+    own edges stay in bounds."""
+    rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0, 2.0) for x2 in (0.0, 1.0, 2.0, 3.0, 4.0)]
+    grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
+    pts = spark.createDataFrame(
+        [
+            (0, 0.5, None), (1, 0.5, -1.0), (2, 0.5, 4.5),  # key axis: NULL, below, above
+            (3, None, 2.5), (4, 2.5, 2.5),  # other axis: NULL, above
+            (5, 0.5, 0.0), (6, 2.0, 4.0), (7, 1.5, 2.25),  # key-axis edges, interior
+        ],
+        "point_id long, x1 double, x2 double",
+    )
+    got = {
+        r["point_id"]: r["val"]
+        for r in interpolate_points(
+            grid, pts, ("x1", "x2"), ["val"], fill_value=-3.0, strategy="block"
+        ).collect()
+    }
+    assert got == {
+        0: -3.0, 1: -3.0, 2: -3.0, 3: -3.0, 4: -3.0,
+        5: pytest.approx(0.5), 6: pytest.approx(10.0), 7: pytest.approx(6.0),
+    }
+
+
+def test_block_strategy_interval_without_block_fills(spark):
+    """An interval none of whose nodes match ``axis_arrays`` (here x1 in
+    [2.5, 3.5], where the grid holds 2 and 3) has no block row: its
+    points get ``fill_value``, as from the corner join."""
+    from kamodo_dask_spark.grid.interpolate import _block_relation
+
+    rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0, 2.0, 3.0) for x2 in (0.0, 1.0)]
+    grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
+    arrays = {"x1": np.array([0.0, 1.0, 2.5, 3.5]), "x2": np.array([0.0, 1.0])}
+    axes = ("x1", "x2")
+    blocks = _block_relation(grid, axes, ["val"], 0.0, arrays)
+    assert sorted(r["_g"] for r in blocks.collect()) == [0, 1]
+    pts = spark.createDataFrame(
+        [(0, 0.5, 0.5), (1, 3.0, 0.5)], "point_id long, x1 double, x2 double"
+    )
+    for strategy in ("block", "corner"):
+        got = {
+            r["point_id"]: r["val"]
+            for r in interpolate_points(
+                grid, pts, axes, ["val"], fill_value=-7.0,
+                axis_arrays=arrays, strategy=strategy,
+            ).collect()
+        }
+        assert got == {0: pytest.approx(1.5), 1: -7.0}, strategy
 
 
 def test_gridded_eval_empty_axis_list_raises(spark, grid_df):

@@ -423,51 +423,6 @@ def test_salted_enrich_join_spreads_key(spark):
     assert "xxhash64" in plan, plan
 
 
-def test_cell_strategy_point_side_zero_exchange(spark):
-    """The cell-relation strategy's plan contract: with the cell relation
-    broadcast (dense bound under the scaled cutoff), the POINT stream
-    crosses ZERO exchanges — the snap is a projection against a literal axis
-    array (an interpreted ``ArrayAggregate`` inside the point stage), the
-    join is a BroadcastHashJoin, and there is no post-join aggregation. This is the
-    repeated-query plan SCALE.md measures at 2.8x over the corner join."""
-    from pyspark.sql import functions as F
-
-    from kamodo_dask_spark.grid.interpolate import (
-        build_cell_relation,
-        interpolate_points_cells,
-    )
-    from kamodo_dask_spark.plans.checks import executed_plan
-
-    import numpy as np
-
-    grid = spark.range(0, 5**4, 1, 4).select(
-        ((F.col("id") / 125).cast("long") % 5).cast("double").alias("x1"),
-        ((F.col("id") / 25).cast("long") % 5).cast("double").alias("x2"),
-        ((F.col("id") / 5).cast("long") % 5).cast("double").alias("x3"),
-        (F.col("id") % 5).cast("double").alias("x4"),
-    ).withColumn("val", F.col("x1") + 2 * F.col("x2"))
-    arrays = {f"x{i}": np.arange(5.0) for i in (1, 2, 3, 4)}
-    cells = build_cell_relation(grid, ("x1", "x2", "x3", "x4"), ["val"], axis_arrays=arrays)
-    pts = spark.range(0, 10_000, 1, 8).select(
-        F.col("id").alias("point_id"),
-        ((F.col("id") % 65) / 16.0).alias("x1"),
-        ((F.col("id") % 63) / 16.0).alias("x2"),
-        ((F.col("id") % 61) / 16.0).alias("x3"),
-        ((F.col("id") % 59) / 16.0).alias("x4"),
-    )
-    out = interpolate_points_cells(cells, pts, ("x1", "x2", "x3", "x4"), arrays, ["val"])
-    plan = executed_plan(out)
-    assert "BroadcastHashJoin" in plan, plan
-    # every hash exchange must belong to the CELL-BUILD subtree (window
-    # passes partition on the _ki_* keys of the axes already passed and the
-    # _k_* coordinates of the rest); the point stream itself is never
-    # shuffled and nothing aggregates per point
-    for line in plan.splitlines():
-        if "Exchange hashpartitioning" in line:
-            assert "_ki_x" in line or "_k_x" in line, f"point-side exchange: {line}\n{plan}"
-    assert "HashAggregate" not in plan, plan
-
-
 def test_large_slab_corner_join_is_shuffled_hash(spark):
     """The BENCHED catalog entry (interp_4d_corner — 1.23M-row slab, above
     the broadcast cutoff) must plan as a ShuffledHashJoin with the grid as
@@ -508,123 +463,6 @@ def test_gridded_eval_mesh_has_no_nested_loop(spark):
     assert got[(1.0, 2.0)] == 1.5 + 2 * 1.0 + 3 * 2.0
 
 
-def test_cell_strategy_persisted_relation_not_reexchanged(spark):
-    """Amortization plan contract (round 6): above the broadcast cutoff,
-    a PERSISTED cell relation joins via its build-time window partitioning
-    (hash on a subset of the axis keys, accepted because the cell-strategy
-    entry points flip spark.sql.requireAllClusterKeysForCoPartition=false
-    for the session — _enable_subset_copartition, no longer an engine-wide
-    default) — each point query exchanges ONLY the point stream. Without
-    this, every query re-shuffled the full slab-sized relation: measured
-    12.4 s -> 2.2 s per 1M-point query at the 20M-row probe slab."""
-    from pyspark.sql import functions as F
-
-    from kamodo_dask_spark.grid.interpolate import (
-        build_cell_relation,
-        interpolate_points_cells,
-    )
-    from kamodo_dask_spark.plans.checks import executed_plan
-
-    import numpy as np
-
-    dims = (50, 50, 41, 12)  # 1.23M rows: above _BROADCAST_GRID_MAX_ROWS/16
-    d2, d3, d4 = dims[1], dims[2], dims[3]
-    grid = spark.range(0, int(np.prod(dims)), 1, 16).select(
-        ((F.col("id") / (d2 * d3 * d4)).cast("long") % dims[0]).cast("double").alias("x1"),
-        ((F.col("id") / (d3 * d4)).cast("long") % d2).cast("double").alias("x2"),
-        ((F.col("id") / d4).cast("long") % d3).cast("double").alias("x3"),
-        (F.col("id") % d4).cast("double").alias("x4"),
-    ).withColumn("val", F.col("x1") + 2 * F.col("x2"))
-    arrays = {f"x{i + 1}": np.arange(float(n)) for i, n in enumerate(dims)}
-    axes = ("x1", "x2", "x3", "x4")
-    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays).persist()
-    try:
-        cells.count()
-        pts = spark.range(0, 1_000, 1, 8).select(
-            F.col("id").alias("point_id"),
-            ((F.col("id") % 479) / 9.81).alias("x1"),
-            ((F.col("id") % 467) / 9.53).alias("x2"),
-            ((F.col("id") % 389) / 9.73).alias("x3"),
-            ((F.col("id") % 107) / 9.91).alias("x4"),
-        )
-        out = interpolate_points_cells(cells, pts, axes, arrays, ["val"])
-        plan = executed_plan(out)
-        assert "ShuffledHashJoin" in plan, plan
-        above_cache = plan.split("InMemoryRelation")[0]
-        n_ex = above_cache.count("Exchange")
-        assert n_ex == 1, f"{n_ex} exchanges above the cached cells:\n{above_cache}"
-        # and that one exchange is the POINT side (snapped _loi_ index keys)
-        for line in above_cache.splitlines():
-            if "Exchange hashpartitioning" in line:
-                assert "_loi_x" in line, f"cells side re-exchanged: {line}"
-        # hash-join regime: neither side needs ordering — no Sort anywhere
-        # above the cache (the SMJ-regime Sort-elision contract has its own
-        # test below)
-        n_sorts = above_cache.count("Sort [")
-        assert n_sorts == 0, f"{n_sorts} sorts above the cached cells:\n{above_cache}"
-    finally:
-        cells.unpersist()
-
-
-def test_cell_join_hash_hint_gated_on_per_task_build_rows(spark):
-    """The cell-side SHUFFLE_HASH hint must be GATED like the corner join's:
-    a hash build cannot spill, and an ungated hint OOMed the build at a
-    96M-cell relation (100^4 probe slab / 32 shuffle partitions ~ 3M
-    2^d-wide rows per task). Same tiny physical data, two claimed axis
-    cardinalities: mid-size gets the hint (hash beats two full sorts),
-    beyond the per-task ceiling the hint is withheld so AQE can pick a
-    join that spills. autoBroadcastJoinThreshold is disabled so the plan
-    choice reflects the hint, not the toy data's stats."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from kamodo_dask_spark.grid.interpolate import (
-        build_cell_relation,
-        interpolate_points_cells,
-    )
-
-    dims = (4, 4, 4, 4)
-    d2, d3, d4 = dims[1], dims[2], dims[3]
-    grid = spark.range(0, int(np.prod(dims)), 1, 4).select(
-        ((F.col("id") / (d2 * d3 * d4)).cast("long") % dims[0]).cast("double").alias("x1"),
-        ((F.col("id") / (d3 * d4)).cast("long") % d2).cast("double").alias("x2"),
-        ((F.col("id") / d4).cast("long") % d3).cast("double").alias("x3"),
-        (F.col("id") % d4).cast("double").alias("x4"),
-    ).withColumn("val", F.col("x1") + F.col("x2"))
-    axes = ("x1", "x2", "x3", "x4")
-    arrays_small = {ax: np.arange(4.0) for ax in axes}
-    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays_small)
-    pts = spark.range(0, 8, 1, 2).select(
-        F.col("id").alias("point_id"),
-        (F.col("id") % 3 + 0.25).alias("x1"),
-        (F.col("id") % 3 + 0.25).alias("x2"),
-        (F.col("id") % 3 + 0.25).alias("x3"),
-        (F.col("id") % 3 + 0.25).alias("x4"),
-    )
-
-    prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    try:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        # mid-size claim: 20^4 = 160k dense bound — above the (2^d-scaled)
-        # broadcast cutoff, under per_task_max * shuffle.partitions
-        arrays_mid = {ax: np.arange(20.0) for ax in axes}
-        plan_mid = (
-            interpolate_points_cells(cells, pts, axes, arrays_mid, ["val"])
-            ._jdf.queryExecution().sparkPlan().toString()
-        )
-        assert "ShuffledHashJoin" in plan_mid, plan_mid
-        # huge claim: 100^4 = 100M dense bound — beyond the ceiling, no hint
-        arrays_big = {ax: np.arange(100.0) for ax in axes}
-        plan_big = (
-            interpolate_points_cells(cells, pts, axes, arrays_big, ["val"])
-            ._jdf.queryExecution().sparkPlan().toString()
-        )
-        assert "ShuffledHashJoin" not in plan_big, plan_big
-        assert "SortMergeJoin" in plan_big, plan_big
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-
-
 def test_quality_classifier_is_zero_shuffle(spark):
     """The classifier's 100 TB contract: tokenize → hash → lookup → pool →
     sigmoid is ONE scan of row-local array expressions — no Exchange, no
@@ -640,65 +478,6 @@ def test_quality_classifier_is_zero_shuffle(spark):
     # reference — a second md5 in the plan means the staging projection
     # collapsed and the pipeline runs multiple times per row (2.6× wall)
     assert plan.count("md5") == 1, plan
-
-
-def test_cell_smj_regime_elides_cells_side_sort(spark, monkeypatch):
-    """SMJ-regime contract (int keys): a persisted relation built beyond the
-    hash-safe ceiling is sorted within its build partitions on the INTEGER
-    axis-index keys — no NormalizeFloatingNumbers wrapper, so the cached
-    ordering satisfies the join requirement outright and each point query
-    plans exactly ONE Sort (the point side)."""
-    import numpy as np
-    from pyspark.sql import functions as F
-
-    from kamodo_dask_spark.grid.interpolate import (
-        build_cell_relation,
-        interpolate_points_cells,
-    )
-    from kamodo_dask_spark.plans.checks import executed_plan
-
-    dims = (4, 4, 4, 4)
-    d2, d3, d4 = dims[1], dims[2], dims[3]
-    grid = spark.range(0, int(np.prod(dims)), 1, 4).select(
-        ((F.col("id") / (d2 * d3 * d4)).cast("long") % dims[0]).cast("double").alias("x1"),
-        ((F.col("id") / (d3 * d4)).cast("long") % d2).cast("double").alias("x2"),
-        ((F.col("id") / d4).cast("long") % d3).cast("double").alias("x3"),
-        (F.col("id") % d4).cast("double").alias("x4"),
-    ).withColumn("val", F.col("x1") + F.col("x2"))
-    axes = ("x1", "x2", "x3", "x4")
-    # shrink the hash-safe ceiling so this 256-node slab IS the SMJ regime:
-    # the build sorts within partitions and the query plans a sort-merge join
-    from kamodo_dask_spark.grid import interpolate as interp_mod
-
-    monkeypatch.setattr(interp_mod, "_HASH_BUILD_MAX_ROWS_PER_TASK", 16)
-    monkeypatch.setattr(interp_mod, "_BROADCAST_GRID_MAX_ROWS", 16)
-    arrays_big = {ax: np.arange(float(n)) for ax, n in zip(axes, dims)}
-    cells = build_cell_relation(grid, axes, ["val"], axis_arrays=arrays_big).persist()
-    try:
-        cells.count()
-        pts = spark.range(0, 100, 1, 2).select(
-            F.col("id").alias("point_id"),
-            *[((F.col("id") % 13) / 4.5).alias(ax) for ax in axes],
-        )
-        prev = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-        try:
-            out = interpolate_points_cells(cells, pts, axes, arrays_big, ["val"])
-            plan = executed_plan(out)
-        finally:
-            spark.conf.set("spark.sql.autoBroadcastJoinThreshold", prev)
-        assert "SortMergeJoin" in plan, plan
-        above_cache = plan.split("InMemoryRelation")[0]
-        n_sorts = above_cache.count("Sort [")
-        assert n_sorts == 1, f"{n_sorts} sorts above the cached cells:\n{above_cache}"
-        for line in above_cache.splitlines():
-            if line.strip().startswith(":- Sort") or line.strip().startswith("+- Sort"):
-                assert "_loi_x" in line, f"cells-side sort survived: {line}"
-        # and zero exchanges above the cache beyond the point side
-        n_ex = above_cache.count("Exchange")
-        assert n_ex == 1, f"{n_ex} exchanges above the cached cells:\n{above_cache}"
-    finally:
-        cells.unpersist()
 
 
 def test_doc_attributes_single_scan(spark, tmp_path):

@@ -140,12 +140,12 @@ def test_plot_data_heatmap_and_line_payloads(registry):
         registry.plot_data("rho_ijkl", {"altitude": 1.0})
 
 
-def test_registry_cell_strategy_matches_broadcast(spark, grid_dir, tmp_path):
-    """KamodoSpark(strategy='cell') — the repeated-query registry plan —
+def test_registry_block_strategy_matches_broadcast(spark, grid_dir, tmp_path):
+    """KamodoSpark(strategy='block') — the repeated-query registry plan —
     answers point queries identically to the broadcast-kernel registry
     (including on a TIMESTAMP time axis, whose epoch-second doubles must
-    agree bit-exactly between the driver-snapped lows and the Spark-cast
-    cell keys), and release() drops the persisted cell relation. Points
+    agree bit-exactly between the driver's axis arrays and the Spark-cast
+    grid nodes), and release() drops the persisted block relation. Points
     come in-memory and as a Parquet-read frame with a shifted time column."""
     start = GRID_START + timedelta(minutes=5)
     end = GRID_START + timedelta(minutes=95)
@@ -163,25 +163,25 @@ def test_registry_cell_strategy_matches_broadcast(spark, grid_dir, tmp_path):
     read = spark.read.parquet(f"{tmp_path}/pts")
     file_pts = read.withColumn("time", read.time + 600.0)
     ref = KamodoSpark(grid_df)  # auto -> broadcast at this size
-    cell = KamodoSpark(grid_df, strategy="cell")
+    block = KamodoSpark(grid_df, strategy="block")
     try:
         exp = {r["point_id"]: r["rho"] for r in ref["rho"](pts).collect()}
         # repeated queries reuse the persisted relation
         for frame in (pts, pts, file_pts, file_pts):
-            got = {r["point_id"]: r["rho"] for r in cell["rho"](frame).collect()}
+            got = {r["point_id"]: r["rho"] for r in block["rho"](frame).collect()}
             assert set(got) == set(exp)
             for k in exp:
                 assert got[k] == pytest.approx(exp[k], rel=1e-9, abs=1e-12)
         # the gridded and derived functions answer through the same
         # persisted relation, with the broadcast registry's values
-        ref["r2"] = cell["r2"] = "rho * 2"
+        ref["r2"] = block["r2"] = "rho * 2"
         queries = [
             (lambda reg: reg["rho_ijkl"](time=t_mid, lat=0.0), ("lon", "h"), "rho"),
             (lambda reg: reg["r2"](pts), ("point_id",), "r2"),
             (lambda reg: reg["r2_ijkl"](time=t_mid, lat=0.0), ("lon", "h"), "r2"),
         ]
         for query, key, col in queries:
-            out = query(cell)
+            out = query(block)
             assert "InMemoryTableScan" in executed_plan(out)
             got = {tuple(r[k] for k in key): r[col] for r in out.collect()}
             want = {tuple(r[k] for k in key): r[col] for r in query(ref).collect()}
@@ -189,12 +189,12 @@ def test_registry_cell_strategy_matches_broadcast(spark, grid_dir, tmp_path):
             for k in want:
                 assert got[k] == pytest.approx(want[k], rel=1e-9, abs=1e-12)
     finally:
-        cell.release()
-    assert cell._cells is None
+        block.release()
+    assert block._blocks is None
 
 
-def test_cell_registry_use_after_release_raises_clearly(spark):
-    """Querying a released cell-strategy registry raises a RuntimeError
+def test_block_registry_use_after_release_raises_clearly(spark):
+    """Querying a released block-strategy registry raises a RuntimeError
     naming the cause, not an opaque NoneType failure."""
     rows = [
         (float(t), float(x), t + 2.0 * x)
@@ -202,7 +202,7 @@ def test_cell_registry_use_after_release_raises_clearly(spark):
         for x in (0.0, 1.0, 2.0)
     ]
     df = spark.createDataFrame(rows, "time double, lon double, rho double")
-    reg = KamodoSpark(df, axes=("time", "lon"), strategy="cell")
+    reg = KamodoSpark(df, axes=("time", "lon"), strategy="block")
     pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
     assert reg["rho"](pts).count() == 1
     reg.release()
@@ -210,11 +210,12 @@ def test_cell_registry_use_after_release_raises_clearly(spark):
         reg["rho"](pts)
 
 
-def test_cell_registry_on_axis_past_literal_bound_matches_nlinear_interp(spark):
-    """A cell registry over an axis longer than the literal-array snap bound
-    (its points snap through the searchsorted UDF) interpolates exactly as
-    ``nlinear_interp`` at interior, edge and out-of-bounds points, and its
-    persisted relation holds the int cell keys and the corner arrays only."""
+def test_block_registry_on_axis_past_literal_bound_matches_nlinear_interp(spark):
+    """A block registry over an axis longer than the literal-array snap
+    bound (its points snap through the searchsorted UDF) interpolates
+    exactly as ``nlinear_interp`` at interior, edge and out-of-bounds
+    points, and its persisted relation holds the interval key, the mask and
+    the block arrays only."""
     import numpy as np
 
     from kamodo_dask_spark.grid.interpolate import _LITERAL_AXIS_MAX, nlinear_interp
@@ -242,9 +243,39 @@ def test_cell_registry_on_axis_past_literal_bound_matches_nlinear_interp(spark):
     )
     want = nlinear_interp(list(axes_v.values()), values, pts_np, -1.0)
 
-    reg = KamodoSpark(grid, axes=axes, fill_value=-1.0, strategy="cell")
+    reg = KamodoSpark(grid, axes=axes, fill_value=-1.0, strategy="block")
     try:
-        assert reg._cells.columns == ["_ki_time", "_ki_lon", "_cells_rho"]
+        assert reg._blocks.columns == ["_g", "_mask", "_block_rho"]
+        got = dict(reg["rho"](pts).select("point_id", "rho").collect())
+        np.testing.assert_allclose(
+            [got[i] for i in range(len(pts_np))], want, rtol=1e-12, atol=1e-12
+        )
+    finally:
+        reg.release()
+
+
+def test_block_registry_keys_on_the_axis_with_most_nodes(spark):
+    """The block relation's key axis is the axis with the most nodes, not
+    axis 1: on a 3 × 7 grid it is lon, so the persisted relation holds one
+    row per lon interval, and the registry interpolates exactly."""
+    import numpy as np
+
+    from kamodo_dask_spark.grid.interpolate import nlinear_interp
+
+    axes_v = {"time": np.array([0.0, 1.0, 3.0]), "lon": np.arange(7.0) * 1.5}
+    mesh = np.meshgrid(*axes_v.values(), indexing="ij")
+    values = mesh[0] * 2.0 - mesh[1] ** 2
+    rows = list(zip(*(m.ravel().tolist() for m in mesh), values.ravel().tolist()))
+    grid = spark.createDataFrame(rows, "time double, lon double, rho double")
+    pts_np = np.array([[0.5, 0.75], [2.0, 8.9], [3.0, 9.0], [1.0, -0.1]])
+    pts = spark.createDataFrame(
+        [(i, *map(float, p)) for i, p in enumerate(pts_np)],
+        "point_id long, time double, lon double",
+    )
+    want = nlinear_interp(list(axes_v.values()), values, pts_np, -1.0)
+    reg = KamodoSpark(grid, axes=tuple(axes_v), fill_value=-1.0, strategy="block")
+    try:
+        assert reg._blocks.count() == 6
         got = dict(reg["rho"](pts).select("point_id", "rho").collect())
         np.testing.assert_allclose(
             [got[i] for i in range(len(pts_np))], want, rtol=1e-12, atol=1e-12
@@ -255,7 +286,7 @@ def test_cell_registry_on_axis_past_literal_bound_matches_nlinear_interp(spark):
 
 def test_broadcast_registry_use_after_release_raises_clearly(spark):
     """Querying a released broadcast-strategy registry raises the same
-    RuntimeError as the cell strategy, while a frame returned before the
+    RuntimeError as the block strategy, while a frame returned before the
     release still runs (the broadcast is unpersisted, not destroyed)."""
     reg = KamodoSpark(_affine_grid(spark), axes=("time", "lon"), strategy="broadcast")
     pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
@@ -336,7 +367,7 @@ def test_broadcast_registry_queries_start_no_job(spark):
         reg.release()
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "corner", "cell"])
+@pytest.mark.parametrize("strategy", ["broadcast", "corner", "block"])
 def test_registry_build_runs_one_grid_metadata_call(spark, monkeypatch, strategy):
     """Every registry build, whatever its strategy, learns the grid's levels
     from exactly one validate_dense call and never calls grid_axes."""
@@ -370,7 +401,7 @@ def test_registry_build_runs_one_grid_metadata_call(spark, monkeypatch, strategy
         reg.release()
 
 
-@pytest.mark.parametrize("strategy", ["broadcast", "corner", "cell"])
+@pytest.mark.parametrize("strategy", ["broadcast", "corner", "block"])
 def test_bounds_and_midpoint_start_no_job(spark, strategy):
     """get_bounds and get_midpoint read the levels collected at build: they
     start no Spark job, and equal grid_bounds (exactly) and grid_midpoint
@@ -485,7 +516,7 @@ def test_unknown_strategy_rejected(spark):
     the registry and on interpolate_points alike."""
     grid = _affine_grid(spark)
     pts = spark.createDataFrame([(0, 0.5, 0.5)], "point_id long, time double, lon double")
-    allowed = r"auto\|broadcast\|corner\|cell"
+    allowed = r"auto\|broadcast\|corner\|block"
     with pytest.raises(ValueError, match=allowed):
         KamodoSpark(grid, axes=("time", "lon"), strategy="cel")
     with pytest.raises(ValueError, match=allowed):
@@ -500,14 +531,21 @@ def _is_corner(plan):
     return "Generate explode" in plan and "Join" in plan and "InMemoryTableScan" not in plan
 
 
-def _is_cell(plan):
-    return "InMemoryTableScan" in plan and "Join" in plan and "Generate" not in plan
+def _is_block(plan):
+    # the persisted relation's build (its interval explode) prints below
+    # InMemoryRelation; the query above it has no corner explode
+    query = plan.split("InMemoryRelation")[0]
+    return (
+        "FlatMapCoGroupsInPandas" in query
+        and "InMemoryTableScan" in query
+        and "Generate" not in query
+    )
 
 
 @pytest.mark.parametrize(
     "strategy, runs",
-    [("broadcast", _is_broadcast), ("corner", _is_corner), ("cell", _is_cell)],
-    ids=["broadcast", "corner", "cell"],
+    [("broadcast", _is_broadcast), ("corner", _is_corner), ("block", _is_block)],
+    ids=["broadcast", "corner", "block"],
 )
 def test_every_registered_function_runs_the_registry_strategy(spark, strategy, runs):
     """The strategy a registry reports is the one every function it

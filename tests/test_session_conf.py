@@ -144,3 +144,36 @@ def test_executed_plan_unsets_the_metadata_length_it_raised(spark):
     finally:
         if prior is not None:
             spark.conf.set(key, prior)
+
+
+def test_block_strategy_leaves_copartition_conf_unset(spark):
+    """The block strategy sets no runtime conf: a block registry's query
+    and a one-shot ``interpolate_points(strategy="block")`` leave
+    ``spark.sql.requireAllClusterKeysForCoPartition`` unset, so other
+    joins in the session keep Spark's co-partitioning rule."""
+    from kamodo_dask_spark.grid.interpolate import interpolate_points
+    from kamodo_dask_spark.grid.registry import KamodoSpark
+
+    key = "spark.sql.requireAllClusterKeysForCoPartition"
+    prior = spark.conf.get(key, None)
+    spark.conf.unset(key)
+    strategy = "block"
+    try:
+        grid = spark.createDataFrame(
+            [(float(t), float(x), t + 2.0 * x) for t in range(3) for x in range(3)],
+            "time double, lon double, rho double",
+        )
+        pts = spark.createDataFrame(
+            [(0, 0.5, 0.5)], "point_id long, time double, lon double"
+        )
+        reg = KamodoSpark(grid, axes=("time", "lon"), strategy=strategy)
+        try:
+            assert reg["rho"](pts).collect()[0]["rho"] == pytest.approx(1.5)
+        finally:
+            reg.release()
+        out = interpolate_points(grid, pts, ("time", "lon"), ["rho"], strategy=strategy)
+        assert out.collect()[0]["rho"] == pytest.approx(1.5)
+        assert spark.conf.get(key, None) is None
+    finally:
+        if prior is not None:
+            spark.conf.set(key, prior)

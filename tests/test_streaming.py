@@ -286,15 +286,15 @@ def test_checkpoint_recovery_exactly_once(spark, tmp_path):
     assert out.select("time").distinct().count() == 4
 
 
-def test_slab_refresher_cell_strategy_releases_superseded(spark, tmp_path):
-    """strategy='cell' refreshers: each rebuild answers queries through the
-    persisted cell relation, and the SUPERSEDED registry's relation is
+def test_slab_refresher_block_strategy_releases_superseded(spark, tmp_path):
+    """strategy='block' refreshers: each rebuild answers queries through the
+    persisted block relation, and the SUPERSEDED registry's relation is
     released on replacement (no accumulation across refreshes)."""
     import pandas as pd
     import pytest as _pytest
 
     refresher = SlabRefresher(
-        str(tmp_path / "slab_store_cell"), axes=("time", "x"), strategy="cell"
+        str(tmp_path / "slab_store_block"), axes=("time", "x"), strategy="block"
     )
 
     def batch(t0_epoch, scale):
@@ -308,7 +308,7 @@ def test_slab_refresher_cell_strategy_releases_superseded(spark, tmp_path):
     base = 1_700_000_000
     refresher(batch(base, 1.0), 0)
     first = refresher.current()
-    assert first._cells is not None
+    assert first._blocks is not None
     pts = spark.createDataFrame(
         [(0, float(base + 300), 0.5)], "point_id long, time double, x double"
     )
@@ -318,7 +318,7 @@ def test_slab_refresher_cell_strategy_releases_superseded(spark, tmp_path):
     refresher(batch(base + 1200, 1.0), 1)  # extends the time axis
     second = refresher.current()
     assert second is not first
-    assert first._cells is None  # superseded relation released
+    assert first._blocks is None  # superseded relation released
     with _pytest.raises(RuntimeError, match="release"):
         first["val"](pts)
     v2 = second["val"](pts).collect()[0]["val"]
