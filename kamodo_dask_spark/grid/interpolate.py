@@ -26,6 +26,14 @@ kamodo_dask/kamodo_dask.py:335-341). One entry point,
    (:func:`_interpolate_blocks`). The repeated-query plan of a registry
    whose slab should not live on the driver.
 
+The two NumPy strategies share one rule at the Python boundary: a point
+frame's timestamp columns cross as epoch microseconds (longs) and are
+restored Spark-side, and the kernel reads a timestamp axis as
+``micros / 1e6`` — Spark's own timestamp→double cast, which the corner
+join, the slab collect and the block relation apply Spark-side (the
+reference's ``v.value/1e9``, kamodo_dask.py:309). No timestamp reaches
+pandas, so the session timezone and its DST folds play no part.
+
 ``"auto"`` picks broadcast for slabs of at most :data:`_FUSED_SLAB_MAX_ROWS`
 rows and the corner join above; :class:`~kamodo_dask_spark.grid.registry.
 KamodoSpark` resolves its strategy by the same rule. All return
@@ -119,16 +127,6 @@ def nlinear_interp(
         out += w * values[tuple(corner)]
     out[oob] = fill_value
     return out
-
-
-def _session_tz(spark) -> str:
-    """The SQL session timezone — the zone in which ARROW-delivered
-    timestamps (``toPandas``/pandas-UDF inputs) arrive as naive values.
-    Driver-side ``collect()`` is different: it converts to SYSTEM-local
-    naive ``datetime`` objects, whose ``.timestamp()`` is already the true
-    epoch. Mixing the two conventions shifts axes by the tz offset — each
-    conversion site below names which convention its input uses."""
-    return spark.conf.get("spark.sql.session.timeZone", "UTC")
 
 
 def _driver_epoch_seconds(v) -> float:
@@ -295,37 +293,36 @@ def _collect_dense_slab(
     grid_df: DataFrame,
     axes: tuple[str, ...],
     measures: list[str],
-    levels: dict,
     fill_value: float,
 ):
     """Unordered driver collect of the slab as dense ndarrays — the one slab
-    collect. ``levels`` gives each axis's values (a :func:`validate_dense`
-    result, or axis arrays); their counts are the expected cardinalities.
+    collect.
 
     A plain Arrow ``toPandas()`` of the double-cast axes and measures, no
     sort: ``np.unique`` per axis yields the sorted axis array and each
-    row's index along it, and the rows scatter into place through
-    ``np.ravel_multi_index``. Returns ``(axis_list, slabs)``, or ``None``
-    when the rows do not fill the grid exactly once: row count ≠ ∏ counts,
-    an axis cardinality off, or a cell hit twice (a duplicated row masking
-    a missing one) — the explicit version of the reference's trusted
-    reshape (kamodo_dask.py:325,334). NaN measures become ``fill_value``
-    here, before interpolation."""
-    shape = tuple(len(levels[ax]) for ax in axes)
-    expected = int(np.prod(shape))
+    row's index along it, their sizes are the grid's shape, and the rows
+    scatter into place through ``np.ravel_multi_index``. Returns
+    ``(axis_list, slabs)``, or ``None`` when the rows do not fill that grid
+    exactly once: row count ≠ ∏ sizes, a NULL coordinate (NaN, which
+    ``np.unique`` keeps as a level of its own), or a cell hit twice (a
+    duplicated row masking a missing one) — the explicit version of the
+    reference's trusted reshape (kamodo_dask.py:325,334). NaN measures
+    become ``fill_value`` here, before interpolation."""
     pdf = grid_df.select(
         *[_as_double(ax, grid_df).alias(ax) for ax in axes],
         *[F.col(m).cast("double").alias(m) for m in measures],
     ).toPandas()
-    if len(pdf) != expected:
-        return None
     axis_list, index = [], []
-    for ax, n in zip(axes, shape):
+    for ax in axes:
         values, inverse = np.unique(pdf[ax].to_numpy(np.float64), return_inverse=True)
-        if len(values) != n:
+        if np.isnan(values).any():
             return None
         axis_list.append(values)
         index.append(inverse.reshape(-1))
+    shape = tuple(len(values) for values in axis_list)
+    expected = int(np.prod(shape))
+    if len(pdf) != expected:
+        return None
     flat = np.ravel_multi_index(index, shape)
     covered = np.zeros(expected, dtype=bool)
     covered[flat] = True
@@ -339,6 +336,38 @@ def _collect_dense_slab(
     return axis_list, slabs
 
 
+def _micros_in(df: DataFrame) -> tuple[DataFrame, list[T.StructField]]:
+    """``df`` as it crosses into a pandas UDF, and its timestamp fields.
+    Each timestamp column crosses as its epoch microseconds
+    (``unix_micros``, a long): Arrow would hand pandas the timestamp naive
+    in the session time zone, where the two instants of a DST fall-back's
+    repeated hour read the same, and a long is the instant itself. A frame
+    with no timestamp column passes as it is, plan included."""
+    ts = [f for f in df.schema.fields if isinstance(f.dataType, T.TimestampType)]
+    return (df.withColumns({f.name: F.unix_micros(f.name) for f in ts}) if ts else df), ts
+
+
+def _micros_out(df: DataFrame, ts: list[T.StructField]) -> DataFrame:
+    """A pandas UDF's output with the timestamp fields :func:`_micros_in`
+    sent in restored Spark-side (``timestamp_micros``), metadata included."""
+    if not ts:
+        return df
+    return df.withColumns(
+        {f.name: F.timestamp_micros(f.name).alias(f.name, metadata=f.metadata) for f in ts}
+    )
+
+
+def _kernel_points(pdf, axes: list[str], ts: list[T.StructField]) -> np.ndarray:
+    """The points' axis coordinates as the NumPy kernel reads them, one
+    float64 column per axis: a timestamp axis (epoch micros, see
+    :func:`_micros_in`) as ``micros / 1e6`` — bit for bit Spark's own
+    timestamp→double cast (:func:`_as_double`), the one the axis arrays
+    come from — and any other axis as it is."""
+    micros = {f.name for f in ts}
+    cols = [pdf[ax].to_numpy(np.float64) for ax in axes]
+    return np.column_stack([x / 1e6 if ax in micros else x for ax, x in zip(axes, cols)])
+
+
 def _fused_kernel_map(
     points_df: DataFrame,
     axes: tuple[str, ...],
@@ -348,56 +377,28 @@ def _fused_kernel_map(
 ) -> DataFrame:
     """Map-side interpolation: evaluate the NumPy kernel per Arrow batch of
     points against ``slab``, a broadcast of :func:`_collect_dense_slab`'s
-    ``(axis_list, slabs)``. Starts no Spark job. Preserves the input point
-    schema exactly (timestamp axes convert to epoch seconds *inside* the
-    kernel) and appends one double column per measure — same output
-    contract as the corner join, zero exchanges in the plan."""
-    import pandas as pd  # noqa: F401 — executor-side dependency
-
-    spark = points_df.sparkSession
+    ``(axis_list, slabs)``. Starts no Spark job. Timestamp columns cross
+    the Python boundary as epoch micros and come back as they went in
+    (:func:`_micros_in`, :func:`_micros_out`), so the output is the input
+    point schema plus one double column per measure — same output contract
+    as the corner join, zero exchanges in the plan."""
     axes_l = list(axes)
     fv = float(fill_value)
-    ts_axes = {ax for ax, t in points_df.dtypes if ax in axes_l and t == "timestamp"}
-    # Arrow delivers timestamps NAIVE in the session timezone; the axis
-    # arrays are true UTC epoch seconds — localize before converting or the
-    # kernel evaluates at times shifted by the tz offset (only visible when
-    # the session tz isn't UTC; the corner path casts Spark-side and was
-    # always correct).
-    tz = _session_tz(spark)
+    inp, ts = _micros_in(points_df)
     out_schema = T.StructType(
-        list(points_df.schema.fields) + [T.StructField(m, T.DoubleType()) for m in measures]
+        list(inp.schema.fields) + [T.StructField(m, T.DoubleType()) for m in measures]
     )
 
     def eval_batches(batches):
         ax_arrs, slab_map = slab.value
         for pdf in batches:
-            cols = []
-            for ax in axes_l:
-                s = pdf[ax]
-                if ax in ts_axes:
-                    # naive (session tz) → UTC epoch seconds
-                    s = (
-                        s.dt.tz_localize(
-                            tz, ambiguous=True, nonexistent="shift_forward"
-                        )
-                        .dt.tz_convert("UTC")
-                        .dt.tz_localize(None)
-                        .astype("datetime64[us]")
-                        .astype("int64")
-                        / 1e6
-                    )
-                cols.append(s.astype("float64").to_numpy())
-            pts = (
-                np.column_stack(cols)
-                if len(pdf)
-                else np.empty((0, len(axes_l)), dtype=np.float64)
-            )
+            pts = _kernel_points(pdf, axes_l, ts)
             res = pdf.copy()
             for m in measures:
                 res[m] = nlinear_interp(ax_arrs, slab_map[m], pts, fv)
             yield res
 
-    return points_df.mapInPandas(eval_batches, out_schema)
+    return _micros_out(inp.mapInPandas(eval_batches, out_schema), ts)
 
 
 def interpolate_points(
@@ -417,9 +418,9 @@ def interpolate_points(
 
     - ``"auto"`` (default): ``"broadcast"`` when the dense-slab row bound
       (∏ axis cardinalities) is ≤ :data:`_FUSED_SLAB_MAX_ROWS`, else
-      ``"corner"``. Non-dense slabs (collect finds fewer rows than the
-      bound) fall back to the corner join, whose coverage accounting turns
-      missing corners into ``fill_value``.
+      ``"corner"``. Non-dense slabs (the collect does not fill the axis
+      arrays' grid exactly once) fall back to the corner join, whose
+      coverage accounting turns missing corners into ``fill_value``.
     - ``"broadcast"``: unordered collect of the slab, scattered into a
       dense ndarray on the driver and checked to fill every cell exactly
       once (the explicit version of the reference's trusted reshape,
@@ -457,8 +458,10 @@ def interpolate_points(
         blocks = _block_relation(grid_df, axes, measures, fill_value, arrays)
         return _interpolate_blocks(blocks, points_df, axes, arrays, measures, fill_value)
     if resolved == "broadcast":
-        collected = _collect_dense_slab(grid_df, axes, measures, arrays, fill_value)
-        if collected is not None:
+        # dense against the caller's arrays too: a node they list that the
+        # grid lacks leaves the collect's own shape smaller
+        collected = _collect_dense_slab(grid_df, axes, measures, fill_value)
+        if collected is not None and [len(a) for a in collected[0]] == shape:
             slab = grid_df.sparkSession.sparkContext.broadcast(collected)
             return _fused_kernel_map(points_df, axes, measures, slab, fill_value)
         if strategy == "broadcast":
@@ -677,33 +680,32 @@ def _interpolate_blocks(
     positively weighted corners are not all present (``|cov − 1| ≥ 1e-9``,
     the corner join's ``_cov`` rule), or whose interval has no block, gets
     ``fill_value``. Out-of-bounds and NULL coordinates on any axis, the key
-    axis included, fall out of the kernel's own bounds check. The axis
-    columns are cast to double Spark-side, so the kernel sees epoch seconds
-    for a timestamp axis whatever the session timezone. Duplicate point
-    rows are PRESERVED (no per-point group-by)."""
-    import pandas as pd
-
+    axis included, fall out of the kernel's own bounds check. The kernel
+    reads the point columns themselves, timestamps crossing as epoch micros
+    (:func:`_micros_in`, :func:`_micros_out`), so it sees the same epoch
+    seconds as the Spark-side key-axis snap whatever the session timezone,
+    and the points come back as they went in. Duplicate point rows are
+    PRESERVED (no per-point group-by)."""
     order, arrs, block_shape = _block_layout(axes, arrays)
     fv = float(fill_value)
     point_cols = points_df.columns
-    pts = _snap_columns(points_df, (order[0],), arrays).select(
-        *point_cols,
-        F.col(f"_loi_{order[0]}").alias("_g"),
-        *[_as_double(ax, points_df).alias(f"_x_{ax}") for ax in order],
+    pts, ts = _micros_in(
+        _snap_columns(points_df, (order[0],), arrays).select(
+            *point_cols, F.col(f"_loi_{order[0]}").alias("_g")
+        )
     )
     out_schema = T.StructType(
-        list(points_df.schema.fields) + [T.StructField(m, T.DoubleType()) for m in measures]
+        [f for f in pts.schema.fields if f.name != "_g"]
+        + [T.StructField(m, T.DoubleType()) for m in measures]
     )
 
     def evaluate(pdf, blk):
-        if pdf.empty:
-            return pd.DataFrame()
         res = pdf[point_cols].copy()
         if blk.empty:
             return res.assign(**dict.fromkeys(measures, fv))
         g = int(blk["_g"].iloc[0])
         block_axes = [arrs[0][g : g + 2], *arrs[1:]]
-        xs = np.column_stack([pdf[f"_x_{ax}"].to_numpy(np.float64) for ax in order])
+        xs = _kernel_points(pdf, order, ts)
         mask = np.frombuffer(blk["_mask"].iloc[0], dtype=bool).reshape(block_shape)
         hole = np.abs(nlinear_interp(block_axes, mask, xs) - 1.0) >= 1e-9
         for m in measures:
@@ -714,7 +716,8 @@ def _interpolate_blocks(
         return res
 
     right = blocks.select("_g", "_mask", *[f"_block_{m}" for m in measures])
-    return pts.groupBy("_g").cogroup(right.groupBy("_g")).applyInPandas(evaluate, out_schema)
+    cogrouped = pts.groupBy("_g").cogroup(right.groupBy("_g"))
+    return _micros_out(cogrouped.applyInPandas(evaluate, out_schema), ts)
 
 
 def _mesh_points(

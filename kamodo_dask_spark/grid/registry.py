@@ -88,9 +88,7 @@ class KamodoSpark(dict):
         # "broadcast": collect the slab once; every query reuses its broadcast
         self._slab = collected = None
         if self.strategy == "broadcast":
-            collected = _collect_dense_slab(
-                self.df, self.axes, self.measures, self.levels, self.fill_value
-            )
+            collected = _collect_dense_slab(self.df, self.axes, self.measures, self.fill_value)
             if collected is None:
                 raise ValueError(
                     f"grid is not dense: its rows do not fill the "

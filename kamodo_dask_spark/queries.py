@@ -977,8 +977,6 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     here.) The events fixture's timestamp unit varies across regenerations
     (ns and µs have both shipped): the stream reads the column as raw int64
     and scales by the unit detected from the parquet footer."""
-    from kamodo_dask_spark.sources.parquet import nanos_as_long
-
     from kamodo_dask_spark.session import scoped_conf
 
     # conf scoped: the streaming query runs to completion inside the block
@@ -986,9 +984,10 @@ def streaming_tumbling_1h(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 8 state partitions: per-partition state-store commit overhead dominates
     # windowed aggs at fixture scale (measured: 1.8 s @ 32 → 0.86 s @ 8 at
     # sf0.1); production sizing scales partitions with active-state volume.
-    with nanos_as_long(spark), scoped_conf(
-        spark, **{"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
-    ):
+    with scoped_conf(spark, **{
+        "spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS,
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }):
         ev = _fixture_event_stream(spark, sf_dir)
         agg = (
             ev.groupBy(F.window("ts", "1 hour").alias("w"), F.col("event_type"))
@@ -1019,15 +1018,14 @@ def streaming_sliding_30m(spark: SparkSession, sf_dir: str) -> DataFrame:
     materializes the overlap explicitly: each event unnests into its two
     slide-aligned window starts. Same finite-source/complete-mode argument
     as ``streaming_tumbling_1h``; same footer-detected timestamp unit."""
-    from kamodo_dask_spark.sources.parquet import nanos_as_long
-
     from kamodo_dask_spark.session import scoped_conf
 
     # 8 state partitions: same commit-overhead argument as
     # streaming_tumbling_1h (measured 1.4 s @ 32 → 0.80 s @ 8 at sf0.1)
-    with nanos_as_long(spark), scoped_conf(
-        spark, **{"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
-    ):
+    with scoped_conf(spark, **{
+        "spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS,
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }):
         ev = _fixture_event_stream(spark, sf_dir)
         agg = (
             ev.groupBy(
@@ -1064,7 +1062,7 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     import tempfile
 
     from kamodo_dask_spark.session import scoped_conf
-    from kamodo_dask_spark.sources.parquet import nanos_as_long, parquet_ts_unit
+    from kamodo_dask_spark.sources.parquet import parquet_ts_unit
 
     events_path = os.path.join(sf_dir, "events.parquet")
     ts_unit = parquet_ts_unit(events_path)
@@ -1072,9 +1070,10 @@ def streaming_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     try:
         for i in (0, 1):  # the same file delivered twice
             shutil.copy(events_path, os.path.join(root, f"0{i}_events.parquet"))
-        with nanos_as_long(spark), scoped_conf(
-            spark, **{"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
-        ):
+        with scoped_conf(spark, **{
+            "spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS,
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        }):
             ev = _raw_event_stream(spark, root, ts_unit)
             deduped = (
                 ev.withWatermark("ts", "1 hour")
@@ -1115,8 +1114,6 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``Trigger.AvailableNow``); finite source + complete mode = the batch
     join-aggregate, which the DuckDB oracle states directly. Same
     footer-detected timestamp unit handling as ``streaming_tumbling_1h``."""
-    from kamodo_dask_spark.sources.parquet import nanos_as_long
-
     from kamodo_dask_spark.session import scoped_conf
 
     customer = read_table(spark, sf_dir, "customer")
@@ -1127,9 +1124,10 @@ def stream_static_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select(F.col("c_custkey"), F.col("n_name").alias("nation"))
     # 8 state partitions for the windowed agg (the broadcast join itself is
     # shuffle-free); same commit-overhead argument as streaming_tumbling_1h
-    with nanos_as_long(spark), scoped_conf(
-        spark, **{"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
-    ):
+    with scoped_conf(spark, **{
+        "spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS,
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }):
         ev = _fixture_event_stream(spark, sf_dir)
         enriched = ev.join(
             F.broadcast(dim), ev["user_id"] == dim["c_custkey"]
@@ -1168,13 +1166,12 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     Over a finite source the result equals the batch interval join, which
     the DuckDB oracle states directly; the lag is compared in exact integer
     microseconds so no float rounding is involved."""
-    from kamodo_dask_spark.sources.parquet import nanos_as_long
-
     from kamodo_dask_spark.session import scoped_conf
 
-    with nanos_as_long(spark), scoped_conf(
-        spark, **{"spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS}
-    ):
+    with scoped_conf(spark, **{
+        "spark.sql.shuffle.partitions": STREAM_STATE_PARTITIONS,
+        "spark.sql.legacy.parquet.nanosAsLong": "true",
+    }):
         clicks = (
             _fixture_event_stream(spark, sf_dir)
             .filter(F.col("event_type") == "click")
@@ -1268,7 +1265,7 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
     import pyarrow.parquet as pq
 
     from kamodo_dask_spark.session import scoped_conf
-    from kamodo_dask_spark.sources.parquet import nanos_as_long, parquet_ts_unit
+    from kamodo_dask_spark.sources.parquet import parquet_ts_unit
     from kamodo_dask_spark.streaming.sessions import sessionize
 
     events_path = os.path.join(sf_dir, "events.parquet")
@@ -1315,9 +1312,10 @@ def sessionization(spark: SparkSession, sf_dir: str) -> DataFrame:
         # runs pandas per state task, so parallelism pays here (r7 sweep:
         # 2.5 s @ 16 vs 2.7 @ 8 vs 3.1 @ 4) — the inverse of the JVM
         # stateful ops, whose state-commit rounds dominate.
-        with nanos_as_long(spark), scoped_conf(
-            spark, **{"spark.sql.shuffle.partitions": "16"}
-        ):
+        with scoped_conf(spark, **{
+            "spark.sql.shuffle.partitions": "16",
+            "spark.sql.legacy.parquet.nanosAsLong": "true",
+        }):
             # no maxFilesPerTrigger: availableNow folds both files into ONE
             # micro-batch — the per-user sentinel closes every real session
             # via gap logic within it
@@ -1649,9 +1647,10 @@ def interp_1d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def interp_4d(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The flagship: 4-D multilinear interpolation through the REAL
-    distributed corner-join operator, verified against an independent pure-SQL
-    formulation (floor-snap valid because the oracle grid is unit-spaced)."""
+    """The flagship: 4-D multilinear interpolation through
+    ``interpolate_points``' ``"auto"`` strategy (a 625-row slab, so the
+    broadcast kernel), verified against an independent pure-SQL formulation
+    (floor-snap valid because the oracle grid is unit-spaced)."""
     cust = read_table(spark, sf_dir, "customer").filter(F.col("c_custkey") <= 200)
     pts = cust.select(
         F.col("c_custkey").alias("point_id"),
@@ -1729,8 +1728,9 @@ def interp_4d(spark: SparkSession, sf_dir: str) -> DataFrame:
     """,
 )
 def interp_4d_corner(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The 100 TB interpolation strategy, FORCED and at forcing scale (judge
-    r4 ask #3): a 50×50×41×12 = 1.23M-row dense slab — above
+    """The 100 TB interpolation strategy, FORCED and at forcing scale, so
+    the catalog checks the distributed plan and not only the broadcast
+    kernel ``interp_4d`` runs: a 50×50×41×12 = 1.23M-row dense slab — above
     ``_BROADCAST_GRID_MAX_ROWS`` (no broadcast-hint shortcut; ``"auto"``
     would take the broadcast kernel at this size, hence the forced
     strategy) — against 100k query points through

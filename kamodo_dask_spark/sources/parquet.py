@@ -13,38 +13,10 @@ Reference parity:
 
 from __future__ import annotations
 
-from contextlib import contextmanager
-
 from pyspark.sql import Column, DataFrame, SparkSession, functions as F
 
 _NANOS_KEY = "spark.sql.legacy.parquet.nanosAsLong"
 
-
-@contextmanager
-def nanos_as_long(spark: SparkSession):
-    """Scoped ``nanosAsLong``: set for the duration of the block, restore the
-    prior value after. Only safe when execution COMPLETES inside the block —
-    a lazy DataFrame returned out of the scope would fail at action time,
-    because the parquet scan re-reads the session conf during physical
-    planning. ``read_events`` therefore cannot use this (it returns a lazy
-    frame) and must leave the conf set; callers of completed-execution paths
-    (e.g. the streaming catalog entry) should."""
-    try:
-        prev = spark.conf.get(_NANOS_KEY, "false")
-    except Exception:
-        prev = None
-    try:
-        spark.conf.set(_NANOS_KEY, "true")
-    except Exception:
-        pass
-    try:
-        yield
-    finally:
-        if prev is not None:
-            try:
-                spark.conf.set(_NANOS_KEY, prev)
-            except Exception:
-                pass
 
 def parquet_ts_unit(path: str, column: str = "ts") -> str:
     """Physical time unit ('ns'|'us'|'ms'|'s') of a parquet timestamp column,
@@ -131,7 +103,7 @@ def read_events(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     NB: the conf deliberately stays set on the session — the returned frame
     is lazy, and the scan re-reads the conf at action time, so a scoped
-    restore (:func:`nanos_as_long`) would break execution after return.
+    restore (``session.scoped_conf``) would break execution after return.
     """
     path = f"{sf_dir}/events.parquet"
     try:

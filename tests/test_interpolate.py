@@ -303,44 +303,73 @@ def test_duplicate_slab_row_not_silently_reshaped(spark):
     check; the duplicate check must reject the dense collect (falling back
     to the coverage-accounting corner join) instead of misaligning the
     reshape."""
-    from kamodo_dask_spark.grid.interpolate import _axis_arrays, _collect_dense_slab
+    from kamodo_dask_spark.grid.interpolate import _collect_dense_slab
 
     rows = [(x1, x2, x1 + 2 * x2) for x1 in (0.0, 1.0) for x2 in (0.0, 1.0)]
     rows.remove((1.0, 1.0, 3.0))
     rows.append((0.0, 0.0, 0.0))  # duplicate keeps the count at 4
     grid = spark.createDataFrame(rows, "x1 double, x2 double, val double")
-    arrays = _axis_arrays(grid, ("x1", "x2"))
-    assert _collect_dense_slab(grid, ("x1", "x2"), ["val"], arrays, 0.0) is None
+    assert _collect_dense_slab(grid, ("x1", "x2"), ["val"], 0.0) is None
 
 
-def test_fused_timestamp_axis_non_utc_session_tz(spark):
-    """The fused kernel localizes Arrow's naive (session-tz) timestamps
-    before converting to epoch — under a non-UTC session tz, evaluation at
-    an exact grid node must return the node value, not a shifted time (the
-    pre-fix behavior evaluated hours off and returned fill)."""
-    import pandas as pd
+@pytest.mark.parametrize("via", ["standalone", "registry"])
+@pytest.mark.parametrize("strategy", ["broadcast", "block", "corner"])
+def test_timestamp_axis_non_utc_session_tz(spark, strategy, via):
+    """A timestamp axis under a non-UTC session timezone, through every
+    strategy: a point on a node and a point mid-cell read the grid's
+    values, and each point's own ``time`` comes back unchanged. The grid
+    spans the 2024-11-03 DST fall-back in New York, where 05:30 and 06:30
+    UTC are both 01:30 local: the two points read their own hours (1.5 and
+    2.5), not one fold's, and keep their own instants. A NULL time is out
+    of bounds and stays NULL."""
+    from datetime import datetime, timedelta, timezone
 
-    from kamodo_dask_spark.grid.interpolate import interpolate_points
+    from kamodo_dask_spark.grid.registry import KamodoSpark
 
+    t0 = datetime(2024, 11, 3, 4, tzinfo=timezone.utc)
+    # val = hours since 04:00 UTC + x, on nodes 04:00, 08:00 and 12:00
+    rows = [(t0 + timedelta(hours=h), x, h + x) for h in (0.0, 4.0, 8.0) for x in (0.0, 1.0)]
+    asked = {  # point_id: (hours since 04:00 or None, x, expected val)
+        0: (1.5, 0.0, 1.5),  # 05:30 UTC = 01:30 EDT
+        1: (2.5, 0.0, 2.5),  # 06:30 UTC = 01:30 EST
+        2: (2.0, 0.5, 2.5),  # mid-cell
+        3: (4.0, 1.0, 5.0),  # on a node
+        4: (6.0, 1.0, 7.0),  # the second key-axis interval
+        5: (None, 0.5, -99.0),  # NULL time
+    }
     prev = spark.conf.get("spark.sql.session.timeZone")
     spark.conf.set("spark.sql.session.timeZone", "America/New_York")
     try:
-        times = pd.to_datetime(["2024-03-01 00:00:00", "2024-03-01 01:00:00"])
-        rows = [
-            (t.to_pydatetime(), x, float(i) + x)
-            for i, t in enumerate(times)
-            for x in (0.0, 1.0)
-        ]
         grid = spark.createDataFrame(rows, "time timestamp, x double, val double")
         pts = spark.createDataFrame(
-            [(0, times[1].to_pydatetime(), 1.0)], "point_id long, time timestamp, x double"
+            [
+                (k, None if h is None else t0 + timedelta(hours=h), x)
+                for k, (h, x, _) in asked.items()
+            ],
+            "point_id long, time timestamp, x double",
         )
-        out = interpolate_points(
-            grid, pts, axes=("time", "x"), measures=["val"], fill_value=-99.0
-        ).collect()[0]["val"]
-        assert out == pytest.approx(2.0)  # node value, not fill/-shifted
+        reg = None
+        if via == "standalone":
+            out = interpolate_points(
+                grid, pts, axes=("time", "x"), measures=["val"], fill_value=-99.0,
+                strategy=strategy,
+            )
+        else:
+            reg = KamodoSpark(grid, axes=("time", "x"), fill_value=-99.0, strategy=strategy)
+            out = reg["val"](pts)
+        got = {
+            r["point_id"]: (r["us"], r["val"])
+            for r in out.select("point_id", F.unix_micros("time").alias("us"), "val").collect()
+        }
+        if reg is not None:
+            reg.release()
     finally:
         spark.conf.set("spark.sql.session.timeZone", prev)
+    t0_us = int(t0.timestamp()) * 10**6
+    assert got == {
+        k: (None if h is None else t0_us + int(h * 3600) * 10**6, pytest.approx(want))
+        for k, (h, _, want) in asked.items()
+    }
 
 
 def test_gridded_eval_accepts_datetime_coords(spark):
@@ -560,41 +589,24 @@ def test_grid_node_missing_from_axis_arrays_fills_its_cells(spark):
         }
         assert got == {0: pytest.approx(1.5), 1: -7.0, 2: -7.0}, strategy
 
-
-def test_block_strategy_timestamp_key_axis_non_utc_session_tz(spark):
-    """A timestamp key axis under a non-UTC session timezone: the block
-    path casts the point axes to epoch seconds Spark-side, so a point
-    between two nodes and a point on a node read the grid's values, and
-    the point's own timestamp column comes back unchanged."""
-    import pandas as pd
-
-    prev = spark.conf.get("spark.sql.session.timeZone")
-    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
-    try:
-        times = pd.date_range("2024-03-01 00:00:00", periods=4, freq="h")
-        rows = [
-            (t.to_pydatetime(), x, float(i) + x)
-            for i, t in enumerate(times)
-            for x in (0.0, 1.0)
-        ]
-        grid = spark.createDataFrame(rows, "time timestamp, x double, val double")
-        asked = {
-            0: ((times[1] + pd.Timedelta(minutes=30)).to_pydatetime(), 0.5),
-            1: (times[2].to_pydatetime(), 1.0),
+    # a node the arrays list (x1=2) that the grid lacks entirely: the slab
+    # is not dense against the arrays, so broadcast refuses it and "auto"
+    # answers through the corner join rather than blend nodes 1 and 3
+    holed = grid.where("x1 != 2.0")
+    arrays = {"x1": np.array([0.0, 1.0, 2.0, 3.0]), "x2": np.array([0.0, 1.0])}
+    for strategy in ("auto", "corner"):
+        got = {
+            r["point_id"]: r["val"]
+            for r in interpolate_points(
+                holed, pts, axes, ["val"], fill_value=-7.0,
+                axis_arrays=arrays, strategy=strategy,
+            ).collect()
         }
-        pts = spark.createDataFrame(
-            [(k, t, x) for k, (t, x) in asked.items()],
-            "point_id long, time timestamp, x double",
+        assert got == {0: pytest.approx(1.5), 1: -7.0, 2: -7.0}, strategy
+    with pytest.raises(ValueError, match="not dense"):
+        interpolate_points(
+            holed, pts, axes, ["val"], axis_arrays=arrays, strategy="broadcast"
         )
-        out = interpolate_points(
-            grid, pts, axes=("time", "x"), measures=["val"], fill_value=-99.0,
-            strategy="block",
-        ).collect()
-        got = {r["point_id"]: (r["time"], r["val"]) for r in out}
-        assert got[0] == (asked[0][0], pytest.approx(2.0))
-        assert got[1] == (asked[1][0], pytest.approx(3.0))
-    finally:
-        spark.conf.set("spark.sql.session.timeZone", prev)
 
 
 def test_block_strategy_null_and_out_of_range_coordinates(spark):
